@@ -285,14 +285,8 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "900").toDouble
     require(budget > 0, s"SPARK_GRAFT_BENCH_BUDGET_S must be positive, got $budget")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = LocalSession.builder(cpus)
       .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // the JVM-wide generated-class cache defaults to 100 entries; a
       // 204-query catalog churns it completely, so the sf0.001 warmup's
       // compiled classes are evicted long before the timed pass reaches

@@ -136,15 +136,8 @@ object ConcurrentStress {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nThreads = args.lift(1).map(_.toInt).getOrElse(4)
     val rounds = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-concurrent-stress")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .appName("graft-concurrent-stress").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: measure the banded exact near-dup join
   * (`VectorOps.nearDupPairsBanded`) across a cosine-threshold sweep on a
@@ -19,15 +18,8 @@ object NearDupSweep {
     val dir = args(0)
     val taus = if (args.length > 1) args(1).split(",").map(_.trim.toDouble).toSeq
                else Seq(0.45, 0.60, 0.75, 0.95)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-neardup-sweep")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .appName("graft-neardup-sweep").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // codegen warmup on a LIMIT'd slice of the user-supplied fixture so
     // the sweep measures steady-state execution, not Janino compilation

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan hygiene audit: for every registered query, inspect the executed
@@ -95,14 +94,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_PLANS_OUT", "PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder("8").appName("graft-plan-audit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // dev-loop subset (mirrors Verify/Bench): SPARK_GRAFT_ONLY=qA,qB

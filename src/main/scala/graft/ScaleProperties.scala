@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Asserted scale-property audit for the banded/bucketed near-dup family
@@ -82,15 +82,8 @@ object ScaleProperties {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf10")
     val outPath = args.lift(1).getOrElse("SCALEPROPS_sf10.md")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-properties")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .appName("graft-scale-properties").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.vector.VectorOps
 

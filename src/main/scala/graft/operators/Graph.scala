@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanShim
 
 /** Cluster formation over candidate pairs — the step every dedup family
   * here stops short of: q24/q25/q62/q69 emit near-dup PAIRS, but a
@@ -31,14 +32,14 @@ object Graph {
     // no bigger than the edge list, so its measured row count — not the
     // session's core count — decides the loop's shuffle partitioning.
     val e0 = edges.select(col("src"), col("dst")).persist()
-    val m = e0.count()
-    val p = LoopConf.sizedPartitions(m, 2000000L) // ~16-byte pairs → ≲32 MB
-    val out = LoopConf.withLoopConf(spark, p) {
+    var e: DataFrame = null
+    try {
+    val p = LoopConf.sizedPartitions(e0.count(), 2000000L) // ~16-byte pairs → ≲32 MB
     // co-partition the edge list on the join key ONCE: every round's
     // join then exchanges only the label side — at a billion edges that
     // is the difference between shuffling the graph per round and
     // shuffling per-vertex labels per round
-    val e = e0.repartition(col("dst")).persist()
+    e = LoopConf.scoped(e0, p).repartition(col("dst")).persist()
     // lazy checkpoints throughout the loop: the per-round convergence
     // count is the materializing action, so each round is ONE job, not
     // a materialization pass plus the count.
@@ -94,17 +95,19 @@ object Graph {
       labels = next
       i += 1
     }
-    e.unpersist()
     // a deep-chain graph (diameter > maxIter) must fail LOUDLY here —
     // returning unconverged labels would surface downstream as a
     // baffling oracle mismatch against the exact transitive closure
     require(converged,
       s"connectedComponents did not converge in $maxIter rounds " +
         s"(label sum still decreasing); raise maxIter for deep graphs")
-    labels
+    // the labels are checkpoint-backed (the last sum materialized them),
+    // so rebinding them to the caller replans nothing
+    PlanShim.ofRows(spark, PlanShim.analyzed(labels))
+    } finally {
+      if (e != null) e.unpersist()
+      e0.unpersist()
     }
-    e0.unpersist()
-    out
   }
 
   /** Boilerplate-cluster dedup groups: documents are linked when they
@@ -205,13 +208,13 @@ object Graph {
     // loop's shuffles (round-16, guide §2 — see LoopConf).
     val spark = edges.sparkSession
     val e0 = edges.select(col("src"), col("dst")).persist()
-    val m = e0.count()
-    val p = LoopConf.sizedPartitions(m, 2000000L)
-    val (out, deg, eDeg) = LoopConf.withLoopConf(spark, p) {
-    val deg = e0.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
+    var deg, eDeg: DataFrame = null
+    try {
+    val e = LoopConf.scoped(e0, LoopConf.sizedPartitions(e0.count(), 2000000L))
+    deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
       .persist()
     val n = deg.count()
-    val eDeg = e0
+    eDeg = e
       .join(deg.withColumnRenamed("v", "src"), "src")
       .repartition(col("src")).persist()
     var ranks = deg.select(col("v"), lit(1.0 / n).as("pr"))
@@ -237,12 +240,13 @@ object Graph {
     }
     // materialize the (one row per ranked vertex) result BEFORE
     // dropping the caches — a lazy return would silently re-derive the
-    // whole edge plan when the caller finally acts on it (and before the
-    // loop conf restores: the checkpoint is the loop's last sized job)
-    (ranks.join(deg, "v").localCheckpoint(), deg, eDeg)
+    // whole edge plan when the caller finally acts on it, and would run
+    // the rounds at the caller's conf: the rebound frame plans there
+    val out = ranks.join(deg, "v").localCheckpoint()
+    PlanShim.ofRows(spark, PlanShim.analyzed(out))
+    } finally {
+      Seq(eDeg, deg, e0).filter(_ != null).foreach(_.unpersist())
     }
-    eDeg.unpersist(); deg.unpersist(); e0.unpersist()
-    out
   }
 
   /** Top-20 authorities of the shared-line graph after 3 rounds —
@@ -348,16 +352,15 @@ object Graph {
     // distinct a<b pairs unioned with their reversals) pass
     // assumeSymmetric = true and skip that full-edge exchange — the
     // defense stays the default for everyone else (round-15, guide §2.4).
-    val e = (if (assumeSymmetric) edges.select(col("src"), col("dst"))
-             else symmetrized(edges)).persist()
+    val e0 = (if (assumeSymmetric) edges.select(col("src"), col("dst"))
+              else symmetrized(edges)).persist()
+    try {
     // size every downstream exchange from the measured edge count
     // (round-16, guide §2 — see LoopConf): the wedge self-join AMPLIFIES
     // rows (Σ outdeg² ≤ O(m^1.5)), so triangles divide by a 4× smaller
     // rows-per-partition than the label loops. The count reads the cache
     // the first action would have materialized anyway.
-    val spark = edges.sparkSession
-    val p = LoopConf.sizedPartitions(e.count(), 500000L)
-    LoopConf.withLoopConf(spark, p) {
+    val e = LoopConf.scoped(e0, LoopConf.sizedPartitions(e0.count(), 500000L))
     val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
     // one row per undirected edge, oriented by (degree, id); src<dst
     // already, so the id tie-break keeps src first
@@ -375,7 +378,7 @@ object Graph {
     val od = o.join(deg.select(col("v").as("w"), col("d").as("dw")), "w")
       .select(col("u"), col("w"), col("dw"))
       .localCheckpoint(true)
-    e.unpersist()
+    e0.unpersist()
     // wedges (y, z) out of each tail u, y before z in the (deg, id)
     // order so the closing edge is oriented y→z
     val wedges = od.select(col("u"), col("w").as("y"), col("dw").as("dy"))
@@ -385,13 +388,14 @@ object Graph {
       .join(od.select(col("u").as("y"), col("w").as("z")), Seq("y", "z"))
       .select(col("u").as("x"), col("y"), col("z"))
     // EAGER checkpoint: the wedge + closing joins must execute under the
-    // sized loop conf (a lazy return would replan them at the session
-    // defaults when the caller finally acts); the materialized result is
-    // one small (v, count) row per triangle vertex
-    tri.select(explode(array(col("x"), col("y"), col("z"))).as("v"))
+    // sized loop conf — the caller plans the rebound result at its own
+    // conf, so a lazy return would run them at the session defaults; the
+    // materialized result is one small (v, count) row per triangle vertex
+    val out = tri.select(explode(array(col("x"), col("y"), col("z"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("n_triangles"))
       .localCheckpoint(true)
-    }
+    PlanShim.ofRows(edges.sparkSession, PlanShim.analyzed(out))
+    } finally e0.unpersist()
   }
 
   /** q173: triangle counts of the q104 shared-line dup graph. */
@@ -445,14 +449,12 @@ object Graph {
     // list is symmetric + distinct by construction skip the defensive
     // symmetrize exchange (the checkpoint still materializes the list
     // once for the peel loop)
-    val spark = edges.sparkSession
-    var e = (if (assumeSymmetric) edges.select(col("src"), col("dst"))
-             else symmetrized(edges)).localCheckpoint(true)
-    var nEdges = e.count()
+    val e0 = (if (assumeSymmetric) edges.select(col("src"), col("dst"))
+              else symmetrized(edges)).localCheckpoint(true)
+    var nEdges = e0.count()
     // peel rounds only ever SHRINK the list, so the initial count sizes
     // every round's exchanges (round-16, guide §2 — see LoopConf)
-    val p = LoopConf.sizedPartitions(nEdges, 2000000L)
-    LoopConf.withLoopConf(spark, p) {
+    var e = LoopConf.scoped(e0, LoopConf.sizedPartitions(nEdges, 2000000L))
     var converged = false
     var it = 0
     while (!converged) {
@@ -474,11 +476,12 @@ object Graph {
       nEdges = n2
     }
     // the final per-vertex degree agg is sized by the loop conf too —
-    // EAGERLY materialized so the caller's action cannot replan it at
-    // the session's defaults against the checkpoint-backed core list
-    e.groupBy(col("src").as("v")).agg(count(lit(1)).as("core_deg"))
+    // EAGERLY materialized because the caller plans the rebound result at
+    // its own conf, and would otherwise rerun the agg at the session's
+    // defaults against the checkpoint-backed core list
+    val out = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("core_deg"))
       .localCheckpoint(true)
-    }
+    PlanShim.ofRows(edges.sparkSession, PlanShim.analyzed(out))
   }
 
   /** q180: 3-core of the q104 shared-line dup graph. */

@@ -1,13 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.PlanShim
 
 /** Scale-adaptive shuffle sizing for ITERATIVE operator loops (round-15
   * verdict item 3, guide §2: partition counts should follow data size,
   * not session topology).
   *
-  * Why the loops need it (measured round 16, R16Profile at sf0.1 on
-  * local[32]): every CC/pageRank/kCore/BPE round runs jobs over frames of
+  * Why the loops need it (measured round 16 at sf0.1 on local[32]):
+  * every CC/pageRank/kCore/BPE round runs jobs over frames of
   * ~10³-10⁵ rows, but each round's exchanges inherit
   * `spark.sql.shuffle.partitions` (= core count in the bench session) and
   * AQE materializes EVERY exchange as its own query-stage job —
@@ -20,9 +21,10 @@ import org.apache.spark.sql.SparkSession
   *
   * The remedy is the guide's: derive the loop's partition count from the
   * MEASURED row count of the loop frame (the operators all materialize it
-  * anyway — persist + count or localCheckpoint + count), and scope it
-  * with set-then-restore exactly like the established q70/q106 streaming
-  * state sizing. When the sized count is at or below the session's core
+  * anyway — persist + count or localCheckpoint + count), and run the loop
+  * on that frame rebound into a private clone of its session that carries
+  * the sized conf (`scoped`), so the caller's session conf is never
+  * written. When the sized count is at or below the session's core
   * count, the loop also runs with AQE off: at that size AQE cannot
   * improve any plan (there is nothing to coalesce below 1 partition and
   * joins this small broadcast anyway via static estimates), while its
@@ -43,25 +45,17 @@ object LoopConf {
     math.max(1L, math.min((rows + rowsPerPartition - 1) / rowsPerPartition, 65536L)).toInt
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions = p`; additionally
-    * with AQE off when p is within the session's core count (the
-    * tiny-loop regime where AQE is pure per-exchange job overhead).
-    * Set-then-restore, like the q70/q106 streaming state sizing. The
-    * caller must materialize everything it returns INSIDE the scope
-    * (persist+count / localCheckpoint) — a lazy frame planned after the
-    * restore would silently use the session defaults again.
+  /** The loop's input frame rebound into a child session with
+    * `spark.sql.shuffle.partitions = p`, and with AQE off when p is within
+    * the session's core count (the tiny-loop regime where AQE is pure
+    * per-exchange job overhead). Every frame the loop derives from it
+    * plans at that conf; see `PlanShim.withConfs`.
     */
-  def withLoopConf[T](spark: SparkSession, p: Int)(body: => T): T = {
-    val conf = spark.conf
-    val prevParts = conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.shuffle.partitions", p.toString)
-    if (p <= spark.sparkContext.defaultParallelism)
-      conf.set("spark.sql.adaptive.enabled", "false")
-    try body
-    finally {
-      conf.set("spark.sql.shuffle.partitions", prevParts)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+  def scoped(df: DataFrame, p: Int): DataFrame = {
+    val aqeOff =
+      if (p <= df.sparkSession.sparkContext.defaultParallelism)
+        Seq("spark.sql.adaptive.enabled" -> "false")
+      else Nil
+    PlanShim.withConfs(df, ("spark.sql.shuffle.partitions" -> p.toString) +: aqeOff: _*)
   }
 }

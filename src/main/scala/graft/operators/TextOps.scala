@@ -501,11 +501,10 @@ object TextOps {
     // vocab sizes to hundreds of partitions through the same arithmetic.
     val nVocab = words0.count()
     val p = LoopConf.sizedPartitions(nVocab, 250000L)
-    LoopConf.withLoopConf(spark, p) {
     // coalesce is narrow — the lazy re-checkpoint lands at p partitions
     // with the first argmax job, and every later round STAYS at p (the
     // merge select is narrow, the pair groupBy exchanges at the loop conf)
-    var words = words0.coalesce(p).localCheckpoint(false)
+    var words = LoopConf.scoped(words0, p).coalesce(p).localCheckpoint(false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 0
     var done = false
@@ -536,9 +535,9 @@ object TextOps {
         step += 1
       }
     }
+    // built on the caller's session: the merge table is a local relation
     merges.toSeq.toDF("step", "left", "right", "pair_count")
       .orderBy("step")
-    }
   }
 
   def q112BpeTrain(spark: SparkSession, dir: String): DataFrame =

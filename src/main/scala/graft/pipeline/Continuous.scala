@@ -32,13 +32,7 @@ object Continuous {
       .join(docs.select(col("doc_id").as("doc_a"), col("text")), "doc_a")
       .select(col("doc_a").as("query_id"), col("text").as("query_text"),
         col("doc_b").as("expected_doc"))
-
-    val hits = Retrieval.retrieve(
-        evalSet.select(col("query_id"), col("query_text")), index, 10)
-      .join(evalSet.select(col("query_id"), col("expected_doc")), "query_id")
-      .groupBy("query_id")
-      .agg(max(when(col("doc_id") === col("expected_doc"), 1).otherwise(0)).as("hit"))
-    val recall = hits.agg(avg("hit")).head().getDouble(0)
+    val recall = Retrieval.recallAtK(index, evalSet, 10)
 
     // 3. the gate
     if (recall < gate)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graftshim.PlanShim
 
 /** Opt-in optimizer rule: rewrite exact `count(DISTINCT x)` to
   * HyperLogLog++ (`approx_count_distinct`, default 5% relative SD).
@@ -23,7 +24,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * read at OPTIMIZATION time, so it applies to every query that
   * COMPILES on the session while set — including other threads'. Opt
   * in on a session whose whole workload accepts the relaxation; for a
-  * scoped opt-in, use a dedicated `spark.newSession()` (shared
+  * scoped opt-in, plan on a child session (`PlanShim.withConfs`: shared
   * SparkContext and cache, isolated conf), as q157 does.
   *
   * Scope guard: only a single-child `Count(DISTINCT x)` rewrites; the
@@ -67,10 +68,15 @@ case class ApproxCountDistinctRule(spark: SparkSession) extends Rule[LogicalPlan
 object ApproxDistinct {
   val Flag = "graft.approxCountDistinct"
 
-  /** Idempotently add the rule to an already-built session. */
+  /** Idempotently add the rule to an already-built session. A cloned
+    * session inherits its parent's rule, which reads the PARENT's flag,
+    * so only a rule bound to this session counts as installed.
+    */
   def install(spark: SparkSession): Unit = {
-    val have = spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[ApproxCountDistinctRule])
+    val have = spark.experimental.extraOptimizations.exists {
+      case r: ApproxCountDistinctRule => r.spark eq spark
+      case _ => false
+    }
     if (!have)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ ApproxCountDistinctRule(spark)
@@ -80,34 +86,25 @@ object ApproxDistinct {
     * `count(DISTINCT ...)`, executed under the opt-in rule — the test
     * that the relaxation reaches real query text, not just the spec.
     *
-    * The flag is scoped set-then-restored, and the query EXECUTES
-    * inside the scope with the result returned as a local relation:
-    * merely forcing `executedPlan` in scope is not enough, because the
-    * harness's later actions (Bench's `.count()`, Verify's
-    * `repartition(1).write`) build FRESH QueryExecutions after the
-    * restore and would silently re-plan the exact aggregate — the
-    * registered query would then never exercise the rule it exists to
-    * prove. The collect is bounded by the event-type vocabulary
-    * (dashboard-sized by construction).
+    * The flag is set on a PRIVATE CHILD SESSION, never on the caller's
+    * (round-10 stress finding): it is read at OPTIMIZATION time, so on
+    * the caller's session it rewrites any exact count(DISTINCT)
+    * compiling CONCURRENTLY — q143's arm_size came back as the HLL
+    * estimate (83 vs exactly 79) in the 4-thread catalog stress. The
+    * query EXECUTES in the child and its
+    * result returns as a local relation: a frame rebound to the caller
+    * would be re-planned there — by the harness's later actions
+    * (Bench's `.count()`, Verify's `repartition(1).write`) — without
+    * the rule it exists to prove. The collect is bounded by the
+    * event-type vocabulary (dashboard-sized by construction).
     */
   def q157NdvAutoApprox(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    // PRIVATE CHILD SESSION, not set-then-restore on the caller's
-    // (round-10 stress finding): the flag is read at OPTIMIZATION time,
-    // so with the old pattern any query compiling CONCURRENTLY on the
-    // same session inside the window had its exact count(DISTINCT)
-    // silently rewritten to the sketch — q143's arm_size came back as
-    // the HLL estimate (83 vs exactly 79) in the 4-thread catalog
-    // stress. newSession() shares the SparkContext and cached data but
-    // isolates SQL conf and experimental rules, which is precisely the
-    // documented scope of the opt-in: a session that opted in. Nothing
-    // to restore; the child is discarded.
-    val s = spark.newSession()
-    install(s)
-    s.conf.set(Flag, "true")
+    val events = PlanShim.withConfs(graft.Tables.events(spark, dir), Flag -> "true")
+    install(events.sparkSession)
     // ONE distinct aggregate by design: the rule's scope guard leaves
     // multi-group aggregates exact (see ApproxCountDistinctRule)
-    val df = graft.Tables.events(s, dir)
+    val df = events
       .groupBy("event_type")
       .agg(countDistinct("user_id").as("ndv_users"),
         count(lit(1)).as("n_rows"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile, Percentile}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graftshim.PlanShim
 
 /** Opt-in optimizer rule: rewrite exact `percentile(x, p)` (and the
   * forms the analyzer lowers to it — `median`, `percentile_cont`) to
@@ -28,8 +29,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * percentiles ⇒ same number. SCOPE CAVEAT (shared with
   * [[ApproxCountDistinctRule]]): the flag is read at optimization time
   * and applies to every query COMPILING on the session while set —
-  * other threads' included; scope a targeted opt-in to a dedicated
-  * `spark.newSession()`, as q159 does.
+  * other threads' included; scope a targeted opt-in to a child session
+  * (`PlanShim.withConfs`), as q159 does.
   *
   * Exact-stays-exact boundaries (each spec-pinned):
   *  - flag unset/false — no rewrite anywhere;
@@ -88,19 +89,25 @@ case class ApproxPercentileRule(spark: SparkSession) extends Rule[LogicalPlan] {
 object ApproxPercentile {
   val Flag = "graft.approxPercentile"
 
-  /** Idempotently add the rule to an already-built session. */
+  /** Idempotently add the rule to an already-built session; a rule a
+    * cloned session inherited from its parent does not count (see
+    * `ApproxDistinct.install`).
+    */
   def install(spark: SparkSession): Unit = {
-    val have = spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[ApproxPercentileRule])
+    val have = spark.experimental.extraOptimizations.exists {
+      case r: ApproxPercentileRule => r.spark eq spark
+      case _ => false
+    }
     if (!have)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ ApproxPercentileRule(spark)
   }
 
   /** Registered form (q159): the latency-dashboard query written with
-    * plain `percentile(...)`, executed under the opt-in rule — q157's
-    * execute-inside-the-flag-scope discipline (a fresh QueryExecution
-    * built by the harness after restore would silently re-plan exact).
+    * plain `percentile(...)`, executed under the opt-in rule in a
+    * private child session — q157's discipline (the flag never reaches
+    * the caller's session, and the result returns as a local relation
+    * because a frame the caller re-plans would silently run exact).
     * The collect is bounded by the event-type vocabulary.
     *
     * Pin determinism: at the driver's sf0.01 gate every event-type
@@ -110,15 +117,9 @@ object ApproxPercentile {
     */
   def q159PercentileAutoApprox(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    // private child session — same round-10 concurrency fix as q157:
-    // the session-conf flag must never be visible to queries compiling
-    // concurrently on the caller's session (an exact percentile in
-    // another thread would silently become a GK sketch inside the old
-    // set-then-restore window)
-    val s = spark.newSession()
-    install(s)
-    s.conf.set(Flag, "true")
-    val df = graft.Tables.events(s, dir)
+    val events = PlanShim.withConfs(graft.Tables.events(spark, dir), Flag -> "true")
+    install(events.sparkSession)
+    val df = events
       .groupBy("event_type")
       .agg(expr("percentile(value, 0.5)").as("p50_value"),
         expr("percentile(value, 0.95)").as("p95_value"),

@@ -106,12 +106,13 @@ object Retrieval {
       .filter(col("run_tokens") <= budget)
   }
 
-  /** recall@k over an eval set of (query_id, query_text, expected_doc):
-    * mirror of eval_snapshot.py:91-108 with the deterministic embedder.
+  /** recall@k of a built passage index over an eval set of (query_id,
+    * query_text, expected_doc): mirror of eval_snapshot.py:91-108 with
+    * the deterministic embedder, which must be the one the index was
+    * built with.
     */
-  def recallAtK(spark: SparkSession, dir: String, evalSet: DataFrame,
+  def recallAtK(index: DataFrame, evalSet: DataFrame,
                 k: Int = 10, embedder: Embedder = Embedder.default): Double = {
-    val index = buildIndex(spark, dir, embedder = embedder)
     val hits = retrieve(
       evalSet.select(col("query_id"), col("query_text")), index, k,
       embedder = embedder)

@@ -4,6 +4,7 @@ import graft.functions.DotProduct
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanShim
 
 /** Vector similarity operators (SURVEY §2.6/§2.10): cosine scoring, exact
   * brute-force top-k, IVF-style cluster-pruned ANN, recall@k, threshold
@@ -462,7 +463,6 @@ object VectorOps {
     */
   def kmeansTrain(vecs: DataFrame, idCol: String, vecCol: String,
                   k: Int, iters: Int): Array[(Int, Vector[Double])] = {
-    val v = kmeansProj(vecs, idCol, vecCol)
     // Argmin as ONE closure-capturing UDF, not a least() tree over k
     // typedLit centroid arrays: the literal form re-analyzes and
     // re-Janino-compiles a ~k×dim-literal expression EVERY round
@@ -487,11 +487,10 @@ object VectorOps {
       bestAssign(spark, cRows)
     // the recenter aggregation's output is bounded by k×dim rows
     // (≤3072 here) — 32 shuffle partitions on a bounded agg is pure
-    // task overhead per round (q70's state-partition rule, batch form);
-    // set-then-restore, as a real deployment would configure the job
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    // task overhead per round (q70's state-partition rule, batch form),
+    // so the rounds plan in a child session with 8
+    val v = PlanShim.withConfs(kmeansProj(vecs, idCol, vecCol),
+      "spark.sql.shuffle.partitions" -> "8")
     var cent: Array[(Int, Vector[Double])] =
       v.orderBy("id").limit(k).select(col("vec")).collect()
         .map(_.getAs[Seq[Double]]("vec").toVector).zipWithIndex
@@ -510,7 +509,6 @@ object VectorOps {
         .sortBy(_._1)
     }
     cent
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   /** Label a vector table under an already-trained centroid array (the

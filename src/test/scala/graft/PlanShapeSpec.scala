@@ -119,7 +119,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // pinned, not inherited (round-16): a skew SPLIT needs >1 shuffle
       // partition to define a median, and the session value at this
       // point is whatever the previous suite left — ConcurrentStress's
-      // racing set-then-restore operators (q70/q106/LoopConf) can
+      // racing set-then-restore streaming queries (q70/q106) can
       // legitimately leave a transient here (benign for results, fatal
       // for this shape assertion)
       "spark.sql.shuffle.partitions" -> "4")

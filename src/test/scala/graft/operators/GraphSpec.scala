@@ -52,10 +52,15 @@ class GraphSpec extends SparkSpec {
     // baffling oracle mismatch downstream
     val chain = (0L until 999L).map(i => (i, i + 1))
     val sym = chain.flatMap(p => Seq(p, p.swap))
+    // the error path must also release the edge caches it persisted
+    spark.catalog.clearCache()
     val ex = intercept[IllegalArgumentException] {
       Graph.connectedComponents(sym.toDF("src", "dst"), maxIter = 3)
     }
     assert(ex.getMessage.contains("did not converge"))
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.isEmpty, "connectedComponents left persisted frames behind on failure")
   }
 
   test("q105: keeper is the argmax-token member of its q104 cluster, token accounting conserves") {

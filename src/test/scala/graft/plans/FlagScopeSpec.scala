@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * concurrently on that session inside the window was silently
   * approximated (the 4-thread catalog stress caught q143's exact
   * countDistinct arm_size coming back as the HLL estimate: 83 vs 79).
-  * The fix scopes the flag to a private `newSession()`. This spec
+  * The fix scopes the flag to a private child session. This spec
   * asserts the contract directly: while q157 and q159 run in another
   * thread, the caller session's flags stay ABSENT and a concurrently
   * compiled exact aggregate stays exact, every time.

@@ -23,7 +23,7 @@ class RetrievalSpec extends SparkSpec {
     // the gate mirrors continuous.py:35-36 (recall@10 >= 0.80)
     val evalSet = nearDupEvalSet
     assert(evalSet.count() >= 10, "need a meaningful eval set")
-    val recall = Retrieval.recallAtK(spark, sfDir, evalSet, 10)
+    val recall = Retrieval.recallAtK(Retrieval.buildIndex(spark, sfDir), evalSet, 10)
     assert(recall >= 0.80, s"recall@10 = $recall")
   }
 
@@ -35,7 +35,8 @@ class RetrievalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val evalSet = nearDupEvalSet
     val linear = new graft.embed.LinearProjectionEmbedder()
-    val recallLinear = Retrieval.recallAtK(spark, sfDir, evalSet, 10, embedder = linear)
+    val recallLinear = Retrieval.recallAtK(
+      Retrieval.buildIndex(spark, sfDir, embedder = linear), evalSet, 10, embedder = linear)
     assert(recallLinear >= 0.80,
       s"recall@10 with the linear-projection embedder = $recallLinear")
     // both embedders produce the contract schema through the same plumbing
@@ -58,7 +59,8 @@ class RetrievalSpec extends SparkSpec {
     val evalSet = nearDupEvalSet
     for (e <- Seq(new graft.embed.HashingEmbedder(dim = 256),
                   new graft.embed.LinearProjectionEmbedder(dim = 256))) {
-      val recall = Retrieval.recallAtK(spark, sfDir, evalSet, 10, embedder = e)
+      val recall = Retrieval.recallAtK(
+        Retrieval.buildIndex(spark, sfDir, embedder = e), evalSet, 10, embedder = e)
       assert(recall >= 0.80,
         s"recall@10 at 256-d with ${e.getClass.getSimpleName} = $recall")
     }
