@@ -1233,19 +1233,6 @@ object Events {
     // sessionize) and the left-outer join DO need no-data batches to
     // emit their final windows / deferred nulls.
     spark.conf.set(noDataConf, "false")
-    // state-store backend knob (scale rehearsal): RocksDB keeps join
-    // state off-heap and snapshot-compacts instead of rewriting
-    // HDFS-backed state files per commit. MEASURED at the 100×
-    // rehearsal (sf10, 10M events, 32 state partitions): 199 s vs 44 s
-    // for the default store — per-partition RocksDB instances are pure
-    // overhead when state fits the heap of one JVM; the backend earns
-    // its keep on real clusters with per-partition state far beyond
-    // heap, which is why it stays a knob, not the default.
-    val provConf = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provConf)
-    if (sys.env.get("SPARK_GRAFT_Q70_ROCKSDB").contains("1"))
-      spark.conf.set(provConf,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val sq = rangeJoinedStream(spark, dir)
         .coalesce(1)
@@ -1258,10 +1245,6 @@ object Events {
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       spark.conf.set(noDataConf, prevNoData)
-      prevProv match {
-        case Some(v) => spark.conf.set(provConf, v)
-        case None    => spark.conf.unset(provConf)
-      }
     }
     // latest signup per purchase as max(struct(...)) — lexicographic
     // struct ordering reproduces ORDER BY s_tss DESC, signup_id DESC, and

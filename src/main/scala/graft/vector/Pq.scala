@@ -1,6 +1,8 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.VecKernels
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) — the billion-vector compression path the
@@ -27,15 +29,16 @@ import org.apache.spark.sql.functions._
   * contract (`MaxProbeRows` guard — the probe set is always the small
   * side; same bound as knnBrute's broadcast).
   *
-  * Determinism contract (cross-engine, hash-exact vs DuckDB):
-  * subspace codebooks come from `VectorOps.kmeansTrain` (6-dp-rounded
-  * argmin, 9-dp recenters, first-k-by-id seeds); LUT partials round to
-  * 7 dp AS LONGS so the m-way sum is integer-exact in any order; the
-  * final score is halfUp(sum/1e7, 4 dp) spelled floor(t/1000.0+0.5)/1e4
-  * on both engines. Recall on the near-isotropic synthetic fixture is
-  * honest-but-low (measured: ADC top-5 0.16 at sf0.001 / ≈0.22 at
-  * sf0.01; top-50 shortlist 0.64 / ≈0.72 of the exact cosine top-5 —
-  * PqSpec pins floors 0.14/0.60 on the sf0.001 fixture it runs on):
+  * Determinism contract (cross-engine, hash-exact vs DuckDB): every
+  * assignment — codebook rounds, encode, coarse cell, coarse probe
+  * ranking — is `graft.functions.VecKernels`' `nearest`/`sqDist6`, the
+  * argmin `VectorOps.kmeansTrain` uses (9-dp recenters, first-k-by-id
+  * seeds); LUT partials round to 7 dp AS LONGS (`fixed7`) so the m-way
+  * sum is integer-exact in any order; the final score is `adcScore`.
+  * Recall on the near-isotropic synthetic fixture is honest-but-low
+  * (measured: ADC top-5 0.16 at sf0.001 / ≈0.22 at sf0.01; top-50
+  * shortlist 0.64 / ≈0.72 of the exact cosine top-5 — PqSpec pins
+  * floors 0.14/0.60 on the sf0.001 fixture it runs on):
   * 32-bit codes on unclustered random vectors is the worst case; real
   * embedding corpora cluster, and the production pattern is PQ
   * shortlist → exact re-rank (q130's two-stage shape over codes
@@ -53,7 +56,7 @@ object Pq {
   /** Train `m` independent subspace codebooks with `ksub` centroids
     * each. Semantics: exactly m runs of the deterministic Lloyd loop
     * (`kmeansTrain`) on the sliced columns — same first-ksub-by-id
-    * seeds, same 6-dp-rounded argmin with (d2 asc, cl asc) ties, same
+    * seeds, same `VecKernels.nearest` argmin (through `encodeUdf`), same
     * 9-dp half-up recentered means (PqSpec asserts codebook equality
     * against m literal `kmeansTrain` calls). Execution: FUSED — one
     * corpus pass per Lloyd iteration computes ALL m subspace
@@ -88,42 +91,8 @@ object Pq {
         }
       }
     for (_ <- 1 to iters) {
-      val cls = books.map(_.map(_._1))
-      val cs = books.map(_.map(_._2.toArray))
-      val ccs = cs.map(_.map { c =>
-        var cc = 0.0; var i = 0
-        while (i < c.length) { cc += c(i) * c(i); i += 1 }
-        cc
-      })
-      val bc = spark.sparkContext.broadcast((cls, cs, ccs))
-      // per-row assignment for all m subspaces — the pqEncode loop
-      // (bit-identical to kmeansTrain's bestAssign: ascending dot fold,
-      // d2 = halfUp(vv − 2d + cc, 6), ties to the lowest cluster id)
-      val assign = udf { (vec: Array[Double]) =>
-        val (bCls, bCs, bCcs) = bc.value
-        val out = new Array[Int](bCs.length)
-        var s = 0
-        while (s < bCs.length) {
-          val off = s * dsub
-          var vv = 0.0
-          var i = 0
-          while (i < dsub) { val x = vec(off + i); vv += x * x; i += 1 }
-          var bd = Double.PositiveInfinity
-          var bcI = Int.MaxValue
-          var j = 0
-          while (j < bCs(s).length) {
-            val c = bCs(s)(j)
-            var d = 0.0; var i2 = 0
-            while (i2 < dsub) { d += vec(off + i2) * c(i2); i2 += 1 }
-            val d2 = math.floor((vv - 2.0 * d + bCcs(s)(j)) * 1e6 + 0.5) / 1e6
-            if (d2 < bd || (d2 == bd && bCls(s)(j) < bcI)) { bd = d2; bcI = bCls(s)(j) }
-            j += 1
-          }
-          out(s) = bcI
-          s += 1
-        }
-        out
-      }
+      // per-row assignment for all m subspaces under this round's books
+      val assign = encodeUdf(spark, PqModel(m, dsub, books))
       val cells = v.withColumn("a", assign(col("vec")))
         .select(col("a"), posexplode(col("vec")).as(Seq("pos", "x")))
         .select((col("pos") / lit(dsub)).cast("int").as("s"),
@@ -144,55 +113,32 @@ object Pq {
     PqModel(m, dsub, books)
   }
 
-  /** The per-row PQ assignment UDF both `pqEncode` and `ivfPqEncode`
-    * apply — per subspace, the 6-dp-rounded squared-L2 argmin over the
-    * codebook (ties → lowest cluster id), bit-identical to
-    * `kmeansTrain`'s assignment. The model ships as ONE SparkContext
-    * broadcast, not a closure payload.
+  /** The per-row PQ assignment UDF `pqTrain`'s rounds, `pqEncode` and
+    * `ivfPqEncode` apply: per subspace, `VecKernels.nearest` over that
+    * subspace's codebook — `kmeansTrain`'s assignment on the slice. The
+    * model ships as ONE SparkContext broadcast, not a closure payload.
     */
-  private def encodeUdf(spark: SparkSession,
-                        model: PqModel): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    // flatten to primitives for the tight loop: per subspace, the
-    // cluster ids, centroid rows, and centroid self-dots
+  private def encodeUdf(spark: SparkSession, model: PqModel): UserDefinedFunction = {
     val cls = model.books.map(_.map(_._1))
     val cs  = model.books.map(_.map(_._2.toArray))
-    val ccs = cs.map(_.map { c =>
-      var cc = 0.0; var i = 0
-      while (i < c.length) { cc += c(i) * c(i); i += 1 }
-      cc
-    })
     val dsub = model.dsub
-    val bc = spark.sparkContext.broadcast((cls, cs, ccs))
+    val bc = spark.sparkContext.broadcast((cls, cs, cs.map(VecKernels.selfDots)))
     udf { (vec: Array[Double]) =>
       val (bCls, bCs, bCcs) = bc.value
       val out = new Array[Int](bCs.length)
       var s = 0
       while (s < bCs.length) {
         val off = s * dsub
-        var vv = 0.0
-        var i = 0
-        while (i < dsub) { val x = vec(off + i); vv += x * x; i += 1 }
-        var bd = Double.PositiveInfinity
-        var bcI = Int.MaxValue
-        var j = 0
-        while (j < bCs(s).length) {
-          val c = bCs(s)(j)
-          var d = 0.0; var i2 = 0
-          while (i2 < dsub) { d += vec(off + i2) * c(i2); i2 += 1 }
-          val d2 = math.floor((vv - 2.0 * d + bCcs(s)(j)) * 1e6 + 0.5) / 1e6
-          if (d2 < bd || (d2 == bd && bCls(s)(j) < bcI)) { bd = d2; bcI = bCls(s)(j) }
-          j += 1
-        }
-        out(s) = bcI
+        val vv = VecKernels.dot(vec, off, vec, off, dsub)
+        out(s) = bCls(s)(VecKernels.nearest(vec, off, vv, bCls(s), bCs(s), bCcs(s)))
         s += 1
       }
       out
     }
   }
 
-  /** (id, codes array<int>) — per-subspace nearest-codebook-entry ids,
-    * argmin math identical to `kmeansTrain`'s assignment (6-dp-rounded
-    * squared L2, ties → lowest cluster id). One narrow projection.
+  /** (id, codes array<int>) — per-subspace nearest-codebook-entry ids
+    * (`encodeUdf`). One narrow projection.
     */
   def pqEncode(vecs: DataFrame, idCol: String, vecCol: String,
                model: PqModel): DataFrame = {
@@ -201,26 +147,17 @@ object Pq {
       enc(col(vecCol).cast("array<double>")).as("codes"))
   }
 
-  /** ADC top-k: (query_id, rank, neighbor_id, qscore) over an encoded
-    * corpus. LUT partial = floor(dot(q_sub, centroid)·1e7+0.5) as LONG
-    * (order-free integer sum across subspaces); qscore =
-    * floor(t/1000.0+0.5)/1e4. Ranks break ties on neighbor_id.
-    */
   /** Largest probe set pqTopK will collect() for LUT building — the ADC
     * contract says the query side is small; violating it should fail
     * loudly at the guard, not opaquely in the driver heap.
     */
   val MaxProbeRows = 100000
 
-  def pqTopK(queries: DataFrame, codes: DataFrame, qId: String,
-             vecCol: String, model: PqModel, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val dsub = model.dsub
-    require(model.books.nonEmpty && model.books.forall(_.nonEmpty),
-      "pqTopK: empty codebook — pqTrain produced no centroids for at " +
-        "least one subspace (k > distinct subvectors?)")
-    val ksub = model.books.map(_.map(_._1).max + 1).max
-    // bounded by the ADC contract: the probe set is the small side
+  /** The ADC probe side, collected as (qid, query vector) — bounded by
+    * the ADC contract (the probe set is the small side) at `MaxProbeRows`.
+    */
+  private def collectProbes(queries: DataFrame, qId: String, vecCol: String,
+                            op: String): Array[(Long, Array[Double])] = {
     val qRows = queries
       .select(col(qId).cast("long").as("qid"),
         col(vecCol).cast("array<double>").as("qv"))
@@ -228,48 +165,67 @@ object Pq {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     require(qRows.length <= MaxProbeRows,
-      s"pqTopK: probe set exceeds the bounded-broadcast contract " +
+      s"$op: probe set exceeds the bounded-broadcast contract " +
         s"($MaxProbeRows rows) — ADC queries must be the small side; " +
         "swap the sides or batch the probe set")
-    val luts: Map[Long, Array[Long]] = qRows.map { case (qid, qv) =>
-      val lut = new Array[Long](model.m * ksub)
-      var s = 0
-      while (s < model.m) {
-        val off = s * dsub
-        model.books(s).foreach { case (cl, cent) =>
-          var d = 0.0; var i = 0
-          while (i < dsub) { d += qv(off + i) * cent(i); i += 1 }
-          lut(s * ksub + cl) = math.floor(d * 1e7 + 0.5).toLong
-        }
-        s += 1
-      }
+    qRows
+  }
+
+  /** floor(x·10⁷ + 0.5) as LONG: LUT partials and IVF-PQ's q·c
+    * constants, so their sums are integer-exact in any order.
+    */
+  private def fixed7(x: Double): Long = math.floor(x * 1e7 + 0.5).toLong
+
+  /** Per-query ADC lookup tables: lut(s·ksub + cl) = fixed7(q_sub·centroid). */
+  private def buildLuts(qRows: Array[(Long, Array[Double])], pq: PqModel,
+                        ksub: Int): Map[Long, Array[Long]] = {
+    val cs = pq.books.map(_.map(_._2.toArray))
+    qRows.map { case (qid, qv) =>
+      val lut = new Array[Long](pq.m * ksub)
+      for (s <- 0 until pq.m; ((cl, _), c) <- pq.books(s).zip(cs(s)))
+        lut(s * ksub + cl) = fixed7(VecKernels.dot(qv, s * pq.dsub, c, 0, pq.dsub))
       qid -> lut
     }.toMap
-    val bc = spark.sparkContext.broadcast(luts)
-    val score = udf { (qid: Long, cds: Array[Int]) =>
+  }
+
+  /** The ADC score UDF over (query_id, qc, codes): t = qc + Σ_s
+    * lut(s, code_s), qscore = halfUp(t/1e7, 4) spelled
+    * floor(t/1000.0+0.5)/1e4 on both engines. The LUTs ship as one
+    * SparkContext broadcast.
+    */
+  private def adcScore(spark: SparkSession, qRows: Array[(Long, Array[Double])],
+                       pq: PqModel): UserDefinedFunction = {
+    val ksub = pq.books.map(_.map(_._1).max + 1).max
+    val bc = spark.sparkContext.broadcast(buildLuts(qRows, pq, ksub))
+    udf { (qid: Long, qc: Long, cds: Array[Int]) =>
       val lut = bc.value(qid)
-      var t = 0L
+      var t = qc
       var s = 0
       while (s < cds.length) { t += lut(s * ksub + cds(s)); s += 1 }
       math.floor(t / 1000.0 + 0.5) / 10000.0
     }
+  }
+
+  /** ADC top-k: (query_id, rank, neighbor_id, qscore) over an encoded
+    * corpus, scored by `adcScore` with qc = 0. Ranks break ties on
+    * neighbor_id.
+    */
+  def pqTopK(queries: DataFrame, codes: DataFrame, qId: String,
+             vecCol: String, model: PqModel, k: Int): DataFrame = {
+    val spark = queries.sparkSession
+    require(model.books.nonEmpty && model.books.forall(_.nonEmpty),
+      "pqTopK: empty codebook — pqTrain produced no centroids for at " +
+        "least one subspace (k > distinct subvectors?)")
+    val qRows = collectProbes(queries, qId, vecCol, "pqTopK")
+    val score = adcScore(spark, qRows, model)
     val qids = spark.createDataFrame(qRows.map(r => Tuple1(r._1)).toSeq)
       .toDF("query_id")
     // Bounded top-k (round-10 verdict item 3): the window form funnels
     // the ENTIRE scored corpus of each query through one reducer — at
-    // 10⁹ codes that is a single-task sort per query. The typed
-    // aggregator keeps ≤ k entries per partition (map-side partial
-    // agg), so only |queries|·k rows shuffle; ordering (score desc,
-    // id asc) is identical to the window form, same oracle.
-    codes.crossJoin(broadcast(qids))
+    // 10⁹ codes that is a single-task sort per query.
+    VectorOps.rankTopK(codes.crossJoin(broadcast(qids))
       .select(col("query_id"), col("id").cast("long").as("neighbor_id"),
-        score(col("query_id"), col("codes")).as("qscore"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col("qscore"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as("qscore"))
+        score(col("query_id"), lit(0L), col("codes")).as("qscore")), "qscore", k)
   }
 
   /** q172: PQ ADC top-5 over the embeddings table — m=4 subspaces of
@@ -382,48 +338,30 @@ object Pq {
   final case class IvfPqModel(coarse: Array[(Int, Vector[Double])],
                               pq: PqModel)
 
-  /** (id, cl, rvec) — each vector's nearest coarse centroid (6-dp
-    * squared-L2 argmin, ties → lowest cluster id, `kmeansTrain`'s
-    * exact discipline) and its RESIDUAL against that centroid. One
-    * narrow stateless projection; the coarse model ships as one
-    * SparkContext broadcast. Residual components are single IEEE
-    * subtractions of 9-dp-rounded centroid components from the
-    * float-sourced input doubles — bit-identical on any engine, so the
-    * downstream PQ chain stays hash-exact cross-engine.
+  /** (id, cl, rvec) — each vector's nearest coarse centroid
+    * (`VecKernels.nearest`, `kmeansTrain`'s assignment) and its
+    * RESIDUAL against that centroid. One narrow stateless projection;
+    * the coarse model ships as one SparkContext broadcast. Residual
+    * components are single IEEE subtractions of 9-dp-rounded centroid
+    * components from the float-sourced input doubles — bit-identical on
+    * any engine, so the downstream PQ chain stays hash-exact
+    * cross-engine.
     */
   def ivfPqResiduals(vecs: DataFrame, idCol: String, vecCol: String,
                      coarse: Array[(Int, Vector[Double])]): DataFrame = {
     val spark = vecs.sparkSession
     val cls = coarse.map(_._1)
     val cs = coarse.map(_._2.toArray)
-    val ccs = cs.map { c =>
-      var cc = 0.0; var i = 0
-      while (i < c.length) { cc += c(i) * c(i); i += 1 }
-      cc
-    }
-    val bc = spark.sparkContext.broadcast((cls, cs, ccs))
+    val bc = spark.sparkContext.broadcast((cls, cs, VecKernels.selfDots(cs)))
     val resid = udf { (vec: Array[Double]) =>
       val (bCls, bCs, bCcs) = bc.value
-      var vv = 0.0
-      var i = 0
-      while (i < vec.length) { vv += vec(i) * vec(i); i += 1 }
-      var bd = Double.PositiveInfinity
-      var bcI = Int.MaxValue
-      var bj = -1
-      var j = 0
-      while (j < bCs.length) {
-        val c = bCs(j)
-        var d = 0.0; var i2 = 0
-        while (i2 < c.length) { d += vec(i2) * c(i2); i2 += 1 }
-        val d2 = math.floor((vv - 2.0 * d + bCcs(j)) * 1e6 + 0.5) / 1e6
-        if (d2 < bd || (d2 == bd && bCls(j) < bcI)) { bd = d2; bcI = bCls(j); bj = j }
-        j += 1
-      }
-      val c = bCs(bj)
+      val vv = VecKernels.dot(vec, 0, vec, 0, vec.length)
+      val j = VecKernels.nearest(vec, 0, vv, bCls, bCs, bCcs)
+      val c = bCs(j)
       val rv = new Array[Double](vec.length)
       var k = 0
       while (k < vec.length) { rv(k) = vec(k) - c(k); k += 1 }
-      (bcI, rv)
+      (bCls(j), rv)
     }
     vecs.select(col(idCol).as("id"),
         resid(col(vecCol).cast("array<double>")).as("r"))
@@ -461,92 +399,44 @@ object Pq {
   }
 
   /** IVF-PQ ADC top-k: each query probes its `nProbe` nearest coarse
-    * cells (6-dp squared-L2 ascending, ties → lowest cl — the argmin
-    * ranking extended to rank-nProbe) and scores ONLY rows in those
-    * cells. Score decomposition: q·x ≈ q·c(cl) + q·decode(codes) =
-    * one per-(query,cell) constant + m LUT lookups, all integer-exact:
-    * qc = floor(q·c·1e7+0.5) and LUT partials floor(q_sub·cent·1e7+0.5)
-    * as LONGs, qscore = floor(t/1000+0.5)/1e4 — the LUT uses the FULL
-    * query subvectors (not residuals), which is what makes one LUT per
-    * query serve every probed cell. Scale: the probe pairs frame is
-    * |queries|·nProbe rows broadcast against the code table — with the
-    * code table partitioned by cl this is partition-pruned to the
-    * probed lists; top-k via the bounded aggregator so only
+    * cells (`VecKernels.sqDist6` ascending, ties → lowest cl — the
+    * argmin ranking extended to rank-nProbe) and scores ONLY rows in
+    * those cells. Score decomposition: q·x ≈ q·c(cl) + q·decode(codes)
+    * = one per-(query,cell) constant + m LUT lookups, all integer-exact:
+    * qc = fixed7(q·c) plus the LUT partials, scored by `adcScore` — the
+    * LUT uses the FULL query subvectors (not residuals), which is what
+    * makes one LUT per query serve every probed cell. Scale: the probe
+    * pairs frame is |queries|·nProbe rows broadcast against the code
+    * table — with the code table partitioned by cl this is
+    * partition-pruned to the probed lists; top-k via the bounded aggregator so only
     * |queries|·k rows shuffle. Query side bounded by `MaxProbeRows`.
     */
   def ivfPqTopK(queries: DataFrame, encoded: DataFrame, qId: String,
                 vecCol: String, model: IvfPqModel,
                 nProbe: Int, k: Int): DataFrame = {
     val spark = queries.sparkSession
-    val dsub = model.pq.dsub
-    val m = model.pq.m
     require(model.pq.books.nonEmpty && model.pq.books.forall(_.nonEmpty),
       "ivfPqTopK: empty residual codebook")
-    val ksub = model.pq.books.map(_.map(_._1).max + 1).max
-    val qRows = queries
-      .select(col(qId).cast("long").as("qid"),
-        col(vecCol).cast("array<double>").as("qv"))
-      .limit(MaxProbeRows + 1)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(qRows.length <= MaxProbeRows,
-      s"ivfPqTopK: probe set exceeds the bounded-broadcast contract " +
-        s"($MaxProbeRows rows) — swap the sides or batch the probe set")
+    val qRows = collectProbes(queries, qId, vecCol, "ivfPqTopK")
     val cCls = model.coarse.map(_._1)
     val cCs = model.coarse.map(_._2.toArray)
-    val cCcs = cCs.map { c =>
-      var cc = 0.0; var i = 0
-      while (i < c.length) { cc += c(i) * c(i); i += 1 }
-      cc
-    }
+    val cCcs = VecKernels.selfDots(cCs)
     // (query_id, cl, qc): the probed cells with their q·c constants
     val probePairs: Seq[(Long, Int, Long)] = qRows.toSeq.flatMap { case (qid, qv) =>
-      var vv = 0.0
-      var i = 0
-      while (i < qv.length) { vv += qv(i) * qv(i); i += 1 }
+      val vv = VecKernels.dot(qv, 0, qv, 0, qv.length)
       val scored = cCls.indices.map { j =>
-        val c = cCs(j)
-        var d = 0.0; var i2 = 0
-        while (i2 < c.length) { d += qv(i2) * c(i2); i2 += 1 }
-        val d2 = math.floor((vv - 2.0 * d + cCcs(j)) * 1e6 + 0.5) / 1e6
-        (d2, cCls(j), math.floor(d * 1e7 + 0.5).toLong)
+        val d = VecKernels.dot(qv, 0, cCs(j), 0, cCs(j).length)
+        (VecKernels.sqDist6(vv, d, cCcs(j)), cCls(j), fixed7(d))
       }
       scored.sortBy(t => (t._1, t._2)).take(nProbe)
         .map { case (_, cl, qc) => (qid, cl, qc) }
     }
-    val luts: Map[Long, Array[Long]] = qRows.map { case (qid, qv) =>
-      val lut = new Array[Long](m * ksub)
-      var s = 0
-      while (s < m) {
-        val off = s * dsub
-        model.pq.books(s).foreach { case (cl, cent) =>
-          var d = 0.0; var i = 0
-          while (i < dsub) { d += qv(off + i) * cent(i); i += 1 }
-          lut(s * ksub + cl) = math.floor(d * 1e7 + 0.5).toLong
-        }
-        s += 1
-      }
-      qid -> lut
-    }.toMap
-    val bc = spark.sparkContext.broadcast(luts)
-    val score = udf { (qid: Long, qc: Long, cds: Array[Int]) =>
-      val lut = bc.value(qid)
-      var t = qc
-      var s = 0
-      while (s < cds.length) { t += lut(s * ksub + cds(s)); s += 1 }
-      math.floor(t / 1000.0 + 0.5) / 10000.0
-    }
+    val score = adcScore(spark, qRows, model.pq)
     import spark.implicits._
     val probes = probePairs.toDF("query_id", "cl", "qc")
-    encoded.join(broadcast(probes), Seq("cl"))
+    VectorOps.rankTopK(encoded.join(broadcast(probes), Seq("cl"))
       .select(col("query_id"), col("id").cast("long").as("neighbor_id"),
-        score(col("query_id"), col("qc"), col("codes")).as("qscore"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col("qscore"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as("qscore"))
+        score(col("query_id"), col("qc"), col("codes")).as("qscore")), "qscore", k)
   }
 
   /** q183: IVF-PQ ADC top-5 over the embeddings table — 4 coarse cells

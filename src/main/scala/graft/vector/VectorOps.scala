@@ -1,6 +1,6 @@
 package graft.vector
 
-import graft.functions.DotProduct
+import graft.functions.{DotProduct, VecKernels}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,6 +50,21 @@ object VectorOps {
   def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
     when(na * nb === 0, lit(0.0))
       .otherwise(round(dot(a, b) / (na * nb), 4))
+
+  /** The bounded ranked tail of the top-k operators: per query_id, the k
+    * best rows by (scoreCol desc, neighbor_id asc) as (query_id, rank,
+    * neighbor_id, scoreCol). `TopKAggregator` keeps ≤ k map-side entries
+    * per (partition, query), so only |queries|·k rows shuffle — a
+    * row_number window would sort each query's whole scored corpus in
+    * one reducer.
+    */
+  private[vector] def rankTopK(scored: DataFrame, scoreCol: String, k: Int): DataFrame =
+    scored.groupBy("query_id")
+      .agg(graft.functions.TopKAggregator.topK(k)(
+        col(scoreCol), col("neighbor_id")).as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
+      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
+        col("s._2").as("neighbor_id"), col("s._1").as(scoreCol))
 
   /** Group-centroid cosine matrix — the corpus-level redundancy
     * datasheet: mean embedding per group (source, snapshot, shard …),
@@ -186,12 +201,10 @@ object VectorOps {
     * 1000-executor cluster schedules perfectly (measured at the 10x
     * rehearsal, 20k vectors: 72.7 s banded → 8.4 s blocked for
     * identical output — with ~100× the qualifying pairs of sf0.1, wall
-    * grew only 6.7×). Arithmetic is
-    * bit-identical to [[cosinePre]]: sequential float→double dot fold
-    * in element order, sqrt norms, BigDecimal.valueOf HALF_UP rounding
-    * to 4 dp (Spark's `round` on doubles), threshold on the rounded
-    * value. Zero-norm vectors score 0.0 and are pruned up front
-    * (threshold must be positive, as in the banded form).
+    * grew only 6.7×). Arithmetic is [[cosinePre]]'s through
+    * `VecKernels` (`dot` over the float blocks, `round4`), threshold on
+    * the rounded value. Zero-norm vectors score 0.0 and are pruned up
+    * front (threshold must be positive, as in the banded form).
     *
     * Scale boundary, stated honestly: blocking makes the quadratic
     * EFFICIENT, not sublinear — at 10⁶ vectors it is ~10¹² dots
@@ -272,13 +285,9 @@ object VectorOps {
         val sa = offA(i)
         var j = if (same) i + 1 else 0
         while (j < ib.length) {
-          val sb = offB(j)
-          val d = math.min(la(i), lb(j))
-          var s = 0.0
-          var k = 0
-          while (k < d) { s += fa(sa + k).toDouble * fb(sb + k).toDouble; k += 1 }
-          val raw = s / (na(i) * nb(j))
-          // the exact HALF_UP decimal rounding (BigDecimal.valueOf goes
+          val raw = VecKernels.dot(fa, sa, fb, offB(j), math.min(la(i), lb(j))) /
+            (na(i) * nb(j))
+          // round4's decimal HALF_UP rounding (BigDecimal.valueOf goes
           // through Double.toString) costs ~150 ns — paid on ALL ~N²/2
           // pairs it dominated the scan (36 s vs 6 s at the rehearsal
           // scale). Only values within the 4-dp rounding slack of the
@@ -287,8 +296,7 @@ object VectorOps {
           // of (sub-threshold) pairs; survivors still get the
           // bit-identical rounding before the real test.
           if (raw >= threshold - 1e-4 && ia(i) != ib(j)) {
-            val c = java.math.BigDecimal.valueOf(raw)
-              .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+            val c = VecKernels.round4(raw)
             if (c >= threshold) {
               out += (if (ia(i) < ib(j)) (ia(i), ib(j), c) else (ib(j), ia(i), c))
             }
@@ -314,17 +322,22 @@ object VectorOps {
     pairs.orderBy("id_a", "id_b")
   }
 
+  /** (cl, centroid): the element-wise mean vector per label — avg over
+    * the exploded (label, pos, value) cells, positions put back in order.
+    */
+  private def labelCentroids(vecs: DataFrame, label: Column, vecCol: String): DataFrame =
+    vecs.select(label.as("cl"), posexplode(col(vecCol)).as(Seq("pos", "v")))
+      .groupBy("cl", "pos").agg(avg("v").as("m"))
+      .groupBy("cl").agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+      .select(col("cl"), transform(col("pm"), x => x.getField("m")).as("centroid"))
+
   /** IVF assignment: each vector joins its `nProbe` nearest cluster
     * centroids (centroid = per-label mean, as in `knnIvf`). Returns
     * (id, vec, nv, cl) with one row per (vector, probed cluster).
     */
   def ivfAssign(vecs: DataFrame, idCol: String, vecCol: String,
                 labelCol: String, nProbe: Int): DataFrame = {
-    val centroids = vecs
-      .select(col(labelCol).as("cl"), posexplode(col(vecCol)).as(Seq("pos", "v")))
-      .groupBy("cl", "pos").agg(avg("v").as("m"))
-      .groupBy("cl").agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cl"), transform(col("pm"), x => x.getField("m")).as("centroid"))
+    val centroids = labelCentroids(vecs, col(labelCol), vecCol)
       .withColumn("ncent", l2Norm(col("centroid")))
     val v = vecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("nv", l2Norm(col("vec")))
@@ -346,12 +359,7 @@ object VectorOps {
     */
   def ivfCentroids(vecs: DataFrame, idCol: String, vecCol: String,
                    labelCol: String): Array[(Int, Array[Double])] =
-    vecs
-      .select(col(labelCol).cast("int").as("cl"),
-        posexplode(col(vecCol)).as(Seq("pos", "v")))
-      .groupBy("cl", "pos").agg(avg("v").as("m"))
-      .groupBy("cl").agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cl"), transform(col("pm"), x => x.getField("m")).as("centroid"))
+    labelCentroids(vecs, col(labelCol).cast("int"), vecCol)
       .collect()
       .map(r => (r.getAs[Int]("cl"), r.getAs[Seq[Double]]("centroid").toArray))
       .sortBy(_._1)
@@ -362,11 +370,9 @@ object VectorOps {
     * at sf0.1) with one tight-loop top-nProbe UDF and a posexplode.
     * Selection semantics are IDENTICAL to the window form: per vector,
     * the nProbe distinct clusters with highest 4-dp-ROUNDED cosine,
-    * ties broken by ascending cluster id; rounding is the proven
-    * `BigDecimal.valueOf → setScale(4, HALF_UP)` replica of Spark's
-    * `round` (see nearDupPairsBlocked), dot products fold sequentially
-    * ascending exactly like the codegen'd DotProduct, ncent = √(c·c) in
-    * the same fold order as l2Norm. IvfAssignDrivenSpec asserts
+    * ties broken by ascending cluster id; each score is
+    * `VecKernels.cosine4` over `VecKernels.dot`, with ncent = √(c·c)
+    * from `selfDots` (l2Norm's fold). IvfAssignDrivenSpec asserts
     * row-for-row equality against the window form on live fixtures.
     * Output schema matches ivfAssign: (id, vec, nv, cl:int).
     */
@@ -375,11 +381,7 @@ object VectorOps {
     val spark = vecs.sparkSession
     val cls = cent.map(_._1)
     val cs = cent.map(_._2)
-    val ncs = cs.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
+    val ncs = VecKernels.selfDots(cs).map(math.sqrt)
     val bc = spark.sparkContext.broadcast((cls, cs, ncs))
     val probes = udf { (vec: Array[Float], nv: Double) =>
       val (bCls, bCs, bNcs) = bc.value
@@ -388,14 +390,8 @@ object VectorOps {
       var j = 0
       while (j < k) {
         val c = bCs(j)
-        val d = math.min(vec.length, c.length)
-        var s = 0.0; var i = 0
-        while (i < d) { s += vec(i).toDouble * c(i); i += 1 }
-        val nn = nv * bNcs(j)
-        scores(j) =
-          if (nn == 0.0) 0.0
-          else java.math.BigDecimal.valueOf(s / nn)
-            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+        scores(j) = VecKernels.cosine4(
+          VecKernels.dot(vec, c, math.min(vec.length, c.length)), nv * bNcs(j))
         j += 1
       }
       // top-nProbe by (score desc, cl asc) — cls arrive ascending, so a
@@ -469,11 +465,9 @@ object VectorOps {
     // (fresh literals defeat the codegen cache), which at k=8, dim=384
     // made the whole query fixed-overhead-bound — 2.5 s at sf0.001 and
     // sf0.1 alike. The UDF's generated wrapper is identical across
-    // rounds (cache hit); its math is bit-identical to the expression
-    // form: dot products fold sequentially ascending exactly like the
-    // codegen'd DotProduct, d2 = vv - 2.0·dot + ||c||² in that
-    // association, halfUp's floor(x·10⁶+0.5)/10⁶ spelling, and the
-    // (d2 asc, cl asc) tie-break of the former least() over structs.
+    // rounds (cache hit); its math is the expression form's, through
+    // `VecKernels.nearest` (DotProduct's fold, halfUp's 6-dp spelling,
+    // the (d2 asc, cl asc) tie-break of the former least() over structs).
     // Array[Double] params deserialize to primitive arrays — no boxing.
     // Centroids live on the driver between rounds (k×dim doubles — at
     // the k=⌈√N⌉ regime ~5.5 MB at the 100× rehearsal, still trivially
@@ -525,35 +519,21 @@ object VectorOps {
       .select(col("id"), col("b.cl").as("cl"), col("b.d2").as("d2"))
   }
 
-  /** The argmin column shared by train and assign: nearest centroid by
-    * 6-dp-rounded squared L2 (ties → lowest cluster id), math documented
-    * at `kmeansTrain`. The centroid array ships via SparkContext
-    * broadcast; the UDF closure captures only the broadcast handle.
+  /** The argmin column shared by train and assign: `VecKernels.nearest`
+    * and the winner's `sqDist6`. The centroid array ships via
+    * SparkContext broadcast; the UDF closure captures only the
+    * broadcast handle.
     */
   private def bestAssign(spark: SparkSession,
                          cRows: Array[(Int, Vector[Double])]): Column = {
     val cls = cRows.map(_._1)
     val cs = cRows.map(_._2.toArray)
-    val ccs = cs.map { c =>
-      var cc = 0.0; var i = 0
-      while (i < c.length) { cc += c(i) * c(i); i += 1 }
-      cc
-    }
-    val bc = spark.sparkContext.broadcast((cls, cs, ccs))
+    val bc = spark.sparkContext.broadcast((cls, cs, VecKernels.selfDots(cs)))
     val f = udf { (vec: Array[Double], vv: Double) =>
       val (bCls, bCs, bCcs) = bc.value
-      var bd = Double.PositiveInfinity
-      var bcI = Int.MaxValue
-      var j = 0
-      while (j < bCs.length) {
-        val c = bCs(j)
-        var d = 0.0; var i = 0
-        while (i < c.length) { d += vec(i) * c(i); i += 1 }
-        val d2 = math.floor((vv - 2.0 * d + bCcs(j)) * 1e6 + 0.5) / 1e6
-        if (d2 < bd || (d2 == bd && bCls(j) < bcI)) { bd = d2; bcI = bCls(j) }
-        j += 1
-      }
-      BestAssign(bcI, bd)
+      val j = VecKernels.nearest(vec, 0, vv, bCls, bCs, bCcs)
+      val c = bCs(j)
+      BestAssign(bCls(j), VecKernels.sqDist6(vv, VecKernels.dot(vec, 0, c, 0, c.length), bCcs(j)))
     }
     f(col("vec"), col("vv"))
   }
@@ -590,15 +570,9 @@ object VectorOps {
     val c = quantizeInt8(corpus, vecCol)
       .select(col(cId).cast("long").as("neighbor_id"), col("qvec").as("qb"), col("q_scale").as("sb"))
     // bounded top-k, not a full-corpus-per-query window (q172's lesson)
-    broadcast(q).crossJoin(c)
+    rankTopK(broadcast(q).crossJoin(c)
       .withColumn("qscore", graft.functions.Rounding.halfUp(
-        dot(col("qa"), col("qb")) * col("sa") * col("sb"), 4))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col("qscore"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as("qscore"))
+        dot(col("qa"), col("qb")) * col("sa") * col("sb"), 4)), "qscore", k)
   }
 
   /** Two-stage retrieval — the production serving pattern: a cheap
@@ -635,8 +609,8 @@ object VectorOps {
     * negative max-sim raises the score — the standard formula).
     *
     * Determinism contract (vs the recursive-CTE DuckDB oracle): rel =
-    * knnBrute's 4-dp HALF_UP cosine; pairwise sims 4-dp HALF_UP
-    * (BigDecimal — matches both engines' round()); each step score =
+    * knnBrute's 4-dp HALF_UP cosine; pairwise sims `VecKernels.cosine4`
+    * (matches both engines' round()); each step score =
     * floor((λ·rel − (1−λ)·maxsim)·10⁴ + 0.5)/10⁴ with the SAME IEEE
     * (1.0 − λ) product both engines.
     *
@@ -670,21 +644,10 @@ object VectorOps {
         vs(i0) = r.getSeq[Double](2).toArray
         i0 += 1
       }
-      val norms = vs.map { v =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        math.sqrt(s)
-      }
-      def sim(i: Int, j: Int): Double = {
-        val nn = norms(i) * norms(j)
-        if (nn == 0.0) 0.0
-        else {
-          var s = 0.0; var t = 0
-          while (t < vs(i).length) { s += vs(i)(t) * vs(j)(t); t += 1 }
-          java.math.BigDecimal.valueOf(s / nn)
-            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-        }
-      }
+      val norms = VecKernels.selfDots(vs).map(math.sqrt)
+      def sim(i: Int, j: Int): Double =
+        VecKernels.cosine4(VecKernels.dot(vs(i), 0, vs(j), 0, vs(i).length),
+          norms(i) * norms(j))
       val picked = Array.newBuilder[(Int, Long, Double)]
       val taken = new Array[Boolean](n)
       // max sim to the picked set; NegativeInfinity = empty set → penalty 0
@@ -967,8 +930,7 @@ object VectorOps {
     // the vectors): distinct the candidate pairs FIRST, then the classic
     // two-sided shuffle-join verify — each shape is the measured winner
     // in its regime, and the output sets are identical (the UDF math is
-    // the proven cosinePre replica — sequential float→double dot fold,
-    // sqrt norms, BigDecimal.valueOf HALF_UP — and cosine is
+    // cosinePre's through VecKernels.cosine4, and cosine is
     // deterministic per pair, so verify-then-distinct ≡
     // distinct-then-verify; SignLshShapeSpec pins the equality).
     // The broadcast stores FLOATS (collected through a cast that is the
@@ -1022,13 +984,8 @@ object VectorOps {
           val (bIdx, bFlats, bNorms) = bc.value
           val i = bIdx(ia); val j = bIdx(ib)
           val a = bFlats(i); val b = bFlats(j)
-          val d = math.min(a.length, b.length)
-          var s = 0.0; var k = 0
-          while (k < d) { s += a(k).toDouble * b(k).toDouble; k += 1 }
-          val nn = bNorms(i) * bNorms(j)
-          if (nn == 0.0) 0.0
-          else java.math.BigDecimal.valueOf(s / nn)
-            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+          VecKernels.cosine4(VecKernels.dot(a, 0, b, 0, math.min(a.length, b.length)),
+            bNorms(i) * bNorms(j))
         }
         rawCandidates
           .withColumn("cos", cosUdf(col("id_a"), col("id_b")))
@@ -1059,17 +1016,10 @@ object VectorOps {
       .withColumn("nc", l2Norm(col("cv")))
     // bounded top-k (q172's lesson applied to the baseline): the
     // row_number window funneled the ENTIRE scored corpus of each query
-    // through one reducer; the typed aggregator keeps ≤ k map-side
-    // entries per (partition, query) — only |queries|·k rows shuffle.
-    // Ordering (score desc, id asc) identical; same oracles.
-    broadcast(q).crossJoin(c)
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col("score"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as("score"))
+    // through one reducer
+    rankTopK(broadcast(q).crossJoin(c)
+      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
+      "score", k)
   }
 
   /** IVF-style ANN: centroids = per-cluster mean vector; each query probes
@@ -1079,12 +1029,7 @@ object VectorOps {
     */
   def knnIvf(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
              vecCol: String, labelCol: String, k: Int, nProbe: Int = 2): DataFrame = {
-    // element-wise mean per cluster: avg over exploded (label, pos, value)
-    val centroids = corpus
-      .select(col(labelCol).as("cl"), posexplode(col(vecCol)).as(Seq("pos", "v")))
-      .groupBy("cl", "pos").agg(avg("v").as("m"))
-      .groupBy("cl").agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cl"), transform(col("pm"), x => x.getField("m")).as("centroid"))
+    val centroids = labelCentroids(corpus, col(labelCol), vecCol)
       .withColumn("ncent", l2Norm(col("centroid")))
     val q = queries.select(col(qId).as("query_id"), col(vecCol).as("qv"))
       .withColumn("nq", l2Norm(col("qv")))
@@ -1102,14 +1047,9 @@ object VectorOps {
     // the probed-members pool is nProbe·N/k rows per query — bounded
     // relative to the corpus but still too big for one reducer at 10⁹
     // vectors; the typed aggregator keeps it ≤ k map-side entries
-    probed.join(c, "cl")
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col("score"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as("score"))
+    rankTopK(probed.join(c, "cl")
+      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
+      "score", k)
   }
 
   /** recall@k with an expected-label membership test (mirror of the
@@ -1211,15 +1151,9 @@ object VectorOps {
       .withColumn("nc", l2Norm(col("cv")))
     // relevance filter BEFORE the bounded top-k, so the rank is over
     // negatives only — same semantics as the former window form
-    broadcast(q).crossJoin(c)
+    rankTopK(broadcast(q).crossJoin(c)
       .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .filter(col("nl") =!= col("expected"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col("score"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as("score"))
+      .filter(col("nl") =!= col("expected")), "score", k)
       .orderBy("query_id", "rank")
   }
 
