@@ -297,11 +297,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // dev-loop subset: SPARK_GRAFT_ONLY=q125_pagerank,... times just
-    // those (mirrors Verify; the driver never sets it, so the official
-    // bench is always the full catalog)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // those (unset, the bench is always the full catalog)
+    val selected = SparkEntry.selected()
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
 

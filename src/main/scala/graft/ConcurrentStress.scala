@@ -57,8 +57,6 @@ object ConcurrentStress {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  def canonicalHash(df: DataFrame): String = hashOf(canonicalRows(df))
-
   /** Run the stress protocol over `queries` and return every divergence
     * (empty = clean). Callable from ConcurrentStressSpec (short-mode
     * gate: the shared-state-risk subset at sf0.001 on every `sbt test`)

@@ -101,16 +101,13 @@ object PlanAudit {
     // audits just those and prints the rows — for iterating on a join
     // hint without paying the full catalog; the committed artifacts are
     // always generated with the full catalog (no ONLY set).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        try s"| $name | ${auditCells(fn(spark, sfDir))} |"
-        catch {
-          case e: Throwable => s"| $name | ERROR ${e.getClass.getSimpleName} | | | | | |"
-        }
+    val rows = SparkEntry.selected().map { case (name, fn) =>
+      try s"| $name | ${auditCells(fn(spark, sfDir))} |"
+      catch {
+        case e: Throwable => s"| $name | ERROR ${e.getClass.getSimpleName} | | | | | |"
       }
-    if (only.isDefined) {
+    }
+    if (sys.env.contains("SPARK_GRAFT_ONLY")) {
       rows.foreach(println)
       println("[plan-audit] SPARK_GRAFT_ONLY set — rows printed, " +
         s"$outPath NOT written")

@@ -250,6 +250,23 @@ object SparkEntry {
     "q204_semdedup_stratum"    -> ScaleOps.q204SemdedupStratum _,
   )
 
+  /** The catalog sorted by name; with `SPARK_GRAFT_ONLY=qA,qB` set, just
+    * those entries (the dev-loop subset of Verify, Bench and PlanAudit).
+    * A name that is not in the catalog fails, so a typo cannot turn a
+    * run into a green pass over zero queries.
+    */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries.toSeq.sortBy(_._1)
+    only.fold(all) { list =>
+      val names = list.split(",").map(_.trim).toSet
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names queries not in the catalog: " +
+        unknown.toSeq.sorted.map(n => s"'$n'").mkString(", "))
+      all.filter { case (name, _) => names(name) }
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = {

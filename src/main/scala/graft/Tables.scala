@@ -212,7 +212,7 @@ object Tables {
     * session's own parallelism and an extra exchange would only perturb
     * the plan (measured: an unconditional repartition of local
     * relations reordered pushed predicates into an ANSI
-    * divide-by-zero in the banded near-dup spec).
+    * divide-by-zero in a near-dup spec over zero-norm test vectors).
     */
   def widen(df: DataFrame): DataFrame = {
     // Under-split = at least one but fewer leaf files than this; a

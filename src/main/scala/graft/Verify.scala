@@ -14,11 +14,8 @@ object Verify {
     // dir and the round's correctness silently shrinks (same honesty rule
     // as Bench's ok flags)
     // dev-loop subset: SPARK_GRAFT_ONLY=q1_agg,q2_... runs just those
-    // (the driver never sets it, so the official dump is always full)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val failed = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
+    // (unset, the dump is always the full catalog)
+    val failed = SparkEntry.selected().flatMap { case (name, fn) =>
       // repartition(1), not coalesce(1): coalesce propagates the single
       // partition UP the narrow chain, collapsing the whole query to one
       // core; repartition pins an exchange so only the tiny write is serial

@@ -49,30 +49,40 @@ object Dedup {
     * Implemented as a once-per-document scalar UDF: the equivalent
     * `transform(sequence(...), i -> concat_ws(slice(...)))` chain is a
     * CodegenFallback higher-order function interpreted per ELEMENT —
-    * measured 10.6 s vs <0.5 s for 260k shingles. A per-row UDF with a
-    * tight JVM loop wins when the per-element native form can't codegen.
+    * measured 10.6 s vs <0.5 s for 260k shingles (and 3.3 s vs well
+    * under a second on q87 at sf0.1). A per-row UDF with a tight JVM
+    * loop wins when the per-element native form can't codegen.
     */
-  def wordShingles(c: Column, n: Int = 3): Column = udf(shingleFn(n)).apply(c)
+  def wordShingles(c: Column, n: Int = 3): Column =
+    udf { text: String =>
+      if (text == null) Array.empty[String]
+      else distinctNgrams(text.trim.split("\\s+"), n)
+    }.apply(c)
 
-  private def shingleFn(n: Int): String => Array[String] = { text =>
-    if (text == null) Array.empty[String]
+  /** Distinct space-joined n-grams of `words`, first-occurrence order;
+    * empty when null or shorter than n. The one loop behind every
+    * string-shingle UDF — tokenization stays with the caller, because
+    * `trim.split("\\s+")` and `regexp_extract_all("\\S+")` differ on
+    * control characters.
+    */
+  private[graft] def distinctNgrams(words: scala.collection.Seq[String],
+                                    n: Int): Array[String] =
+    if (words == null || words.length < n) Array.empty[String]
     else {
-      val words = text.trim.split("\\s+")
-      if (words.length < n) Array.empty[String]
-      else {
-        val seen = new java.util.LinkedHashSet[String]()
-        var i = 0
-        while (i <= words.length - n) {
-          val sb = new java.lang.StringBuilder(words(i))
-          var j = 1
-          while (j < n) { sb.append(' ').append(words(i + j)); j += 1 }
-          seen.add(sb.toString)
-          i += 1
+      val seen = new java.util.LinkedHashSet[String]()
+      val sb = new java.lang.StringBuilder()
+      var i = 0
+      while (i + n <= words.length) {
+        sb.setLength(0)
+        var j = 0
+        while (j < n) {
+          if (j > 0) sb.append(' ')
+          sb.append(words(i + j)); j += 1
         }
-        seen.toArray(Array.empty[String])
+        seen.add(sb.toString); i += 1
       }
+      seen.toArray(Array.empty[String])
     }
-  }
 
   /** Positioned word n-gram shingles — array<struct<pos:int,s:string>>
     * with 1-based start positions and ALL occurrences kept (substring-

@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftshim.ColumnShim
 
 /** SQL-surface registration for the library's custom Catalyst
-  * expressions, so `spark.sql("... dot_product(a, b) ...")` works exactly
-  * like the Column API. (The SparkSessionExtensions injection point would
+  * expressions and Column chains, so `spark.sql("... dot_product(a, b)
+  * ...")` works exactly like the Column API. (The SparkSessionExtensions injection point would
   * do the same at session build time; temp-function registration keeps it
   * usable on an already-built session.)
   */
@@ -14,11 +16,17 @@ object GraftFunctions {
     * NoSuchElementException and silently ignores extra arguments.
     */
   private[graft] def checkArity(name: String, signature: String, n: Int)(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Unit =
+      exprs: Seq[Expression]): Unit =
     if (exprs.length != n)
       throw new IllegalArgumentException(
         s"$name expects exactly $n argument${if (n == 1) "" else "s"} — " +
           s"$name($signature); got ${exprs.length}")
+
+  /** `clean_text(text)`: the `CleanText.cleanText` chain's expression. */
+  private[graft] def cleanText(exprs: Seq[Expression]): Expression = {
+    checkArity("clean_text", "text STRING", 1)(exprs)
+    ColumnShim.catalyst(graft.text.CleanText.cleanText(ColumnShim.column(exprs.head)))
+  }
 
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -27,10 +35,7 @@ object GraftFunctions {
         DotProduct(exprs.head, exprs(1))
       }, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "clean_text", { exprs =>
-        checkArity("clean_text", "text STRING", 1)(exprs)
-        CleanTextExpr(exprs.head)
-      }, "built-in")
+      "clean_text", cleanText, "built-in")
     // scalar UDFs with no Catalyst expression form (zlib): same name
     // surface for SQL users as the Column API
     spark.udf.register("compression_ratio",

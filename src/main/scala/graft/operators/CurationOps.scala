@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,29 +32,9 @@ import org.apache.spark.sql.functions._
 object CurationOps {
 
   /** Distinct word n-grams of a `\S+` token array, first-occurrence
-    * order. Tight per-row loop: the higher-order transform(sequence(…))
-    * form is CodegenFallback, interpreted per element (same measurement
-    * as Dedup.wordShingles).
+    * order (`Dedup.distinctNgrams` over this tokenization).
     */
-  private def shingleUdf(n: Int) = udf { (ws: Seq[String]) =>
-    if (ws == null || ws.length < n) Array.empty[String]
-    else {
-      val seen = new java.util.LinkedHashSet[String]()
-      val sb = new java.lang.StringBuilder()
-      var i = 0
-      while (i + n <= ws.length) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(ws(i + j)); j += 1
-        }
-        seen.add(sb.toString); i += 1
-      }
-      val out = new Array[String](seen.size)
-      seen.toArray(out); out
-    }
-  }
+  private def shingleUdf(n: Int) = udf { (ws: Seq[String]) => Dedup.distinctNgrams(ws, n) }
 
   /** Per-document n-gram NOVELTY: of a document's distinct word
     * n-grams, how many occur in NO lower-id document (min doc_id over

@@ -200,7 +200,7 @@ object ScaleOps {
     * method keeps exact recall (measured: IVF probe-4 still misses
     * qualifying pairs at sf0.1 and prunes only 8%; sign-LSH needs ~300
     * 16-bit bands for 99% recall while 60%+ of random pairs collide
-    * anyway — and the 10x-rehearsal NearDupSweep showed the projection
+    * anyway — and a 10x-rehearsal threshold sweep showed a projection
     * band join prunes almost nothing at ANY τ ≤ 0.95 in 384 dims, where
     * the exact-recall bucket width exceeds the projected data spread).
     * The quadratic is intrinsic; what the implementation controls is its
@@ -456,50 +456,17 @@ object ScaleOps {
     VectorOps.nearDupPairsBucketedDriven(e, "vec_id", "embedding", ivfCent, 0.45)
   }
 
-  /** Word n-gram shingles of a text column as distinct strings (the
-    * string form q87's oracle can mirror; Dedup.shingles is the hashed
-    * form the dedup family joins on). Empty array below n words.
-    * A tight-loop UDF, not transform/slice/array_join: those
-    * higher-order functions are CodegenFallback — interpreted per
-    * ELEMENT — and measured 3.3 s on q87 at sf0.1 where this loop
-    * runs it in well under a second.
-    */
-  private def wordShingles(n: Int) = udf { text: String =>
-    if (text == null) Array.empty[String]
-    else {
-      val ws = text.trim.split("\\s+")
-      if (ws.length < n) Array.empty[String]
-      else {
-        val seen = new java.util.LinkedHashSet[String]()
-        val sb = new java.lang.StringBuilder()
-        var i = 0
-        while (i + n <= ws.length) {
-          sb.setLength(0)
-          var j = 0
-          while (j < n) {
-            if (j > 0) sb.append(' ')
-            sb.append(ws(i + j)); j += 1
-          }
-          seen.add(sb.toString); i += 1
-        }
-        seen.toArray(Array.empty[String])
-      }
-    }
-  }
-
   /** C4-style cross-document line dedup: a "line" occurring in more than
     * one place is kept only at its first occurrence (min doc_id, then
     * position); each document is reassembled from its surviving lines.
     * The fixture has no newline structure, so lines are fixed 10-word
     * windows (q19's chunker) — the semantics (global first-occurrence
     * dedup + reassembly, dropping documents left empty) are the C4
-    * boilerplate-removal pass verbatim. 100 TB shape: ONE shuffle
-    * partitions by line text (the row_number window is per-line argmin —
-    * bounded state per key, skew-safe because a line's copies are
-    * capped by corpus repetition; for pathological boilerplate the
-    * escape hatch is `lineDedupSalted`, a two-phase argmin where no
-    * raw row ever shuffles on the line key, equality-pinned incl. on a
-    * hot-line fixture); reassembly is a narrow per-doc aggregation.
+    * boilerplate-removal pass verbatim. 100 TB shape: each line's
+    * winner is a map-side partially aggregated argmin on the line text
+    * (a hot boilerplate line ships one partial per map task, not every
+    * copy; pinned on a hot-line fixture in ScaleOpsSpec); reassembly is
+    * a narrow per-doc aggregation.
     */
   def lineDedup(docs: DataFrame, idCol: String, textCol: String,
                 lineWords: Int, carry: Seq[String] = Nil): DataFrame = {
@@ -535,47 +502,6 @@ object ScaleOps {
 
   def q85LineDedup(spark: SparkSession, dir: String): DataFrame =
     lineDedup(Tables.documents(spark, dir), "doc_id", "text", 10)
-
-  /** Salted two-phase variant of `lineDedup` for PATHOLOGICAL
-    * boilerplate — a line occurring ~10⁹ times makes the window form's
-    * line partition one hot task. Here NO raw line row ever shuffles
-    * on the line key: phase 1 computes argmin(doc,i) per (line, salt)
-    * with map-side partial aggregation (a hot line spreads over
-    * `salts` reducers and each map task emits ONE partial per
-    * (line,salt)); phase 2 reduces the ≤`salts` partials per line to
-    * the global winner. Totals come from a doc-keyed count (partial-
-    * aggregable, skew-free), and reassembly reads only the winners —
-    * one row per DISTINCT line. Every shuffle carries aggregates, not
-    * rows. Output is identical to `lineDedup` (equality-pinned,
-    * including on a hot-line fixture).
-    */
-  def lineDedupSalted(docs: DataFrame, idCol: String, textCol: String,
-                      lineWords: Int, salts: Int = 16,
-                      carry: Seq[String] = Nil): DataFrame = {
-    val lines = docs
-      .select(col(idCol) +: carry.map(col) :+
-        posexplode(graft.text.Chunker.wordChunks(col(textCol), lineWords)): _*)
-      .withColumnRenamed("pos", "i").withColumnRenamed("col", "line")
-    val totals = lines.groupBy(idCol, carry: _*)
-      .agg(count(lit(1)).as("n_lines"))
-    // struct comparison is lexicographic by field order == the window
-    // form's orderBy(doc_id, i)
-    val winners = lines
-      .withColumn("salt", pmod(hash(col(idCol), col("i")), lit(salts)))
-      .groupBy("line", "salt")
-      .agg(min(struct(col(idCol).as("d"), col("i").as("i"))).as("w"))
-      .groupBy("line").agg(min("w").as("w"))
-      .select(col("w.d").as(idCol), col("w.i").as("i"), col("line"))
-    winners.groupBy(idCol)
-      .agg(count(lit(1)).as("n_kept"),
-        array_join(
-          transform(array_sort(collect_list(struct(col("i"), col("line")))),
-            x => x.getField("line")), " ").as("kept_text"))
-      .join(totals, idCol)
-      .select(col(idCol) +: carry.map(col) :+ col("n_kept") :+
-        (col("n_lines") - col("n_kept")).as("n_dropped") :+ col("kept_text"): _*)
-      .orderBy(idCol)
-  }
 
   /** Partial-sketch merge across groups — the algebra that makes sketches
     * the 100 TB profiling tool: per-lang HLL sketches are built in one
@@ -629,14 +555,13 @@ object ScaleOps {
     */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
                     isEval: Column, n: Int): DataFrame = {
-    val sh = wordShingles(n)
     val ev = docs.filter(isEval)
-      .select(explode(sh(col(textCol))).as("s")).distinct()
+      .select(explode(Dedup.wordShingles(col(textCol), n)).as("s")).distinct()
     // (id, s) is already distinct: wordShingles dedups per doc.
     // widen: the per-row shingle UDF must not run on the fixture's
     // single input split (Tables.widen is a no-op on well-split input)
     Tables.widen(docs.filter(!isEval))
-      .select(col(idCol), explode(sh(col(textCol))).as("s"))
+      .select(col(idCol), explode(Dedup.wordShingles(col(textCol), n)).as("s"))
       .join(broadcast(ev), "s")
       .groupBy(idCol).agg(count(lit(1)).as("n_shared"))
       .orderBy(idCol)
@@ -815,11 +740,10 @@ object ScaleOps {
       .withColumn("rk", row_number().over(fpw))
       .filter(col("rk") === 1)
     // 5: drop docs sharing any 4-gram with the raw eval slice
-    val sh = wordShingles(4)
     val evalShingles = docs.filter(isEval)
-      .select(explode(sh(col("text"))).as("s")).distinct()
+      .select(explode(Dedup.wordShingles(col("text"), 4)).as("s")).distinct()
     val contaminated = exactDeduped
-      .select(col("doc_id"), explode(sh(col("kept_text"))).as("s"))
+      .select(col("doc_id"), explode(Dedup.wordShingles(col("kept_text"), 4)).as("s"))
       .join(broadcast(evalShingles), "s")
       .select("doc_id").distinct()
     val clean = exactDeduped.join(contaminated, Seq("doc_id"), "left_anti")
@@ -1479,13 +1403,13 @@ object ScaleOps {
     */
   def contaminationMatrix(docs: DataFrame, idCol: String, textCol: String,
                           sourceCol: String, n: Int): DataFrame = {
-    // wordShingles (tight-loop UDF, per-doc distinct) — not the
+    // Dedup.wordShingles (tight-loop UDF, per-doc distinct) — not the
     // transform/slice HOF spelling, which is CodegenFallback (see the
     // wordShingles doc); widen for the same single-split reason as
     // decontaminate
     val sh = Tables.widen(docs)
       .select(col(idCol).as("id"), col(sourceCol).as("source"),
-        explode(wordShingles(n)(col(textCol))).as("s"))
+        explode(Dedup.wordShingles(col(textCol), n)).as("s"))
     val srcOfShingle = sh.select(col("s"), col("source").as("src_b")).distinct()
     sh.join(srcOfShingle, "s")
       .filter(col("source") =!= col("src_b"))

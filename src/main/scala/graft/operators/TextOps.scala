@@ -25,15 +25,12 @@ object TextOps {
         lit("<p>Intro</p> [12] "), col("text"),
         lit("!!! (Smith et al., 2020a) (fig 3) end-\nnote\nFigure 2 spurious caption\nmore text\nReferences\n[99] dropped tail")))
 
-  /** Order-exact composite clean (text_cleaner.py:105-133).
-    * Runs through the FUSED codegen expression (one call per row,
-    * precompiled patterns) — `CleanTextSpec` pins it output-identical to
-    * the composable `CleanText.cleanText` chain, and the unchanged DuckDB
-    * oracle hash-checks it independently.
+  /** Order-exact composite clean (text_cleaner.py:105-133) through the
+    * `CleanText.cleanText` chain; the DuckDB oracle hash-checks it.
     */
   def q13CleanText(spark: SparkSession, dir: String): DataFrame =
     dirty(spark, dir)
-      .select(col("doc_id"), graft.functions.CleanTextFused(col("dirty")).as("clean"))
+      .select(col("doc_id"), CleanText.cleanText(col("dirty")).as("clean"))
       .orderBy("doc_id")
 
   /** Token counting: whitespace tokens + BPE-ish pre-tokenizer count. */

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{CleanTextExpr, DotProduct}
+import graft.functions.{DotProduct, GraftFunctions}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -19,18 +19,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       (exprs: Seq[Expression]) => {
-        graft.functions.GraftFunctions.checkArity(
+        GraftFunctions.checkArity(
           "dot_product", "a ARRAY<FLOAT>, b ARRAY<FLOAT>", 2)(exprs)
         DotProduct(exprs.head, exprs(1))
       }))
     e.injectFunction((
       FunctionIdentifier("clean_text"),
-      new ExpressionInfo(classOf[CleanTextExpr].getName, "clean_text"),
-      (exprs: Seq[Expression]) => {
-        graft.functions.GraftFunctions.checkArity(
-          "clean_text", "text STRING", 1)(exprs)
-        CleanTextExpr(exprs.head)
-      }))
+      new ExpressionInfo(graft.text.CleanText.getClass.getName, "clean_text"),
+      GraftFunctions.cleanText))
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // opt-in relaxation family: count(DISTINCT) -> HLL++ and exact
     // percentile -> GK sketch (see ApproxDistinct / ApproxPercentile)

@@ -125,8 +125,6 @@ object CleanText {
     }
   }
 
-  def trimToLastPeriodUdf = udf(trimToLastPeriod)
-
   /** Special-token strip (inference/postprocess.py:25-34,57-61):
     * remove `<pad>`, `</s>`, `###`-style generation artifacts.
     */

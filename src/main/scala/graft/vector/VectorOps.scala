@@ -52,19 +52,23 @@ object VectorOps {
       .otherwise(round(dot(a, b) / (na * nb), 4))
 
   /** The bounded ranked tail of the top-k operators: per query_id, the k
-    * best rows by (scoreCol desc, neighbor_id asc) as (query_id, rank,
-    * neighbor_id, scoreCol). `TopKAggregator` keeps ≤ k map-side entries
-    * per (partition, query), so only |queries|·k rows shuffle — a
-    * row_number window would sort each query's whole scored corpus in
-    * one reducer.
+    * best rows by (scoreCol desc, neighbor_id asc) as (query_id, carry…,
+    * rank, neighbor_id, scoreCol). `carry` names columns functionally
+    * dependent on query_id that ride along in the group key.
+    * `TopKAggregator` keeps ≤ k map-side entries per (partition, query),
+    * so only |queries|·k rows shuffle — a row_number window would sort
+    * each query's whole scored corpus in one reducer.
     */
-  private[vector] def rankTopK(scored: DataFrame, scoreCol: String, k: Int): DataFrame =
-    scored.groupBy("query_id")
+  private[vector] def rankTopK(scored: DataFrame, scoreCol: String, k: Int,
+                               carry: Seq[String] = Nil): DataFrame = {
+    val keys = col("query_id") +: carry.map(col)
+    scored.groupBy("query_id", carry: _*)
       .agg(graft.functions.TopKAggregator.topK(k)(
         col(scoreCol), col("neighbor_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as(scoreCol))
+      .select(keys :+ posexplode(col("top")).as(Seq("pos", "s")): _*)
+      .select(keys ++ Seq((col("pos") + 1).cast("int").as("rank"),
+        col("s._2").as("neighbor_id"), col("s._1").as(scoreCol)): _*)
+  }
 
   /** Group-centroid cosine matrix — the corpus-level redundancy
     * datasheet: mean embedding per group (source, snapshot, shard …),
@@ -119,76 +123,20 @@ object VectorOps {
       .orderBy("id_a", "id_b")
   }
 
-  /** Exact near-dup pairs WITHOUT the crossJoin: a triangle-inequality
-    * band join on normalized-coordinate projections.
-    *
-    * For unit-normalized â, b̂: ‖â−b̂‖² = 2−2·cos(a,b), so cos ≥ τ forces
-    * every coordinate gap |â_i−b̂_i| ≤ w = √(2−2τ). Bucketing coordinate 0
-    * by width w and probing each row into its own + two neighbor buckets
-    * meets EVERY qualifying pair exactly once (bucket ids differ by ≤ 1;
-    * probe buckets are distinct, so no pair dedup is needed) — zero
-    * false negatives, mathematically, at any τ and on any data. The
-    * remaining `nProj−1` coordinate gaps prefilter candidates with
-    * cheap scalar compares before the 64-term dot product.
-    *
-    * Scale shape: one shuffle equi-join on the bucket key — the plan the
-    * optimizer sees is a plain hash join, not a cartesian product. The
-    * in-bucket quadratic term is output-sensitive: it tracks how much of
-    * the corpus's cosine mass sits within w of each other, so pruning is
-    * strong exactly when near-dup mining is meaningful (concentrated
-    * similarity structure) and degrades toward all-pairs as τ approaches
-    * the isotropic noise floor — the regime where NO exact method can be
-    * sublinear (q27's τ=0.45 fixture measurement: see ScaleOps). Skewed
-    * buckets at real scale: salt the bucket key before the join; AQE
-    * skew-join covers the moderate cases.
-    *
-    * Requires τ > 0 (zero-norm vectors score cosine 0.0 and are pruned
-    * up front). The band is widened by the 4-dp rounding slack of
-    * [[cosinePre]], so a true cosine of τ−5e-5 that ROUNDS to τ is still
-    * inside the band.
-    */
-  def nearDupPairsBanded(vecs: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double, nProj: Int = 4): DataFrame = {
-    require(threshold > 0, "banded pruning needs a positive cosine threshold")
-    val w = math.sqrt(2.0 - 2.0 * (threshold - 1e-4))
-    val base = graft.Tables.widen(vecs.select(col(idCol), col(vecCol)))
-      .withColumn("nv", l2Norm(col(vecCol)))
-      .filter(col("nv") > 0)
-      .select(Seq(col(idCol).as("id"), col(vecCol).as("vec"), col("nv")) ++
-        (0 until nProj).map(i =>
-          (element_at(col(vecCol), i + 1) / col("nv")).as(s"p$i")): _*)
-    val a = base.select(col("id").as("id_a") +: col("vec").as("va") +:
-      col("nv").as("na") +: (0 until nProj).map(i => col(s"p$i").as(s"pa$i")): _*)
-      .withColumn("bucket", floor(col("pa0") / w))
-    val b = base.select(col("id").as("id_b") +: col("vec").as("vb") +:
-      col("nv").as("nb") +: (0 until nProj).map(i => col(s"p$i").as(s"pb$i")): _*)
-      .withColumn("b0", floor(col("pb0") / w))
-      .withColumn("bucket", explode(array(col("b0") - 1, col("b0"), col("b0") + 1)))
-      .drop("b0")
-    val gapFilters = (0 until nProj).map(i =>
-      abs(col(s"pa$i") - col(s"pb$i")) <= w).reduce(_ && _)
-    a.join(b, "bucket")
-      .filter(col("id_a") < col("id_b") && gapFilters)
-      .withColumn("cos", cosinePre(col("va"), col("vb"), col("na"), col("nb")))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-      .orderBy("id_a", "id_b")
-  }
-
   /** Exact all-pairs near-dup ≥ threshold via BLOCKED pair enumeration —
     * the right distribution shape for intrinsically quadratic work.
     *
     * The rehearsal measurement that motivates this: at 10x scale the
-    * row-level forms (crossJoin, and the projection band join at any
-    * τ ≤ 0.95) spend their time materializing two 384-float vectors per
-    * CANDIDATE ROW — ~200M join rows × ~3 KB ≈ 600 GB in flight for
-    * ~77 Gflop of actual arithmetic (measured 62–75 s at 20k vectors,
-    * where the flops alone are ~2 s of CPU). Banding cannot help in
-    * high dimension: exact recall forces bucket width w = √(2−2τ),
-    * while a unit projection of near-isotropic d-dim unit vectors
-    * spreads only ~4/√d — w exceeds the data spread for every τ below
-    * ~1−8/d (τ ≈ 0.98 at d = 384), so the sweep (graft.NearDupSweep)
-    * prunes almost nothing even at τ = 0.95.
+    * row-level forms (crossJoin, and a triangle-inequality projection
+    * band join at any τ ≤ 0.95) spend their time materializing two
+    * 384-float vectors per CANDIDATE ROW — ~200M join rows × ~3 KB ≈
+    * 600 GB in flight for ~77 Gflop of actual arithmetic (measured
+    * 62–75 s at 20k vectors, where the flops alone are ~2 s of CPU).
+    * Banding cannot help in high dimension: exact recall forces bucket
+    * width w = √(2−2τ), while a unit projection of near-isotropic d-dim
+    * unit vectors spreads only ~4/√d — w exceeds the data spread for
+    * every τ below ~1−8/d (τ ≈ 0.98 at d = 384), so a threshold sweep
+    * of the band join pruned almost nothing even at τ = 0.95.
     *
     * Blocked form: vectors hash into ⌈n/blockRows⌉ fixed-size blocks,
     * each packed into ONE row; the B(B+1)/2 unordered block PAIRS become
@@ -204,7 +152,7 @@ object VectorOps {
     * grew only 6.7×). Arithmetic is [[cosinePre]]'s through
     * `VecKernels` (`dot` over the float blocks, `round4`), threshold on
     * the rounded value. Zero-norm vectors score 0.0 and are pruned up
-    * front (threshold must be positive, as in the banded form).
+    * front (threshold must be positive).
     *
     * Scale boundary, stated honestly: blocking makes the quadratic
     * EFFICIENT, not sublinear — at 10⁶ vectors it is ~10¹² dots
@@ -310,8 +258,8 @@ object VectorOps {
       // Materialize the pair list once (eager local checkpoint), then
       // drop the heavy input caches: `v` and `packed` hold the full
       // vector corpus, and leaving them to LRU meant repeated calls in
-      // one session (the NearDupSweep threshold loop) accumulated
-      // executor storage. The residual blocks hold only the qualifying
+      // one session (a threshold-sweep loop) accumulated executor
+      // storage. The residual blocks hold only the qualifying
       // pair set — bounded by the near-dup result, not the corpus — and
       // unlike cache() they are dropped by the ContextCleaner once the
       // returned frame is unreachable, so a sweep loop leaves nothing
@@ -1065,13 +1013,9 @@ object VectorOps {
       .withColumn("nc", l2Norm(col("cv")))
     // bounded top-k instead of a full-corpus-per-query window; the hit
     // labels re-join on the |queries|·k surviving ids only
-    val top = broadcast(q).crossJoin(c)
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .groupBy("query_id", "expected")
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col("score"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), col("expected"), explode(col("top")).as("s"))
-      .select(col("query_id"), col("expected"), col("s._2").as("neighbor_id"))
+    val top = rankTopK(broadcast(q).crossJoin(c)
+      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
+      "score", k, carry = Seq("expected"))
     val hits = top.join(c.select(col("neighbor_id"), col("nl")), Seq("neighbor_id"))
       .groupBy("query_id")
       .agg(max(when(col("nl") === col("expected"), 1).otherwise(0)).as("hit"))
@@ -1102,15 +1046,9 @@ object VectorOps {
     // bounded top-k; rank = explode position (the aggregator's order is
     // exactly the window's (score desc, id asc)); labels re-join on the
     // |queries|·k survivors only
-    val perQ = broadcast(q).crossJoin(c)
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .groupBy("query_id", "expected")
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col("score"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), col("expected"),
-        posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), col("expected"),
-        (col("pos") + 1).cast("int").as("rank"), col("s._2").as("neighbor_id"))
+    val perQ = rankTopK(broadcast(q).crossJoin(c)
+      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
+      "score", k, carry = Seq("expected"))
       .join(c.select(col("neighbor_id"), col("nl")), Seq("neighbor_id"))
       .withColumn("rel", when(col("nl") === col("expected"), 1.0).otherwise(0.0))
       .groupBy("query_id", "expected")

@@ -11,6 +11,15 @@ class EntrySpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("selected narrows the catalog to the listed names and refuses unknown ones") {
+    assert(SparkEntry.selected(None).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.selected(Some("q24_ngram_jaccard, q13_clean_text")).map(_._1) ==
+      Seq("q13_clean_text", "q24_ngram_jaccard"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("q13_clean_txt,q24_ngram_jaccard")))
+    assert(e.getMessage.contains("'q13_clean_txt'"), e.getMessage)
+  }
+
   test("entry (flagship) returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -71,6 +80,8 @@ class EntrySpec extends SparkSpec {
         "SELECT dot_product(CAST(array(1.0, 2.0) AS ARRAY<DOUBLE>), " +
           "CAST(array(3.0, 4.0) AS ARRAY<DOUBLE>)) AS d").head().getDouble(0)
       assert(d == 11.0)
+      assert(s2.sql("SELECT clean_text('<p>x</p> y?!! [1] z-\n w')").head().getString(0) ==
+        "x y! zw")
       // do NOT stop s2 — it shares the JVM-wide SparkContext
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)

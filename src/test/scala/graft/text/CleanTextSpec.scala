@@ -58,31 +58,6 @@ class CleanTextSpec extends SparkSpec {
     assert(rows.toSeq == Seq("PMC123", "PMC456", "PMC789", null))
   }
 
-  test("fused codegen clean_text is output-identical to the composable chain") {
-    // every fixture document wrapped in the q13 dirt, plus adversarial
-    // edges: empty, all-whitespace, nested brackets, hyphen cascades,
-    // stacked sections, control chars, order-sensitive punct/citation mixes
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(concat(
-        lit("<p>Intro</p> [12] "), col("text"),
-        lit("!!! (Smith et al., 2020a) (fig 3) end-\nnote\nFigure 2 spurious caption\nmore text\nReferences\n[99] dropped tail")).as("t"))
-    val edges = Seq(
-      "", " ", "\t\n ", "...", "a",
-      "[x[y]z]", "[123456789012345678901] kept (too long)",
-      "w-\n x-\n y", "see.!!?,, [1],, (fig 4a)(FIGURE 12)",
-      "<b>x</b>",
-      "body\nMethods\nm\nReferences\nr",
-      "Table 12 cap\ntext (Jones et al 2021b) tail",
-      "no terminator at all").toDF("t")
-    val all = docs.unionByName(edges)
-    val mismatches = all.select(
-        CleanText.cleanText(col("t")).as("chain"),
-        graft.functions.CleanTextFused(col("t")).as("fused"))
-      .filter(!(col("chain") <=> col("fused")))
-    assert(mismatches.count() == 0,
-      s"fused != chain, e.g. ${mismatches.take(1).mkString}")
-  }
-
   test("clean_text rejects wrong arity with the expected signature in the message") {
     graft.functions.GraftFunctions.register(spark)
     val e = intercept[Exception] {
@@ -99,9 +74,24 @@ class CleanTextSpec extends SparkSpec {
     val viaSql = spark.sql(
       "SELECT clean_text('<p>x</p> y?!! [1] z-\n w') AS c").head().getString(0)
     assert(viaSql == "x y! zw")
-    // interpreted path (no codegen) must agree: call eval directly
-    val viaEval = graft.functions.CleanTextFused.clean("<p>x</p> y?!! [1] z-\n w")
-    assert(viaEval == viaSql)
+    // a literal argument is constant-folded (interpreted eval); the
+    // Column chain over a shuffled column runs in whole-stage codegen
+    def interpreted(s: String): String =
+      spark.sql("SELECT clean_text(:t)", Map("t" -> s)).head().getString(0)
+    def codegen(s: String): String =
+      Seq(s).toDF("t").repartition(1).select(CleanText.cleanText(col("t"))).as[String].head()
+    // adversarial edges: empty, all-whitespace, nested brackets, hyphen
+    // cascades, stacked sections, control chars, order-sensitive
+    // punct/citation mixes
+    val edges = Seq("<p>x</p> y?!! [1] z-\n w",
+      "", " ", "\t\n ", "...", "a",
+      "[x[y]z]", "[123456789012345678901] kept (too long)",
+      "w-\n x-\n y", "see.!!?,, [1],, (fig 4a)(FIGURE 12)",
+      "<b>x</b>", "a\u0001b\u001fc",
+      "body\nMethods\nm\nReferences\nr",
+      "Table 12 cap\ntext (Jones et al 2021b) tail",
+      "no terminator at all")
+    edges.foreach(s => assert(interpreted(s) == codegen(s), s"input: ${s.toSeq}"))
   }
 
   test("citation extraction is unique and ordered") {

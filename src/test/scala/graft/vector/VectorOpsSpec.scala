@@ -148,28 +148,6 @@ class VectorOpsSpec extends SparkSpec {
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))) == Seq((2L, 3L)))
   }
 
-  test("banded near-dup equals the exact all-pairs scan with no cartesian plan") {
-    val emb = graft.Tables.embeddings(spark, sfDir)
-    for (t <- Seq(0.45, 0.8)) {
-      val exact = VectorOps.nearDupPairs(emb, "vec_id", "embedding", t).collect().toSeq
-      val banded = VectorOps.nearDupPairsBanded(emb, "vec_id", "embedding", t)
-      assert(banded.collect().toSeq == exact,
-        s"projection band join must be exact at t=$t (triangle inequality)")
-      // the whole point of the re-registration: the physical plan is an
-      // equi-join on the bucket key, not a cartesian/broadcast-NLJ scan
-      val plan = banded.queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-        s"banded plan must not contain a product join:\n$plan")
-    }
-    // zero-norm vectors are pruned, not divide-by-zero'd
-    import spark.implicits._
-    val withZero = Seq((1L, Array(0f, 0f, 0f, 0f)), (2L, Array(1f, 0f, 0f, 0f)),
-      (3L, Array(1f, 0.01f, 0f, 0f))).toDF("vec_id", "embedding")
-    val pairs = VectorOps.nearDupPairsBanded(withZero, "vec_id", "embedding", 0.9)
-      .collect().toSeq
-    assert(pairs.map(r => (r.getLong(0), r.getLong(1))) == Seq((2L, 3L)))
-  }
-
   test("cosine: zero-norm side scores 0.0 instead of ANSI divide-by-zero") {
     import spark.implicits._
     val df = Seq(
