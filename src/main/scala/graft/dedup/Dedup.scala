@@ -474,7 +474,7 @@ object Dedup {
       .filter(col("dfc") <= maxDf).select("gr")
     // EAGER checkpoint: the capped gram table feeds the totals AND both
     // pair-join sides — without it the doc scan + gram explode + two
-    // aggs recompute three times (first 100× MemoryAudit run measured it)
+    // aggs recompute three times (measured on the first 100× run)
     val capped = tf.join(keep, "gr").localCheckpoint(true)
     val tot = capped.groupBy("doc_id").agg(sum("tf").as("tot"))
     val withTot = capped.join(tot, Seq("doc_id"))

@@ -1,117 +1,106 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.functions.{col, posexplode, udaf}
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Bounded top-k as a custom `Aggregator` (SURVEY §2.12's one justified
   * custom aggregate).
   *
-  * The window form (`row_number().over(partitionBy(query).orderBy(score
-  * desc))`) must shuffle EVERY scored pair to the query's reducer and
-  * sort there — at a billion corpus vectors that is the whole scored
+  * The window form (`row_number().over(partitionBy(group).orderBy(score
+  * desc, id asc))`) must shuffle EVERY scored row to the group's reducer
+  * and sort there — at a billion corpus vectors that is the whole scored
   * cross product on the wire. This aggregate keeps at most k entries per
-  * partition (map-side partial aggregation), so only |queries| × k rows
-  * shuffle. Ordering (score desc, then id asc) matches the window form
-  * exactly, so results are identical — the two share an oracle.
+  * (partition, group) (map-side partial aggregation), so only
+  * |groups| × k rows shuffle. Ordering (score desc, then id asc) matches
+  * the window form exactly, ties included, so results are identical.
   */
 object TopKAggregator {
 
-  type Scored = (Double, Long) // (score, neighbor_id)
+  // Spark's sort order for STRING: UTF-8 bytes, i.e. code points.
+  // String.compareTo compares UTF-16 units and puts a supplementary
+  // character (surrogate 0xD8xx…) before U+FF01, which Spark sorts after.
+  private val sparkStringOrder: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
-  // TOTAL order (round-11 ADVICE): java.lang.Double.compare gives NaN a
-  // fixed place (greater than every other double) — the SAME total
-  // order Spark's window sort uses for DOUBLE desc, so a NaN score
-  // ranks first in both forms instead of making the comparator
-  // non-transitive (a>b and b>a both false under IEEE > with NaN).
-  // `+ 0.0` folds -0.0 into +0.0 first (NaN unaffected), matching
-  // Spark's NormalizeFloatingNumbers treatment of sort keys where
-  // Double.compare alone would order -0.0 below +0.0.
-  private def better(a: Scored, b: Scored): Boolean = {
-    val c = java.lang.Double.compare(a._1 + 0.0, b._1 + 0.0)
-    c > 0 || (c == 0 && a._2 < b._2)
-  }
+  private final class TopK[I](k: Int, idOrder: Ordering[I])(implicit tt: TypeTag[I])
+      extends Aggregator[(Double, I), Seq[(Double, I)], Seq[(Double, I)]] {
 
-  // Bounded binary insert into an already-sorted buffer (round-11
-  // ADVICE): O(log k) probes + one O(k) array copy per ACCEPTED row,
-  // replacing the append + full re-sort (O(k log k) with k=800 at the
-  // q32 call site). The cheap reject path (full buffer, worse than the
-  // current tail) stays allocation-free.
-  private def boundedInsert[T](buf: Seq[T], in: T, k: Int,
-                               better: (T, T) => Boolean): Seq[T] =
-    if (buf.length >= k && better(buf.last, in)) buf
-    else {
-      val b = scala.collection.mutable.ArrayBuffer.from(buf)
-      var lo = 0
-      var hi = b.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (better(b(mid), in)) lo = mid + 1 else hi = mid
-      }
-      b.insert(lo, in)
-      if (b.length > k) b.remove(b.length - 1)
-      b.toSeq
+    // TOTAL order (round-11 ADVICE): java.lang.Double.compare gives NaN a
+    // fixed place (greater than every other double) — the SAME total
+    // order Spark's window sort uses for DOUBLE desc, so a NaN score
+    // ranks first in both forms instead of making the comparator
+    // non-transitive (a>b and b>a both false under IEEE > with NaN).
+    // `+ 0.0` folds -0.0 into +0.0 first (NaN unaffected), matching
+    // Spark's NormalizeFloatingNumbers treatment of sort keys where
+    // Double.compare alone would order -0.0 below +0.0.
+    private def better(a: (Double, I), b: (Double, I)): Boolean = {
+      val c = java.lang.Double.compare(a._1 + 0.0, b._1 + 0.0)
+      c > 0 || (c == 0 && idOrder.lt(a._2, b._2))
     }
 
-  class TopK(k: Int) extends Aggregator[Scored, Seq[Scored], Seq[Scored]] {
-    override def zero: Seq[Scored] = Seq.empty
+    // Bounded binary insert into an already-sorted buffer (round-11
+    // ADVICE): O(log k) probes + one O(k) array copy per ACCEPTED row,
+    // replacing the append + full re-sort (O(k log k) with k=800 at the
+    // q32 call site). The cheap reject path (full buffer, worse than the
+    // current tail) stays allocation-free.
+    private def insert(buf: Seq[(Double, I)], in: (Double, I)): Seq[(Double, I)] =
+      if (buf.length >= k && better(buf.last, in)) buf
+      else {
+        val b = scala.collection.mutable.ArrayBuffer.from(buf)
+        var lo = 0
+        var hi = b.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (better(b(mid), in)) lo = mid + 1 else hi = mid
+        }
+        b.insert(lo, in)
+        if (b.length > k) b.remove(b.length - 1)
+        b.toSeq
+      }
 
-    override def reduce(buf: Seq[Scored], in: Scored): Seq[Scored] = insert(buf, in)
-
-    override def merge(a: Seq[Scored], b: Seq[Scored]): Seq[Scored] =
+    override def zero: Seq[(Double, I)] = Seq.empty
+    override def reduce(buf: Seq[(Double, I)], in: (Double, I)): Seq[(Double, I)] =
+      insert(buf, in)
+    override def merge(a: Seq[(Double, I)], b: Seq[(Double, I)]): Seq[(Double, I)] =
       b.foldLeft(a)(insert)
-
-    private def insert(buf: Seq[Scored], in: Scored): Seq[Scored] =
-      boundedInsert(buf, in, k, better)
-
-    override def finish(r: Seq[Scored]): Seq[Scored] = r
-
-    override def bufferEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
+    override def finish(r: Seq[(Double, I)]): Seq[(Double, I)] = r
+    override def bufferEncoder: Encoder[Seq[(Double, I)]] = ExpressionEncoder()
+    override def outputEncoder: Encoder[Seq[(Double, I)]] = ExpressionEncoder()
   }
 
-  /** Column API: `topK(k)(score, id)` → array<struct<score,id>> sorted
+  /** `topK(k, order)(score, id)` → array<struct<score,id>> sorted
     * (score desc, id asc), length ≤ k.
     */
-  def topK(k: Int)(score: Column, id: Column): Column = {
-    implicit val enc: Encoder[Scored] = ExpressionEncoder()
-    udaf(new TopK(k)).apply(score, id)
+  private def topK[I: TypeTag](k: Int, idOrder: Ordering[I])(score: Column, id: Column): Column = {
+    implicit val enc: Encoder[(Double, I)] = ExpressionEncoder()
+    udaf(new TopK[I](k, idOrder)).apply(score, id)
   }
 
-  type Counted = (Long, String) // (count, word)
-
-  private def betterStr(a: Counted, b: Counted): Boolean =
-    a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-
-  /** String-keyed variant for vocabulary ranks: top-k by (count desc,
-    * word asc) — the bounded replacement for a rank window partitioned
-    * by a grouping key whose per-key row count is the VOCABULARY (q177's
-    * per-source token ranks). Same ≤ k map-side state per (partition,
-    * group) bound as [[TopK]].
+  /** The ranked top-k tail: per group of `by` (empty = one global group),
+    * the k best rows by (`score` desc, `id` asc) as
+    * (by…, rank, id, score), rank 1-based INT. `score` must be DOUBLE;
+    * `id` BIGINT or STRING (ties break in Spark's sort order for it).
+    * Equal to `row_number().over(partitionBy(by).orderBy(score.desc,
+    * id.asc))` filtered to rank ≤ k, NaN and ±0.0 included.
     */
-  class TopKStr(k: Int) extends Aggregator[Counted, Seq[Counted], Seq[Counted]] {
-    override def zero: Seq[Counted] = Seq.empty
-
-    override def reduce(buf: Seq[Counted], in: Counted): Seq[Counted] = insert(buf, in)
-
-    override def merge(a: Seq[Counted], b: Seq[Counted]): Seq[Counted] =
-      b.foldLeft(a)(insert)
-
-    private def insert(buf: Seq[Counted], in: Counted): Seq[Counted] =
-      boundedInsert(buf, in, k, betterStr)
-
-    override def finish(r: Seq[Counted]): Seq[Counted] = r
-
-    override def bufferEncoder: Encoder[Seq[Counted]] = ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[Counted]] = ExpressionEncoder()
-  }
-
-  /** Column API: `topKStr(k)(count, word)` → array<struct<count,word>>
-    * sorted (count desc, word asc), length ≤ k.
-    */
-  def topKStr(k: Int)(count: Column, word: Column): Column = {
-    implicit val enc: Encoder[Counted] = ExpressionEncoder()
-    udaf(new TopKStr(k)).apply(count, word)
+  def ranked(scored: DataFrame, by: Seq[String], score: String, id: String,
+             k: Int): DataFrame = {
+    val keys = by.map(col)
+    val top = scored.schema(id).dataType match {
+      case LongType => topK(k, Ordering.Long)(col(score), col(id))
+      case StringType => topK(k, sparkStringOrder)(col(score), col(id))
+      case t => throw new IllegalArgumentException(
+        s"ranked: id column '$id' is $t; only BIGINT and STRING ids rank")
+    }
+    scored.groupBy(keys: _*).agg(top.as("top"))
+      .select(keys :+ posexplode(col("top")).as(Seq("pos", "s")): _*)
+      .select(keys ++ Seq((col("pos") + 1).cast("int").as("rank"),
+        col("s._2").as(id), col("s._1").as(score)): _*)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.dedup.Dedup
+import graft.functions.TopKAggregator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -217,7 +218,7 @@ object CurationOps {
     * Scale: token counts are one keyed groupBy (map-side combine on the
     * zipf token key); the per-source rank is NOT a window over the
     * vocabulary (that is a per-source hot reducer) but the bounded
-    * `TopKAggregator.topKStr` — ≤ topR entries of map-side state per
+    * `TopKAggregator.ranked` — ≤ topR entries of map-side state per
     * (partition, source), |sources|·topR rows shuffled; the regression
     * folds ≤ topR rows per source.
     */
@@ -227,14 +228,11 @@ object CurationOps {
       .select(col("source"),
         explode(regexp_extract_all(col("txt"), lit("\\S+"), lit(0))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
-    val ranked = counts.groupBy("source")
-      .agg(graft.functions.TopKAggregator.topKStr(topR)(col("c"), col("w")).as("top"))
-      .select(col("source"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("source"), (col("pos") + 1).cast("long").as("rank"),
-        col("t._1").as("c"))
-    val pts = ranked
+    // counts rank as DOUBLE scores: exact below 2^53
+    val pts = TopKAggregator.ranked(counts.withColumn("c", col("c").cast("double")),
+        Seq("source"), "c", "w", topR)
       .withColumn("x", floor(log(col("rank").cast("double")) * 1e6 + 0.5).cast("long"))
-      .withColumn("y", floor(log(col("c").cast("double")) * 1e6 + 0.5).cast("long"))
+      .withColumn("y", floor(log(col("c")) * 1e6 + 0.5).cast("long"))
     pts.groupBy("source")
       .agg(count(lit(1)).as("n_ranked"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))

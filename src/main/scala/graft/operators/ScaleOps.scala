@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.dedup.Dedup
+import graft.functions.TopKAggregator
 import graft.text.TextAnalysis
 import graft.vector.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -300,41 +301,14 @@ object ScaleOps {
       "vec_id", "vec_id", "embedding", 0.45, 0.30)
   }
 
-  /** Brute-force top-k via the bounded TopK AGGREGATOR instead of a
-    * window: map-side partial top-k means only |queries|·k rows shuffle
-    * (the window form ships every scored pair). Identical output to q28,
-    * so they share an oracle.
+  /** Brute-force top-k through the bounded TopK aggregator: q28's
+    * `knnBrute` — kept as its own catalog row, so the two share an oracle.
     */
   def q48TopkAggregate(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    topkAggregate(
+    VectorOps.knnBrute(
       e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
       "vec_id", "vec_id", "embedding", 5)
-  }
-
-  /** The q48 plan as a reusable operator (also the zero-vector test's
-    * entry point — the guard must hold through the aggregator path, not
-    * just the window path).
-    */
-  def topkAggregate(queries: DataFrame, corpus: DataFrame, qId: String,
-                    cId: String, vecCol: String, k: Int): DataFrame = {
-    import graft.functions.TopKAggregator
-    val q = queries
-      .select(col(qId).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("nq", sqrt(graft.functions.DotProduct(col("qv"), col("qv"))))
-    val c = corpus
-      .select(col(cId).as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("nc", sqrt(graft.functions.DotProduct(col("cv"), col("cv"))))
-    broadcast(q).crossJoin(c)
-      // cosinePre carries the zero-norm guard — an all-zero vector must
-      // score 0.0, not trip ANSI DIVIDE_BY_ZERO (same rule as every other
-      // scoring path; VectorOps.cosinePre is the single source of truth)
-      .withColumn("score", VectorOps.cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .groupBy("query_id")
-      .agg(TopKAggregator.topK(k)(col("score"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as("score"))
       .orderBy("query_id", "rank")
   }
 
@@ -1250,11 +1224,9 @@ object ScaleOps {
     // The former unbounded window ran the running sum over EVERY doc of
     // a lang (one reducer per lang at corpus scale); it now sees ≤ 800
     // rows per partition by construction.
-    val pool = d.groupBy("lang")
-      .agg(graft.functions.TopKAggregator.topK(800)(
-        col("n_chars").cast("double"), col("doc_id")).as("top"))
-      .select(col("lang"), explode(col("top")).as("s"))
-      .select(col("lang"), col("s._2").as("doc_id"))
+    val pool = TopKAggregator.ranked(d.withColumn("score", col("n_chars").cast("double")),
+        Seq("lang"), "score", "doc_id", 800)
+      .select("lang", "doc_id")
     val w = Window.partitionBy("lang")
       .orderBy(col("n_chars").desc, col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.MisraGries
+import graft.functions.{MisraGries, TopKAggregator}
 import graft.text.{Chunker, CleanText, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -656,11 +656,8 @@ object TextOps {
     // each retriever's top-50 via the bounded aggregator: the global
     // rank window ordered the ENTIRE matching-doc score table (billions
     // of rows for a common term at 100 TB) in one reducer
-    val a = bm25Scores(spark, dir, terms)
-      .agg(graft.functions.TopKAggregator.topK(50)(
-        col("bm25"), col("doc_id")).as("top"))
-      .select(posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("s._2").as("doc_id"), (col("pos") + 1).cast("int").as("ra"))
+    val a = TopKAggregator.ranked(bm25Scores(spark, dir, terms), Nil, "bm25", "doc_id", 50)
+      .select(col("doc_id"), col("rank").as("ra"))
     // retriever B: query TF-IDF (q74's scoring restricted to the terms)
     val words = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
@@ -675,11 +672,8 @@ object TextOps {
       .groupBy("doc_id")
       .agg((floor(sum(col("tf") * log(col("n") / col("df"))) * 10000.0 + 0.5) / 10000.0)
         .as("tfidf"))
-    val b = tfidf
-      .agg(graft.functions.TopKAggregator.topK(50)(
-        col("tfidf"), col("doc_id")).as("top"))
-      .select(posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("s._2").as("doc_id"), (col("pos") + 1).cast("int").as("rb"))
+    val b = TopKAggregator.ranked(tfidf, Nil, "tfidf", "doc_id", 50)
+      .select(col("doc_id"), col("rank").as("rb"))
     a.join(b, Seq("doc_id"), "full_outer")
       .withColumn("rrf",
         coalesce(lit(1.0) / (col("ra") + 60.0), lit(0.0)) +

@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.functions.VecKernels
+import graft.functions.TopKAggregator.ranked
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
@@ -223,9 +224,10 @@ object Pq {
     // Bounded top-k (round-10 verdict item 3): the window form funnels
     // the ENTIRE scored corpus of each query through one reducer — at
     // 10⁹ codes that is a single-task sort per query.
-    VectorOps.rankTopK(codes.crossJoin(broadcast(qids))
+    ranked(codes.crossJoin(broadcast(qids))
       .select(col("query_id"), col("id").cast("long").as("neighbor_id"),
-        score(col("query_id"), lit(0L), col("codes")).as("qscore")), "qscore", k)
+        score(col("query_id"), lit(0L), col("codes")).as("qscore")),
+      Seq("query_id"), "qscore", "neighbor_id", k)
   }
 
   /** q172: PQ ADC top-5 over the embeddings table — m=4 subspaces of
@@ -249,29 +251,16 @@ object Pq {
     * candidates per query through the bounded aggregator, and stage 2
     * fetches float vectors for just |queries|·kCoarse rows via a keyed
     * join against the corpus — the full-precision side is read
-    * once, shuffled never (broadcast shortlist side under AQE). The
-    * stage-2 window is bounded at kCoarse rows per query by
-    * construction. Re-rank math ≡ `VectorOps.twoStageRetrieve` stage 2
+    * once, shuffled never (broadcast shortlist side under AQE). Stage 2
+    * is `VectorOps.rerankExact`, the one `twoStageRetrieve` runs
     * (cosinePre, 4-dp, (score desc, id asc) ties).
     */
   def pqShortlistRerank(queries: DataFrame, corpus: DataFrame, qId: String,
                         cId: String, vecCol: String, model: PqModel,
                         kCoarse: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val codes = pqEncode(corpus, cId, vecCol, model)
-    val short = pqTopK(queries, codes, qId, vecCol, model, kCoarse)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = queries.select(col(qId).cast("long").as("query_id"), col(vecCol).as("qv"))
-      .withColumn("nq", VectorOps.l2Norm(col("qv")))
-    val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("nc", VectorOps.l2Norm(col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    short.join(broadcast(q), "query_id").join(c, "neighbor_id")
-      .withColumn("score", VectorOps.cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "score")
+    VectorOps.rerankExact(pqTopK(queries, codes, qId, vecCol, model, kCoarse),
+      queries, corpus, qId, cId, vecCol, k)
   }
 
   /** q175: PQ-shortlist-50 → exact top-5 over the q172 split/model. */
@@ -434,9 +423,10 @@ object Pq {
     val score = adcScore(spark, qRows, model.pq)
     import spark.implicits._
     val probes = probePairs.toDF("query_id", "cl", "qc")
-    VectorOps.rankTopK(encoded.join(broadcast(probes), Seq("cl"))
+    ranked(encoded.join(broadcast(probes), Seq("cl"))
       .select(col("query_id"), col("id").cast("long").as("neighbor_id"),
-        score(col("query_id"), col("qc"), col("codes")).as("qscore")), "qscore", k)
+        score(col("query_id"), col("qc"), col("codes")).as("qscore")),
+      Seq("query_id"), "qscore", "neighbor_id", k)
   }
 
   /** q183: IVF-PQ ADC top-5 over the embeddings table — 4 coarse cells

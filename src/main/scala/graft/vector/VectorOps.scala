@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.functions.{DotProduct, VecKernels}
+import graft.functions.TopKAggregator.ranked
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,8 +19,9 @@ import org.apache.spark.sql.graftshim.PlanShim
   * dot/(na·nb), then round) is kept bit-identical to the DuckDB oracle.
   *
   * Scale notes (100 TB): the brute-force path broadcasts the QUERY side
-  * and streams the corpus — one narrow pass, no corpus shuffle; the window
-  * top-k shuffles only (query_id, score, id) tuples, never vectors. The
+  * and streams the corpus — one narrow pass, no corpus shuffle; the
+  * bounded top-k shuffles only ≤ k (score, id) pairs per (partition,
+  * query), never vectors. The
   * IVF path prunes the corpus to the probed clusters before scoring —
   * the standard trade at billion-vector scale; LSH bucketing (see
   * Dedup.scala) is the alternative when no cluster structure exists.
@@ -50,25 +52,6 @@ object VectorOps {
   def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
     when(na * nb === 0, lit(0.0))
       .otherwise(round(dot(a, b) / (na * nb), 4))
-
-  /** The bounded ranked tail of the top-k operators: per query_id, the k
-    * best rows by (scoreCol desc, neighbor_id asc) as (query_id, carry…,
-    * rank, neighbor_id, scoreCol). `carry` names columns functionally
-    * dependent on query_id that ride along in the group key.
-    * `TopKAggregator` keeps ≤ k map-side entries per (partition, query),
-    * so only |queries|·k rows shuffle — a row_number window would sort
-    * each query's whole scored corpus in one reducer.
-    */
-  private[vector] def rankTopK(scored: DataFrame, scoreCol: String, k: Int,
-                               carry: Seq[String] = Nil): DataFrame = {
-    val keys = col("query_id") +: carry.map(col)
-    scored.groupBy("query_id", carry: _*)
-      .agg(graft.functions.TopKAggregator.topK(k)(
-        col(scoreCol), col("neighbor_id")).as("top"))
-      .select(keys :+ posexplode(col("top")).as(Seq("pos", "s")): _*)
-      .select(keys ++ Seq((col("pos") + 1).cast("int").as("rank"),
-        col("s._2").as("neighbor_id"), col("s._1").as(scoreCol)): _*)
-  }
 
   /** Group-centroid cosine matrix — the corpus-level redundancy
     * datasheet: mean embedding per group (source, snapshot, shard …),
@@ -518,9 +501,10 @@ object VectorOps {
     val c = quantizeInt8(corpus, vecCol)
       .select(col(cId).cast("long").as("neighbor_id"), col("qvec").as("qb"), col("q_scale").as("sb"))
     // bounded top-k, not a full-corpus-per-query window (q172's lesson)
-    rankTopK(broadcast(q).crossJoin(c)
+    ranked(broadcast(q).crossJoin(c)
       .withColumn("qscore", graft.functions.Rounding.halfUp(
-        dot(col("qa"), col("qb")) * col("sa") * col("sb"), 4)), "qscore", k)
+        dot(col("qa"), col("qb")) * col("sa") * col("sb"), 4)),
+      Seq("query_id"), "qscore", "neighbor_id", k)
   }
 
   /** Two-stage retrieval — the production serving pattern: a cheap
@@ -532,20 +516,28 @@ object VectorOps {
     */
   def twoStageRetrieve(queries: DataFrame, corpus: DataFrame, qId: String,
                        cId: String, vecCol: String, k: Int,
-                       shortlist: Int): DataFrame = {
-    val short = knnQuantized(queries, corpus, qId, cId, vecCol, shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = queries.select(col(qId).as("query_id"), col(vecCol).as("qv"))
+                       shortlist: Int): DataFrame =
+    rerankExact(knnQuantized(queries, corpus, qId, cId, vecCol, shortlist),
+      queries, corpus, qId, cId, vecCol, k)
+
+  /** Stage 2 of the shortlist retrievers (`twoStageRetrieve`,
+    * `Pq.pqShortlistRerank`): the exact cosine (`cosinePre`, 4 dp) of
+    * each (query_id, neighbor_id) pair of stage 1's ranked `short`,
+    * ranked top-k as (query_id, rank, neighbor_id, score). Only the
+    * shortlist's |queries|·shortlist rows fetch float vectors; the bounded
+    * aggregator keeps ≤ k of them per (partition, query).
+    */
+  private[vector] def rerankExact(short: DataFrame, queries: DataFrame,
+                                  corpus: DataFrame, qId: String, cId: String,
+                                  vecCol: String, k: Int): DataFrame = {
+    val q = queries.select(col(qId).cast("long").as("query_id"), col(vecCol).as("qv"))
       .withColumn("nq", l2Norm(col("qv")))
-    val c = corpus.select(col(cId).as("neighbor_id"), col(vecCol).as("cv"))
+    val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(vecCol).as("cv"))
       .withColumn("nc", l2Norm(col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    short.join(broadcast(q), "query_id").join(c, "neighbor_id")
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "score")
+    ranked(short.select("query_id", "neighbor_id")
+      .join(broadcast(q), "query_id").join(c, "neighbor_id")
+      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
+      Seq("query_id"), "score", "neighbor_id", k)
   }
 
   /** Maximal-marginal-relevance diversified re-rank — the classic RAG
@@ -953,8 +945,8 @@ object VectorOps {
     verified.orderBy("id_a", "id_b")
   }
 
-  /** Exact brute-force top-k: broadcast queries × corpus, window top-k.
-    * Ties broken by neighbor id for determinism.
+  /** Exact brute-force top-k: broadcast queries × corpus, bounded
+    * top-k. Ties broken by neighbor id for determinism.
     */
   def knnBrute(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
                vecCol: String, k: Int): DataFrame = {
@@ -965,9 +957,9 @@ object VectorOps {
     // bounded top-k (q172's lesson applied to the baseline): the
     // row_number window funneled the ENTIRE scored corpus of each query
     // through one reducer
-    rankTopK(broadcast(q).crossJoin(c)
+    ranked(broadcast(q).crossJoin(c)
       .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
-      "score", k)
+      Seq("query_id"), "score", "neighbor_id", k)
   }
 
   /** IVF-style ANN: centroids = per-cluster mean vector; each query probes
@@ -995,9 +987,9 @@ object VectorOps {
     // the probed-members pool is nProbe·N/k rows per query — bounded
     // relative to the corpus but still too big for one reducer at 10⁹
     // vectors; the typed aggregator keeps it ≤ k map-side entries
-    rankTopK(probed.join(c, "cl")
+    ranked(probed.join(c, "cl")
       .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
-      "score", k)
+      Seq("query_id"), "score", "neighbor_id", k)
   }
 
   /** recall@k with an expected-label membership test (mirror of the
@@ -1013,9 +1005,9 @@ object VectorOps {
       .withColumn("nc", l2Norm(col("cv")))
     // bounded top-k instead of a full-corpus-per-query window; the hit
     // labels re-join on the |queries|·k surviving ids only
-    val top = rankTopK(broadcast(q).crossJoin(c)
+    val top = ranked(broadcast(q).crossJoin(c)
       .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
-      "score", k, carry = Seq("expected"))
+      Seq("query_id", "expected"), "score", "neighbor_id", k)
     val hits = top.join(c.select(col("neighbor_id"), col("nl")), Seq("neighbor_id"))
       .groupBy("query_id")
       .agg(max(when(col("nl") === col("expected"), 1).otherwise(0)).as("hit"))
@@ -1026,8 +1018,8 @@ object VectorOps {
     * same-label relevance: reciprocal rank of the first relevant hit
     * (MRR's per-query term) and nDCG@k with the ideal DCG truncated at
     * min(relevant-in-corpus, k). Same shape as recallAtK — queries
-    * broadcast, corpus never shuffles, the window ships only
-    * (query_id, rank, rel) — plus a tiny per-label count agg broadcast
+    * broadcast, corpus never shuffles, the bounded top-k ships only
+    * ≤ k (score, id) pairs per (partition, query) — plus a tiny per-label count agg broadcast
     * back for the IDCG denominator. The ≤k-element IDCG sum runs
     * through an `aggregate` HOF: interpreted, but over at most k
     * elements per QUERY (not per corpus row), so it never touches the
@@ -1046,9 +1038,9 @@ object VectorOps {
     // bounded top-k; rank = explode position (the aggregator's order is
     // exactly the window's (score desc, id asc)); labels re-join on the
     // |queries|·k survivors only
-    val perQ = rankTopK(broadcast(q).crossJoin(c)
+    val perQ = ranked(broadcast(q).crossJoin(c)
       .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
-      "score", k, carry = Seq("expected"))
+      Seq("query_id", "expected"), "score", "neighbor_id", k)
       .join(c.select(col("neighbor_id"), col("nl")), Seq("neighbor_id"))
       .withColumn("rel", when(col("nl") === col("expected"), 1.0).otherwise(0.0))
       .groupBy("query_id", "expected")
@@ -1076,7 +1068,7 @@ object VectorOps {
     * the negatives that actually teach a ranker (random negatives are
     * trivially separable; the hard ones sit just under the decision
     * boundary). Identical shape to knnBrute with the relevance filter
-    * applied BEFORE the window, so the rank is over negatives only.
+    * applied BEFORE the top-k, so the rank is over negatives only.
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, qId: String,
                     cId: String, vecCol: String, labelCol: String,
@@ -1089,9 +1081,10 @@ object VectorOps {
       .withColumn("nc", l2Norm(col("cv")))
     // relevance filter BEFORE the bounded top-k, so the rank is over
     // negatives only — same semantics as the former window form
-    rankTopK(broadcast(q).crossJoin(c)
+    ranked(broadcast(q).crossJoin(c)
       .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
-      .filter(col("nl") =!= col("expected")), "score", k)
+      .filter(col("nl") =!= col("expected")),
+      Seq("query_id"), "score", "neighbor_id", k)
       .orderBy("query_id", "rank")
   }
 

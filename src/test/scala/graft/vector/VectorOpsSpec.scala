@@ -1,6 +1,9 @@
 package graft.vector
 
 import graft.{SparkSpec, Tables}
+import graft.functions.TopKAggregator
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class VectorOpsSpec extends SparkSpec {
@@ -168,21 +171,72 @@ class VectorOpsSpec extends SparkSpec {
     }
   }
 
+  /** The reference `ranked` must equal: a row_number window over the
+    * group, ordered (score desc, id asc), cut at k — collected in
+    * (by…, rank) order.
+    */
+  private def windowTopK(df: DataFrame, by: Seq[String], score: String,
+                         id: String, k: Int): Seq[Row] = {
+    val w = Window.partitionBy(by.map(col): _*).orderBy(col(score).desc, col(id).asc)
+    df.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select(by.map(col) ++ Seq(col("rank"), col(id), col(score)): _*)
+      .orderBy((by :+ "rank").map(col): _*).collect().toSeq
+  }
+
+  private def rankedTopK(df: DataFrame, by: Seq[String], score: String,
+                         id: String, k: Int): Seq[Row] =
+    TopKAggregator.ranked(df, by, score, id, k)
+      .orderBy((by :+ "rank").map(col): _*).collect().toSeq
+
   test("TopK aggregator equals the window top-k exactly") {
-    import graft.operators.ScaleOps
-    val viaAgg = ScaleOps.q48TopkAggregate(spark, sfDir).collect().toSeq
-    val viaWindow = ScaleOps.q28KnnBrute(spark, sfDir).collect().toSeq
-    assert(viaAgg == viaWindow)
+    // ranked vs the row_number reference on tied, NaN and signed-zero
+    // scores, per group and global, k below and above the group sizes
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val scores = Array(1.0, 0.5, 0.0, -0.0, Double.NaN, -1.0)
+    // group 0: 40 rows over 6 score values (many ties), group 1: 12,
+    // group 2: 3 rows (fewer than every k ≥ 3 below)
+    val rows = Seq(0 -> 40, 1 -> 12, 2 -> 3).flatMap { case (g, n) =>
+      rnd.shuffle((-n / 2 until n - n / 2).map(_ * 7L + g)).map(i =>
+        (g, i, scores(rnd.nextInt(scores.length))))
+    }
+    // 4 partitions so map-side partial top-ks really merge
+    val df = rows.toDF("g", "id", "score").repartition(4)
+    for (k <- Seq(1, 3, 5, 50)) {
+      val want = windowTopK(df, Seq("g"), "score", "id", k)
+      assert(want.exists(r => r.getDouble(3).isNaN))
+      assert(rankedTopK(df, Seq("g"), "score", "id", k) == want, s"k=$k")
+      assert(rankedTopK(df, Nil, "score", "id", k) ==
+        windowTopK(df, Nil, "score", "id", k), s"global k=$k")
+    }
+    // NaN ranks first, -0.0 ties +0.0 and falls back to the id
+    val zeros = Seq((1L, -0.0), (2L, 0.0), (3L, Double.NaN), (0L, 0.0))
+      .toDF("id", "score")
+    assert(rankedTopK(zeros, Nil, "score", "id", 4).map(_.getLong(1)) == Seq(3L, 0L, 1L, 2L))
+    assert(rankedTopK(zeros, Nil, "score", "id", 4) == windowTopK(zeros, Nil, "score", "id", 4))
+  }
+
+  test("ranked breaks String ties in Spark's code-point order, not UTF-16's") {
+    import spark.implicits._
+    // U+1F600 is the surrogate pair D83D DE00: before U+FF01 in UTF-16
+    // units, after it in code points (UTF-8 bytes), which Spark sorts by
+    val ids = Seq("\uD83D\uDE00", "\uFF01", "b", "a", "\uFF01a")
+    val df = ids.map(w => ("s", w, 1.0)).toDF("source", "w", "c").repartition(3)
+    val got = rankedTopK(df, Seq("source"), "c", "w", 3)
+    assert(got.map(_.getString(2)) == Seq("a", "b", "\uFF01"))
+    assert(got == windowTopK(df, Seq("source"), "c", "w", 3))
+    assert(rankedTopK(df, Seq("source"), "c", "w", 9) ==
+      windowTopK(df, Seq("source"), "c", "w", 9))
   }
 
   test("TopK aggregator path survives zero-norm vectors (q48's plan, not just cosine())") {
-    import graft.operators.ScaleOps
+    // q48 is knnBrute: the guard must hold through the aggregator path
     import spark.implicits._
     val qs = Seq((0L, Array(0f, 0f, 0f)), (1L, Array(1f, 0f, 0f)))
       .toDF("vec_id", "embedding")
     val cs = Seq((10L, Array(1f, 1f, 0f)), (11L, Array(0f, 0f, 0f)))
       .toDF("vec_id", "embedding")
-    val rows = ScaleOps.topkAggregate(qs, cs, "vec_id", "vec_id", "embedding", 2)
+    val rows = VectorOps.knnBrute(qs, cs, "vec_id", "vec_id", "embedding", 2)
       .collect()
     assert(rows.length == 4) // no ANSI DIVIDE_BY_ZERO; all pairs scored
     // every pair touching a zero vector scores exactly 0.0

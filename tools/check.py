@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Local dev harness mirroring the driver's DuckDB-oracle compare.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [names...]
 
 Loads each <verifyOutDir>/<name> parquet (Spark result), runs the matching
 SQL from oracle_sql.json in DuckDB with the sf tables registered as views,
 sorts columns by name and rows by all columns, and diffs exactly.
+Names after the two paths check only those queries; a name with neither
+an oracle nor a dump exits 2.
 Not part of the Scala deliverable — dev tooling only.
 """
 import json, sys, glob, os
@@ -32,6 +34,13 @@ def main(sf_dir, out_dir, names=()):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{pat}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     if names:  # dev-loop subset, mirrors Verify's SPARK_GRAFT_ONLY
+        # a mistyped name must fail, not check nothing and pass
+        dumped = {os.path.basename(d.rstrip("/")) for d in glob.glob(f"{out_dir}/*/")}
+        unknown = sorted(names - oracles.keys() - dumped)
+        if unknown:
+            print("names with neither an oracle nor a dump: " +
+                  ", ".join(f"'{n}'" for n in unknown))
+            return 2
         oracles = {k: v for k, v in oracles.items() if k in names}
     n_pass = n_fail = 0
     for name in sorted(oracles):
