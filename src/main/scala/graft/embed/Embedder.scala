@@ -30,30 +30,17 @@ final class HashingEmbedder(val dim: Int = 384, seed: Int = 42) extends Embedder
 
   def encode(texts: Seq[String]): Seq[Array[Float]] = texts.map(encodeOne)
 
-  def encodeOne(text: String): Array[Float] = {
-    val v = new Array[Float](dim)
-    if (text != null) {
-      val tokens = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-      var t = 0
-      while (t < tokens.length) {
-        val tok = tokens(t)
-        val h1 = MurmurHash3.stringHash(tok, seed)
-        val h2 = MurmurHash3.stringHash(tok, seed ^ 0x5f3759df)
-        // two buckets per token with ±1 votes — a 2-sparse random projection
-        v(Math.floorMod(h1, dim)) += (if ((h1 >>> 16 & 1) == 0) 1f else -1f)
-        v(Math.floorMod(h2, dim)) += (if ((h2 >>> 16 & 1) == 0) 1f else -1f)
-        t += 1
-      }
+  def encodeOne(text: String): Array[Float] = Embedder.normalized(dim, text) { (tokens, v) =>
+    var t = 0
+    while (t < tokens.length) {
+      val tok = tokens(t)
+      val h1 = MurmurHash3.stringHash(tok, seed)
+      val h2 = MurmurHash3.stringHash(tok, seed ^ 0x5f3759df)
+      // two buckets per token with ±1 votes — a 2-sparse random projection
+      v(Math.floorMod(h1, dim)) += (if ((h1 >>> 16 & 1) == 0) 1f else -1f)
+      v(Math.floorMod(h2, dim)) += (if ((h2 >>> 16 & 1) == 0) 1f else -1f)
+      t += 1
     }
-    var norm = 0.0
-    var i = 0
-    while (i < dim) { norm += v(i).toDouble * v(i); i += 1 }
-    if (norm > 0) {
-      val inv = (1.0 / math.sqrt(norm)).toFloat
-      i = 0
-      while (i < dim) { v(i) *= inv; i += 1 }
-    }
-    v
   }
 }
 
@@ -74,22 +61,33 @@ final class LinearProjectionEmbedder(val dim: Int = 384, seed: Long = 7L)
 
   def encode(texts: Seq[String]): Seq[Array[Float]] = texts.map(encodeOne)
 
-  def encodeOne(text: String): Array[Float] = {
-    val v = new Array[Float](dim)
-    if (text != null) {
-      val tokens = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-      var t = 0
-      while (t < tokens.length) {
-        val base = seed * 0x100000001b3L + MurmurHash3.stringHash(tokens(t), 17).toLong
-        var i = 0
-        while (i < dim) {
-          // one ±1 weight per (token, output dim) from the deterministic stream
-          v(i) += (if ((mix64(base + i * 0x9E3779B9L) & 1L) == 0L) 1f else -1f)
-          i += 1
-        }
-        t += 1
+  def encodeOne(text: String): Array[Float] = Embedder.normalized(dim, text) { (tokens, v) =>
+    var t = 0
+    while (t < tokens.length) {
+      val base = seed * 0x100000001b3L + MurmurHash3.stringHash(tokens(t), 17).toLong
+      var i = 0
+      while (i < dim) {
+        // one ±1 weight per (token, output dim) from the deterministic stream
+        v(i) += (if ((mix64(base + i * 0x9E3779B9L) & 1L) == 0L) 1f else -1f)
+        i += 1
       }
+      t += 1
     }
+  }
+}
+
+object Embedder {
+  val default: HashingEmbedder = new HashingEmbedder()
+
+  /** The tokenize-and-normalize frame of the bag-of-tokens embedders:
+    * `text` lowercased and split on whitespace (null ⇒ no tokens),
+    * `accumulate` adds the tokens' votes into a zero `dim`-vector, and
+    * the result is L2-normalized (the zero vector stays zero).
+    */
+  private[embed] def normalized(dim: Int, text: String)(
+      accumulate: (Array[String], Array[Float]) => Unit): Array[Float] = {
+    val v = new Array[Float](dim)
+    if (text != null) accumulate(text.toLowerCase.split("\\s+").filter(_.nonEmpty), v)
     var norm = 0.0
     var i = 0
     while (i < dim) { norm += v(i).toDouble * v(i); i += 1 }
@@ -100,10 +98,6 @@ final class LinearProjectionEmbedder(val dim: Int = 384, seed: Long = 7L)
     }
     v
   }
-}
-
-object Embedder {
-  val default: HashingEmbedder = new HashingEmbedder()
 
   /** Append an `ArrayType(FloatType)` embedding column. Runs the BATCH
     * path internally (`mapPartitions`, batch=64 like the reference's

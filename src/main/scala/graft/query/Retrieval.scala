@@ -61,9 +61,8 @@ object Retrieval {
     val q = Embedder.withEmbedding(
       queries.select(col("query_id"), col("query_text")), "query_text", "qv",
       embedder = embedder)
-    val scored = broadcast(q).crossJoin(
-        index.select(col("doc_id"), col("passage_id"), col("passage"), col("vec")))
-      .withColumn("score", VectorOps.cosine(col("qv"), col("vec")))
+    val scored = VectorOps.exactScores(q,
+      index.select(col("doc_id"), col("passage_id"), col("passage"), col("vec")), cVec = "vec")
     // over-fetch pool = max(2k, k+4) (vector_store.py:149-150)
     val pool = math.max(2 * k, k + 4)
     val wPool = Window.partitionBy("query_id")

@@ -267,18 +267,26 @@ object VectorOps {
     * (id, vec, nv, cl) with one row per (vector, probed cluster).
     */
   def ivfAssign(vecs: DataFrame, idCol: String, vecCol: String,
-                labelCol: String, nProbe: Int): DataFrame = {
-    val centroids = labelCentroids(vecs, col(labelCol), vecCol)
-      .withColumn("ncent", l2Norm(col("centroid")))
-    val v = vecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("nv", l2Norm(col("vec")))
-    val wProbe = Window.partitionBy("id").orderBy(col("cscore").desc, col("cl").asc)
-    v.crossJoin(broadcast(centroids))
-      .withColumn("cscore",
-        cosinePre(col("vec"), col("centroid"), col("nv"), col("ncent")))
+                labelCol: String, nProbe: Int): DataFrame =
+    probe(normed(vecs.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "nv"),
+      vecs, labelCol, vecCol, nProbe)
+
+  /** The IVF probe of `ivfAssign` and `knnIvf`: each row of the normed
+    * `side` (key, vector, norm) joins the `nProbe` per-label mean
+    * centroids of `labeled` with the highest rounded cosine, ties to the
+    * lower cluster id. Returns the side's columns and `cl`, one row per
+    * (key, probed cluster). The k centroids are broadcast.
+    */
+  private def probe(side: DataFrame, labeled: DataFrame, labelCol: String,
+                    vecCol: String, nProbe: Int): DataFrame = {
+    val Array(key, vec, norm) = side.columns
+    val centroids = normed(labelCentroids(labeled, col(labelCol), vecCol), "centroid", "ncent")
+    val wProbe = Window.partitionBy(key).orderBy(col("cscore").desc, col("cl").asc)
+    side.crossJoin(broadcast(centroids))
+      .withColumn("cscore", cosinePre(col(vec), col("centroid"), col(norm), col("ncent")))
       .withColumn("prk", row_number().over(wProbe))
       .filter(col("prk") <= nProbe)
-      .select(col("id"), col("vec"), col("nv"), col("cl"))
+      .select(key, vec, norm, "cl")
   }
 
   /** The per-label mean centroids `ivfAssign` derives, collected to the
@@ -329,8 +337,7 @@ object VectorOps {
       // stable sort on -score alone preserves the cl tie-break
       (0 until k).sortBy(i => -scores(i)).take(nProbe).map(bCls(_)).toArray
     }
-    vecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("nv", l2Norm(col("vec")))
+    normed(vecs.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "nv")
       .withColumn("cl", explode(probes(col("vec").cast("array<float>"), col("nv"))))
       .select(col("id"), col("vec"), col("nv"), col("cl"))
   }
@@ -530,10 +537,9 @@ object VectorOps {
   private[vector] def rerankExact(short: DataFrame, queries: DataFrame,
                                   corpus: DataFrame, qId: String, cId: String,
                                   vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(qId).cast("long").as("query_id"), col(vecCol).as("qv"))
-      .withColumn("nq", l2Norm(col("qv")))
-    val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("nc", l2Norm(col("cv")))
+    val q = normed(queries.select(col(qId).cast("long").as("query_id"), col(vecCol).as("qv")),
+      "qv", "nq")
+    val c = normed(corpusSide(corpus, cId, vecCol), "cv", "nc")
     ranked(short.select("query_id", "neighbor_id")
       .join(broadcast(q), "query_id").join(c, "neighbor_id")
       .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
@@ -945,22 +951,44 @@ object VectorOps {
     verified.orderBy("id_a", "id_b")
   }
 
+  /** One side of an exact cosine score: `side` plus the L2 norm of its
+    * `vec` column as `norm`, computed once per row of the side — never
+    * once per scored pair.
+    */
+  private def normed(side: DataFrame, vec: String, norm: String): DataFrame =
+    side.withColumn(norm, l2Norm(col(vec)))
+
+  /** Exact cosine score of every (query, corpus) row pair: the one
+    * scoring step of knnBrute, recallAtK, rankMetrics, hardNegatives,
+    * thresholdCascade and `Retrieval.retrieve`. Both sides arrive
+    * projected to their key, vector and carried columns; each is normed
+    * once (`nq`, `nc`), the query side is broadcast and the corpus
+    * streams past it, and `score` is [[cosinePre]] of the two vectors.
+    */
+  private[graft] def exactScores(q: DataFrame, c: DataFrame, qVec: String = "qv",
+                                 cVec: String = "cv", score: String = "score"): DataFrame =
+    broadcast(normed(q, qVec, "nq")).crossJoin(normed(c, cVec, "nc"))
+      .withColumn(score, cosinePre(col(qVec), col(cVec), col("nq"), col("nc")))
+
+  /** (query_id, qv, carry…): the query side of the exact scorer. */
+  private def querySide(queries: DataFrame, qId: String, vecCol: String,
+                        carry: Column*): DataFrame =
+    queries.select(col(qId).as("query_id") +: col(vecCol).as("qv") +: carry: _*)
+
+  /** (neighbor_id as BIGINT, cv, carry…): the corpus side of the exact scorer. */
+  private def corpusSide(corpus: DataFrame, cId: String, vecCol: String,
+                         carry: Column*): DataFrame =
+    corpus.select(col(cId).cast("long").as("neighbor_id") +: col(vecCol).as("cv") +: carry: _*)
+
   /** Exact brute-force top-k: broadcast queries × corpus, bounded
     * top-k. Ties broken by neighbor id for determinism.
     */
   def knnBrute(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
-               vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(qId).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("nq", l2Norm(col("qv")))
-    val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("nc", l2Norm(col("cv")))
-    // bounded top-k (q172's lesson applied to the baseline): the
-    // row_number window funneled the ENTIRE scored corpus of each query
-    // through one reducer
-    ranked(broadcast(q).crossJoin(c)
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
+               vecCol: String, k: Int): DataFrame =
+    // bounded top-k (q172's lesson applied to the baseline): no scored
+    // corpus of a query ever funnels through one reducer
+    ranked(exactScores(querySide(queries, qId, vecCol), corpusSide(corpus, cId, vecCol)),
       Seq("query_id"), "score", "neighbor_id", k)
-  }
 
   /** IVF-style ANN: centroids = per-cluster mean vector; each query probes
     * the `nProbe` nearest centroids and scores only those clusters'
@@ -969,21 +997,9 @@ object VectorOps {
     */
   def knnIvf(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
              vecCol: String, labelCol: String, k: Int, nProbe: Int = 2): DataFrame = {
-    val centroids = labelCentroids(corpus, col(labelCol), vecCol)
-      .withColumn("ncent", l2Norm(col("centroid")))
-    val q = queries.select(col(qId).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("nq", l2Norm(col("qv")))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cscore").desc, col("cl").asc)
-    val probed = q.crossJoin(broadcast(centroids))
-      .withColumn("cscore",
-        cosinePre(col("qv"), col("centroid"), col("nq"), col("ncent")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= nProbe)
-      .select("query_id", "qv", "nq", "cl")
-    val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(vecCol).as("cv"),
-        col(labelCol).as("cl"))
-      .withColumn("nc", l2Norm(col("cv")))
+    val probed = probe(normed(querySide(queries, qId, vecCol), "qv", "nq"),
+      corpus, labelCol, vecCol, nProbe)
+    val c = normed(corpusSide(corpus, cId, vecCol, col(labelCol).as("cl")), "cv", "nc")
     // the probed-members pool is nProbe·N/k rows per query — bounded
     // relative to the corpus but still too big for one reducer at 10⁹
     // vectors; the typed aggregator keeps it ≤ k map-side entries
@@ -992,27 +1008,31 @@ object VectorOps {
       Seq("query_id"), "score", "neighbor_id", k)
   }
 
+  /** The labeled exact top-k under recallAtK and rankMetrics: per query
+    * (its label as `expected`), the k highest-cosine corpus items, each
+    * with `rel` = 1.0 when its label equals `expected`, else 0.0.
+    * Returns (query_id, expected, rank, neighbor_id, rel); the corpus
+    * labels re-join on the |queries|·k survivors only.
+    */
+  private def labeledTopK(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
+                          vecCol: String, labelCol: String, k: Int): DataFrame = {
+    val c = corpusSide(corpus, cId, vecCol, col(labelCol).as("nl"))
+    ranked(exactScores(querySide(queries, qId, vecCol, col(labelCol).as("expected")), c),
+      Seq("query_id", "expected"), "score", "neighbor_id", k)
+      .join(c.select(col("neighbor_id"), col("nl")), Seq("neighbor_id"))
+      .select(col("query_id"), col("expected"), col("rank"), col("neighbor_id"),
+        when(col("nl") === col("expected"), 1.0).otherwise(0.0).as("rel"))
+  }
+
   /** recall@k with an expected-label membership test (mirror of the
-    * reference's recall@10 gate, eval_snapshot.py:91-108).
+    * reference's recall@10 gate, eval_snapshot.py:91-108): the average
+    * over queries of whether any of the k nearest shares the label.
     */
   def recallAtK(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
-                vecCol: String, labelCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(qId).as("query_id"), col(vecCol).as("qv"),
-        col(labelCol).as("expected"))
-      .withColumn("nq", l2Norm(col("qv")))
-    val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(vecCol).as("cv"),
-        col(labelCol).as("nl"))
-      .withColumn("nc", l2Norm(col("cv")))
-    // bounded top-k instead of a full-corpus-per-query window; the hit
-    // labels re-join on the |queries|·k surviving ids only
-    val top = ranked(broadcast(q).crossJoin(c)
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
-      Seq("query_id", "expected"), "score", "neighbor_id", k)
-    val hits = top.join(c.select(col("neighbor_id"), col("nl")), Seq("neighbor_id"))
-      .groupBy("query_id")
-      .agg(max(when(col("nl") === col("expected"), 1).otherwise(0)).as("hit"))
-    hits.agg(round(avg("hit"), 4).as("recall"))
-  }
+                vecCol: String, labelCol: String, k: Int): DataFrame =
+    labeledTopK(queries, corpus, qId, cId, vecCol, labelCol, k)
+      .groupBy("query_id").agg(max("rel").as("hit"))
+      .agg(round(avg("hit"), 4).as("recall"))
 
   /** Per-query rank metrics over exact cosine top-k with binary
     * same-label relevance: reciprocal rank of the first relevant hit
@@ -1029,25 +1049,12 @@ object VectorOps {
                   cId: String, vecCol: String, labelCol: String,
                   k: Int): DataFrame = {
     val ln2 = math.log(2.0)
-    val q = queries.select(col(qId).as("query_id"), col(vecCol).as("qv"),
-        col(labelCol).as("expected"))
-      .withColumn("nq", l2Norm(col("qv")))
-    val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(vecCol).as("cv"),
-        col(labelCol).as("nl"))
-      .withColumn("nc", l2Norm(col("cv")))
-    // bounded top-k; rank = explode position (the aggregator's order is
-    // exactly the window's (score desc, id asc)); labels re-join on the
-    // |queries|·k survivors only
-    val perQ = ranked(broadcast(q).crossJoin(c)
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc"))),
-      Seq("query_id", "expected"), "score", "neighbor_id", k)
-      .join(c.select(col("neighbor_id"), col("nl")), Seq("neighbor_id"))
-      .withColumn("rel", when(col("nl") === col("expected"), 1.0).otherwise(0.0))
+    val perQ = labeledTopK(queries, corpus, qId, cId, vecCol, labelCol, k)
       .groupBy("query_id", "expected")
       .agg(
         max(col("rel") / col("rank")).as("rr"),
         sum(col("rel") / (log(col("rank").cast("double") + 1.0) / ln2)).as("dcg"))
-    val labCounts = c.groupBy(col("nl").as("expected"))
+    val labCounts = corpus.select(col(labelCol).as("nl")).groupBy(col("nl").as("expected"))
       .agg(count(lit(1)).as("n_rel"))
     perQ.join(broadcast(labCounts), "expected")
       .withColumn("m", least(col("n_rel"), lit(k)).cast("int"))
@@ -1072,21 +1079,14 @@ object VectorOps {
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, qId: String,
                     cId: String, vecCol: String, labelCol: String,
-                    k: Int): DataFrame = {
-    val q = queries.select(col(qId).as("query_id"), col(vecCol).as("qv"),
-        col(labelCol).as("expected"))
-      .withColumn("nq", l2Norm(col("qv")))
-    val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(vecCol).as("cv"),
-        col(labelCol).as("nl"))
-      .withColumn("nc", l2Norm(col("cv")))
+                    k: Int): DataFrame =
     // relevance filter BEFORE the bounded top-k, so the rank is over
     // negatives only — same semantics as the former window form
-    ranked(broadcast(q).crossJoin(c)
-      .withColumn("score", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
+    ranked(exactScores(querySide(queries, qId, vecCol, col(labelCol).as("expected")),
+        corpusSide(corpus, cId, vecCol, col(labelCol).as("nl")))
       .filter(col("nl") =!= col("expected")),
       Seq("query_id"), "score", "neighbor_id", k)
       .orderBy("query_id", "rank")
-  }
 
   /** Widening threshold cascade (reference main.py:374-381): primary
     * threshold, and only queries with zero primary hits fall back to the
@@ -1096,18 +1096,15 @@ object VectorOps {
   def thresholdCascade(queries: DataFrame, corpus: DataFrame, qId: String,
                        cId: String, vecCol: String,
                        tHigh: Double, tLow: Double): DataFrame = {
-    val q = queries.select(col(qId).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("nq", l2Norm(col("qv")))
-    val c = corpus.select(col(cId).as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("nc", l2Norm(col("cv")))
     // two narrow corpus passes, ZERO wide shuffle: the former
     // max().over(partitionBy(query_id)) put every scored corpus row of
     // a query through one reducer. Pass 1 reduces the per-query max
     // with map-side combine (|queries| rows out); pass 2 re-scores and
     // filters against the broadcast maxima. Re-scoring is a narrow
     // scan-stage recompute — cheaper at scale than one hot reducer.
-    val scored = broadcast(q).crossJoin(c)
-      .withColumn("cos", cosinePre(col("qv"), col("cv"), col("nq"), col("nc")))
+    // The neighbor id keeps the corpus's own type here.
+    val scored = exactScores(querySide(queries, qId, vecCol),
+      corpus.select(col(cId).as("neighbor_id"), col(vecCol).as("cv")), score = "cos")
     val qmax = scored.groupBy("query_id").agg(max("cos").as("qmax"))
     scored.join(broadcast(qmax), Seq("query_id"))
       .filter((col("qmax") >= tHigh && col("cos") >= tHigh) ||

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** API.md freshness gate (round-9 verdict item 8): API.md is hand
   * maintained; this spec fails the build when a public operator lands
   * undocumented. Name-grep level by design — every top-level public
-  * `def`/`val` of the five operator packages must be MENTIONED in
+  * `def`/`val` of the five operator packages and of `query` and
+  * `embed` (Retrieval, the embedders) must be MENTIONED in
   * API.md, either literally or as its base name for the documented
   * variant-suffix shorthands (`foo`(+Udf) covers fooUdf, etc.).
   * `qNN*` catalog entry points are covered by §8's blanket contract
@@ -13,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ApiDocSpec extends AnyFunSuite {
 
-  private val packages = Seq("operators", "dedup", "vector", "text", "streaming")
+  private val packages = Seq("operators", "dedup", "vector", "text", "streaming", "query", "embed")
   // documented as "(+Suffix)" shorthand next to the base operator name
   private val variantSuffixes = Seq("Udf", "Scala", "Col", "LeftOuter")
 

@@ -207,16 +207,36 @@ class PipelineSpec extends SparkSpec {
     assert(merged.count() == 2 * docs.count())
   }
 
+  private def cacheEntries: Int = org.apache.spark.sql.graftshim.CacheShim.entries(spark)
+
+  /** `body`'s result and the CacheManager entries it leaves behind. */
+  private def entriesAdded[A](body: => A): (A, Int) = {
+    val before = cacheEntries
+    val out = body
+    (out, cacheEntries - before)
+  }
+
+  /** What one eval-set `jaccardPairs` call caches: the flow's only
+    * entries once its index is released.
+    */
+  private def jaccardEntries: Int = entriesAdded(
+    graft.dedup.Dedup.jaccardPairs(Tables.documents(spark, sfDir), "doc_id", "text", 3, 0.9)
+      .count())._2
+
   test("continuous flow passes its quality gate and indexes the corpus") {
-    val res = Continuous.run(spark, sfDir)
+    val allowed = jaccardEntries
+    val (res, added) = entriesAdded(Continuous.run(spark, sfDir))
     assert(res.indexedPassages > 0)
     assert(res.recallAt10 >= 0.80)
+    assert(added <= allowed, s"Continuous.run left $added cache entries, jaccardPairs alone $allowed")
   }
 
   test("continuous flow fails loudly when the gate is unreachable") {
-    intercept[IllegalStateException] {
+    val allowed = jaccardEntries
+    val (_, added) = entriesAdded(intercept[IllegalStateException] {
       Continuous.run(spark, sfDir, gate = 1.01)
-    }
+    })
+    assert(added <= allowed, s"a failed Continuous.run left $added cache entries, jaccardPairs alone $allowed")
   }
 
   test("write-audit-publish promotes clean data atomically and quarantines violations") {

@@ -2,6 +2,10 @@ package graft.query
 
 import graft.{SparkSpec, Tables}
 import graft.dedup.Dedup
+import graft.embed.Embedder
+import graft.vector.VectorOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class RetrievalSpec extends SparkSpec {
@@ -117,5 +121,88 @@ class RetrievalSpec extends SparkSpec {
       val re = byRank.map(_.getAs[Double]("re_score"))
       assert(re.zip(re.tail).forall { case (a, b) => a >= b })
     }
+  }
+
+  /** Reference `retrieve` at its default thresholds (0.30, else 0.15):
+    * the scored cross product with both norms recomputed per (query,
+    * passage) pair by `VectorOps.cosine`, then the over-fetch pool, the
+    * widening cascade and the lexical re-rank as the production body
+    * writes them.
+    */
+  private def referenceRetrieve(queries: DataFrame, index: DataFrame, k: Int): DataFrame = {
+    val (tHigh, tLow) = (0.30, 0.15)
+    val q = Embedder.withEmbedding(
+      queries.select(col("query_id"), col("query_text")), "query_text", "qv")
+    val scored = broadcast(q).crossJoin(
+        index.select(col("doc_id"), col("passage_id"), col("passage"), col("vec")))
+      .withColumn("score", VectorOps.cosine(col("qv"), col("vec")))
+    val pool = math.max(2 * k, k + 4)
+    val wPool = Window.partitionBy("query_id")
+      .orderBy(col("score").desc, col("doc_id").asc, col("passage_id").asc)
+    val wQ = Window.partitionBy("query_id")
+    val hits = scored.withColumn("rk", row_number().over(wPool))
+      .filter(col("rk") <= pool)
+      .withColumn("qmax", max("score").over(wQ))
+      .filter((col("qmax") >= tHigh && col("score") >= tHigh) ||
+              (col("qmax") <  tHigh && col("score") >= tLow))
+      .drop("qmax")
+    val overlap = size(array_intersect(
+        split(lower(col("query_text")), "\\s+"),
+        split(lower(col("passage")), "\\s+"))).cast("double") /
+      greatest(size(split(lower(col("query_text")), "\\s+")), lit(1)).cast("double")
+    val wRank = Window.partitionBy("query_id")
+      .orderBy(col("re_score").desc, col("score").desc, col("doc_id").asc, col("passage_id").asc)
+    hits.withColumn("re_score", round(overlap, 4))
+      .withColumn("rank", row_number().over(wRank))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "doc_id", "passage_id", "score", "re_score", "passage")
+  }
+
+  private def assertSameAsReference(queries: DataFrame, index: DataFrame, k: Int): Unit = {
+    def rows(df: DataFrame) =
+      df.collect().toSeq.sortBy(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")))
+    val got = Retrieval.retrieve(queries, index, k)
+    val want = referenceRetrieve(queries, index, k)
+    assert(got.schema == want.schema)
+    val (g, w) = (rows(got), rows(want))
+    assert(w.nonEmpty || queries.count() == 0)
+    assert(g == w, s"retrieve differs from the reference:\n got ${g.mkString("\n     ")}\n want ${w.mkString("\n     ")}")
+  }
+
+  test("retrieve equals the reference body row for row: corpus, tie-heavy index, zero-norm query") {
+    import spark.implicits._
+    // the flagship's inputs: the first 5 documents against the sf index
+    val docs = Tables.documents(spark, sfDir)
+    val first5 = docs.filter(col("doc_id") < 5)
+      .select(col("doc_id").as("query_id"), col("text").as("query_text"))
+    assertSameAsReference(first5, Retrieval.buildIndex(spark, sfDir), 12)
+
+    // duplicate texts under different (doc_id, passage_id) score exactly
+    // alike. For "alpha beta" the three "alpha…" copies score highest
+    // but overlap only half the query words; the six copies of the
+    // longer passage tie below them and overlap all of it. At k = 3 the
+    // pool keeps max(6, 7) = 7 rows, which ends inside that tie group,
+    // and the re-rank then puts the group's pooled rows first
+    val long = "alpha beta gamma delta epsilon zeta"
+    val passages =
+      Seq.tabulate(3)(i => (10L + i, 0, "alpha alpha alpha alpha")) ++
+      Seq.tabulate(6)(i => (20L + i / 2, i % 2, long)) ++
+      Seq((30L, 0, "eta theta iota kappa"), (31L, 0, "alpha lambda mu nu"))
+    val tieIndex = Embedder.withEmbedding(
+      passages.toDF("doc_id", "passage_id", "passage"), "passage", "vec")
+    val tieQueries = Seq(
+      (1L, "alpha beta"), (2L, long), (3L, "lambda mu eta"), (4L, "   "))
+      .toDF("query_id", "query_text")
+    for (k <- Seq(1, 3, 5))
+      assertSameAsReference(tieQueries, tieIndex, k)
+    val cut = Retrieval.retrieve(tieQueries.filter(col("query_id") === 1L), tieIndex, 3)
+      .orderBy("rank").select("doc_id", "passage_id").as[(Long, Int)].collect().toSeq
+    assert(cut == Seq((20L, 0), (20L, 1), (21L, 0)), s"pool cut: $cut")
+
+    // a whitespace query embeds to the zero vector: 0.0 against every
+    // passage, so neither side keeps a row for it
+    val zero = Seq((100L, "   "), (101L, "")).toDF("query_id", "query_text")
+    assertSameAsReference(zero.union(first5.filter(col("query_id") === 0L)),
+      Retrieval.buildIndex(spark, sfDir), 4)
   }
 }
