@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for training-data pipelines: exact/canonical
   * fingerprint dedup, exact n-gram Jaccard, MinHash+LSH, and SimHash.
@@ -20,9 +21,10 @@ import org.apache.spark.sql.functions._
   *    array — not 64 separate min() aggregations over an exploded index),
   *    band join, then exact verify via a shuffle join (no broadcast of
   *    the data-dependent candidate set).
-  *  - SimHash: per-row 64-bit signature UDF (narrow, no shuffle), then
-  *    16-bit-chunk banding with single-bit multi-probe (math at
-  *    `simhashPairs`).
+  *  - SimHash: per-row 64- or 128-bit signature UDF (narrow, no
+  *    shuffle), then 4-chunk banding — 16-bit chunks at 64 bits, 32-bit
+  *    at 128 — with single-bit multi-probe (math at `simhashPairs` and
+  *    `simhash128Pairs`).
   *
   * Signatures/hashes here are internal to candidate generation; every
   * emitted pair is verified with EXACT Jaccard (or exact hamming), so
@@ -146,28 +148,40 @@ object Dedup {
   private def hashedShingleFn(n: Int): String => Array[Long] = { text =>
     if (text == null) Array.empty[Long]
     else {
-      val words = text.trim.split("\\s+")
-      if (words.length < n) Array.empty[Long]
-      else {
-        val wh = new Array[Long](words.length)
-        var i = 0
-        while (i < words.length) { wh(i) = fnv64(words(i)); i += 1 }
-        val seen = new java.util.HashSet[Long]()
-        val out = Array.newBuilder[Long]
-        i = 0
-        while (i <= words.length - n) {
-          var h = 0xcbf29ce484222325L
-          var j = 0
-          while (j < n) { h ^= wh(i + j); h *= 0x100000001b3L; j += 1 }
-          if (seen.add(h)) out += h
-          i += 1
-        }
-        val a = out.result()
-        java.util.Arrays.sort(a)
-        a
+      val a = ngramHashes(text.trim.split("\\s+"), n)
+      java.util.Arrays.sort(a)
+      var m = 0
+      var i = 0
+      while (i < a.length) {
+        if (m == 0 || a(i) != a(m - 1)) { a(m) = a(i); m += 1 }
+        i += 1
       }
+      java.util.Arrays.copyOf(a, m)
     }
   }
+
+  /** The FNV-1a fold of each word n-gram's word hashes, one per start
+    * position in order (repeats kept); empty when `words` is shorter
+    * than n. The gram identity behind [[hashedShingleFn]] and
+    * `weightedJaccardPairs`.
+    */
+  private def ngramHashes(words: scala.collection.Seq[String], n: Int): Array[Long] =
+    if (words.length < n) Array.empty[Long]
+    else {
+      val wh = new Array[Long](words.length)
+      var i = 0
+      while (i < wh.length) { wh(i) = fnv64(words(i)); i += 1 }
+      val out = new Array[Long](words.length - n + 1)
+      i = 0
+      while (i < out.length) {
+        var h = 0xcbf29ce484222325L
+        var j = 0
+        while (j < n) { h ^= wh(i + j); h *= 0x100000001b3L; j += 1 }
+        out(i) = h
+        i += 1
+      }
+      out
+    }
 
   /** (id, shs: sorted Array[Long]) with token-less docs dropped; cached —
     * candidate generation and exact verify both reuse it.
@@ -439,24 +453,16 @@ object Dedup {
     // DuckDB oracle hash-match would surface one). Multiplicity is
     // preserved exactly — tf values are what the old groupBy computed.
     val gramTfUdf = udf { (ws: Seq[String]) =>
-      if (ws == null || ws.length < n) Array.empty[(Long, Long)]
+      if (ws == null) Array.empty[(Long, Long)]
       else {
-        val wh = new Array[Long](ws.length)
-        var i = 0
-        while (i < ws.length) { wh(i) = fnv64(ws(i)); i += 1 }
         val m = new java.util.HashMap[java.lang.Long, Array[Long]]()
-        i = 0
-        while (i <= ws.length - n) {
-          var h = 0xcbf29ce484222325L
-          var j = 0
-          while (j < n) { h ^= wh(i + j); h *= 0x100000001b3L; j += 1 }
+        ngramHashes(ws, n).foreach { h =>
           val prev = m.get(h)
           if (prev == null) m.put(h, Array(1L)) else prev(0) += 1L
-          i += 1
         }
         val out = new Array[(Long, Long)](m.size)
         val it = m.entrySet().iterator()
-        i = 0
+        var i = 0
         while (it.hasNext) {
           val e = it.next()
           out(i) = (e.getKey.longValue(), e.getValue()(0))
@@ -661,34 +667,46 @@ object Dedup {
     verifyJaccard(candidates, docSh, threshold)
   }
 
-  /** 64-bit SimHash signature per document, computed in one narrow
-    * per-row pass: every token occurrence votes ±1 on each bit of its
-    * FNV-1a hash (per-occurrence voting ≡ term-frequency weighting),
-    * sign of the bit sum → bit.
+  /** SimHash signature of `w` 64-bit words, low word first, in one pass
+    * over the tokens: every token occurrence votes ±1 on each bit
+    * (per-occurrence voting ≡ term-frequency weighting), sign of the
+    * bit sum → bit. Word 0 votes from the token's FNV-1a hash, word 1
+    * from its splitmix64 finalizer (an independent-by-construction
+    * second hash with no second string pass).
     */
-  def simhashSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sim = udf { (text: String) =>
-      val acc = new Array[Int](64)
-      if (text != null) {
-        val tokens = text.trim.split("\\s+")
-        var t = 0
-        while (t < tokens.length) {
-          if (tokens(t).nonEmpty) {
-            val h = fnv64(tokens(t))
+  private def simhashWords(text: String, w: Int): Array[Long] = {
+    val acc = new Array[Int](64 * w)
+    if (text != null) {
+      val tokens = text.trim.split("\\s+")
+      var t = 0
+      while (t < tokens.length) {
+        if (tokens(t).nonEmpty) {
+          var h = fnv64(tokens(t))
+          var k = 0
+          while (k < w) {
+            if (k > 0) h = mix64(h)
             var i = 0
             while (i < 64) {
-              if (((h >>> i) & 1L) == 1L) acc(i) += 1 else acc(i) -= 1
+              if (((h >>> i) & 1L) == 1L) acc(64 * k + i) += 1 else acc(64 * k + i) -= 1
               i += 1
             }
+            k += 1
           }
-          t += 1
         }
+        t += 1
       }
-      var sig = 0L
-      var i = 0
-      while (i < 64) { if (acc(i) > 0) sig |= (1L << i); i += 1 }
-      sig
     }
+    val sig = new Array[Long](w)
+    var i = 0
+    while (i < acc.length) { if (acc(i) > 0) sig(i >> 6) |= (1L << (i & 63)); i += 1 }
+    sig
+  }
+
+  /** 64-bit SimHash signature per document (`simhashWords` word 0),
+    * computed in one narrow per-row pass: (id, simhash).
+    */
+  def simhashSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val sim = udf { (text: String) => simhashWords(text, 1)(0) }
     docs.select(col(idCol).as("id"), sim(col(textCol)).as("simhash"))
   }
 
@@ -708,85 +726,25 @@ object Dedup {
     * d ≤ 7 — fewer chunks need multi-bit probes that explode
     * combinatorially (2 × 32-bit chunks require ≤3-bit flips = 5,489
     * probes/chunk), more chunks shrink the bucket space. The production
-    * move past ~10⁶ docs is a LONGER signature (Manku et al., WWW'07:
-    * 128-bit simhash → 4 × 32-bit chunks, single-bit probes, collision
-    * floor n²/2²⁷) — a similarity-contract change (hamming distance on
-    * a different hash), not a banding tweak, which is why this operator
-    * keeps the 64-bit contract its oracle pins.
+    * move past ~10⁶ docs is a LONGER signature ([[simhash128Pairs]]) —
+    * a similarity-contract change (hamming distance on a different
+    * hash), not a banding tweak, which is why this operator keeps the
+    * 64-bit contract its oracle pins.
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int = 7): DataFrame = {
-    val nChunks = 4
-    val chunkBits = 16
-    val mask = (1L << chunkBits) - 1
-    val errPerChunk = maxDist / nChunks
-    require(errPerChunk <= 1,
-      s"maxDist $maxDist needs >1-bit probes with $nChunks chunks — not implemented")
-    val sig = simhashSignatures(docs, idCol, textCol)
-    def chunkAt(ci: Int): Column =
-      shiftright(col("simhash"), ci * chunkBits).bitwiseAND(mask)
-    val idxCols = (0 until nChunks).map(ci =>
-      struct(lit(ci).as("ci"), chunkAt(ci).as("cv")))
-    val index = sig
-      .select(col("id").as("id_b"), col("simhash").as("sim_b"),
-        explode(array(idxCols: _*)).as("c"))
-      .select(col("id_b"), col("sim_b"), col("c.ci").as("ci"), col("c.cv").as("cv"))
-    val probeCols = (0 until nChunks).flatMap { ci =>
-      val base = chunkAt(ci)
-      val variants =
-        if (errPerChunk == 0) Seq(base)
-        else base +: (0 until chunkBits).map(b => base.bitwiseXOR(lit(1L << b)))
-      variants.map(v => struct(lit(ci).as("ci"), v.as("cv")))
-    }
-    val probes = sig
-      .select(col("id").as("id_a"), col("simhash").as("sim_a"),
-        explode(array(probeCols: _*)).as("c"))
-      .select(col("id_a"), col("sim_a"), col("c.ci").as("ci"), col("c.cv").as("cv"))
-    probes.join(index, Seq("ci", "cv"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-      .orderBy("doc_a", "doc_b")
-  }
+                   maxDist: Int = 7): DataFrame =
+    simhashBandJoin(simhashSignatures(docs, idCol, textCol), Seq("simhash"), maxDist)
 
   /** 128-bit SimHash signature as (hi, lo) longs — the Manku et al.
-    * (WWW'07) scale path past [[simhashPairs]]'s 64-bit collision floor.
-    * One FNV-1a pass per token feeds both halves: bits 0–63 vote from
-    * the token hash, bits 64–127 from its splitmix64 finalizer (an
-    * independent-by-construction second hash with no second string
-    * pass).
+    * (WWW'07) scale path past [[simhashPairs]]'s 64-bit collision floor:
+    * `sim_lo` is the 64-bit signature, `sim_hi` votes from each token
+    * hash's splitmix64 finalizer. (id, sim_hi, sim_lo).
     */
   def simhash128Signatures(docs: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
     val sim = udf { (text: String) =>
-      val acc = new Array[Int](128)
-      if (text != null) {
-        val tokens = text.trim.split("\\s+")
-        var t = 0
-        while (t < tokens.length) {
-          if (tokens(t).nonEmpty) {
-            val h1 = fnv64(tokens(t))
-            val h2 = mix64(h1)
-            var i = 0
-            while (i < 64) {
-              if (((h1 >>> i) & 1L) == 1L) acc(i) += 1 else acc(i) -= 1
-              if (((h2 >>> i) & 1L) == 1L) acc(64 + i) += 1 else acc(64 + i) -= 1
-              i += 1
-            }
-          }
-          t += 1
-        }
-      }
-      var lo = 0L; var hi = 0L
-      var i = 0
-      while (i < 64) {
-        if (acc(i) > 0) lo |= (1L << i)
-        if (acc(64 + i) > 0) hi |= (1L << i)
-        i += 1
-      }
-      (hi, lo)
+      val s = simhashWords(text, 2)
+      (s(1), s(0))
     }
     docs.select(col(idCol).as("id"), sim(col(textCol)).as("s"))
       .select(col("id"), col("s._1").as("sim_hi"), col("s._2").as("sim_lo"))
@@ -804,40 +762,52 @@ object Dedup {
     * one — both are registered, each with its own oracle).
     */
   def simhash128Pairs(docs: DataFrame, idCol: String, textCol: String,
-                      maxDist: Int = 7): DataFrame = {
+                      maxDist: Int = 7): DataFrame =
+    simhashBandJoin(simhash128Signatures(docs, idCol, textCol),
+      Seq("sim_lo", "sim_hi"), maxDist)
+
+  /** The banded multi-probe join behind [[simhashPairs]] and
+    * [[simhash128Pairs]] over (id, `words`…), the signature's 64-bit
+    * words low first. 4 chunks of 16·w bits: chunk ci is bits
+    * [ci·16·w, (ci+1)·16·w) of the concatenated signature. Each doc
+    * indexes its 4 exact chunk values and probes each one plus, when
+    * maxDist ≥ 4, its single-bit flips; colliding pairs keep hamming
+    * (summed `bit_count` over the words) ≤ maxDist.
+    */
+  private def simhashBandJoin(sig: DataFrame, words: Seq[String],
+                              maxDist: Int): DataFrame = {
     val nChunks = 4
-    val chunkBits = 32
+    val chunkBits = 16 * words.length
     val mask = (1L << chunkBits) - 1
-    require(maxDist / nChunks <= 1,
+    val errPerChunk = maxDist / nChunks
+    require(errPerChunk <= 1,
       s"maxDist $maxDist needs >1-bit probes with $nChunks chunks — not implemented")
-    val sig = simhash128Signatures(docs, idCol, textCol)
-    // chunks 0/1 from the low long, 2/3 from the high
     def chunkAt(ci: Int): Column = {
-      val src = if (ci < 2) col("sim_lo") else col("sim_hi")
-      shiftright(src, (ci % 2) * chunkBits).bitwiseAND(mask)
+      val bit = ci * chunkBits
+      shiftright(col(words(bit / 64)), bit % 64).bitwiseAND(mask)
+    }
+    // one join side: (id_s, <word>_s…, ci, cv), a row per chunk value
+    def exploded(s: String, chunks: Seq[Column]): DataFrame = {
+      val cols = "id" +: words
+      sig.select(cols.map(c => col(c).as(s"${c}_$s")) :+
+          explode(array(chunks: _*)).as("c"): _*)
+        .select(cols.map(c => col(s"${c}_$s")) ++
+          Seq(col("c.ci").as("ci"), col("c.cv").as("cv")): _*)
     }
     val idxCols = (0 until nChunks).map(ci =>
       struct(lit(ci).as("ci"), chunkAt(ci).as("cv")))
-    val index = sig
-      .select(col("id").as("id_b"), col("sim_hi").as("hi_b"),
-        col("sim_lo").as("lo_b"), explode(array(idxCols: _*)).as("c"))
-      .select(col("id_b"), col("hi_b"), col("lo_b"),
-        col("c.ci").as("ci"), col("c.cv").as("cv"))
     val probeCols = (0 until nChunks).flatMap { ci =>
       val base = chunkAt(ci)
-      val variants = base +: (0 until chunkBits).map(b => base.bitwiseXOR(lit(1L << b)))
+      val variants =
+        if (errPerChunk == 0) Seq(base)
+        else base +: (0 until chunkBits).map(b => base.bitwiseXOR(lit(1L << b)))
       variants.map(v => struct(lit(ci).as("ci"), v.as("cv")))
     }
-    val probes = sig
-      .select(col("id").as("id_a"), col("sim_hi").as("hi_a"),
-        col("sim_lo").as("lo_a"), explode(array(probeCols: _*)).as("c"))
-      .select(col("id_a"), col("hi_a"), col("lo_a"),
-        col("c.ci").as("ci"), col("c.cv").as("cv"))
-    probes.join(index, Seq("ci", "cv"))
+    exploded("a", probeCols).join(exploded("b", idxCols), Seq("ci", "cv"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
-          bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).as("hamming"))
+        words.map(w => bit_count(col(s"${w}_a").bitwiseXOR(col(s"${w}_b"))))
+          .reduce(_ + _).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxDist)
       .orderBy("doc_a", "doc_b")
@@ -845,58 +815,29 @@ object Dedup {
 
   /** Exact hamming pairs ≤ maxDist over 64-bit signatures via a BLOCKED
     * all-pairs scan — the audit anchor behind q145's recall line,
-    * delivered through the same distribution shape as the exact cosine
+    * delivered through the same [[blockedPairScan]] as the exact cosine
     * scan (`VectorOps.nearDupPairsBlocked`): ids and signatures packed
-    * as primitive long arrays per block, a driver-built B(B+1)/2 block
-    * grid of constant-size tasks, and a tight xor+popcount loop per
-    * task. The work is intrinsically N²/2 popcounts — that is what an
-    * EXACT audit side means — but the shape turns it from a row-at-a-
-    * time theta-join (one `a.join(b, id_a < id_b)` task chain
-    * materializing 2.5·10¹¹ join rows at the 100× rehearsal, 607 s)
-    * into ~1 ns/pair primitive arithmetic a cluster schedules flat.
-    * Same-block pairs iterate ONE copy with i < j (the two join sides'
-    * collect_list orders may differ — an order-sensitive skip would
-    * double- or under-count, q27's lesson). Pigeonhole shortcuts are
-    * deliberately NOT used here: at d ≤ 7 over 64 bits the chunks would
-    * replicate the banded path under audit (4×16+probe) or collapse to
-    * 256-value buckets (8×8) whose join materializes more rows than the
-    * popcounts cost.
+    * as primitive long arrays per block and a tight xor+popcount loop
+    * per block-pair task. The work is intrinsically N²/2 popcounts —
+    * that is what an EXACT audit side means — but the shape turns it
+    * from a row-at-a-time theta-join (one `a.join(b, id_a < id_b)` task
+    * chain materializing 2.5·10¹¹ join rows at the 100× rehearsal,
+    * 607 s) into ~1 ns/pair primitive arithmetic a cluster schedules
+    * flat. Pigeonhole shortcuts are deliberately NOT used here: at
+    * d ≤ 7 over 64 bits the chunks would replicate the banded path
+    * under audit (4×16+probe) or collapse to 256-value buckets (8×8)
+    * whose join materializes more rows than the popcounts cost.
     */
   def hammingPairsBlocked(sig: DataFrame, idCol: String, sigCol: String,
-                          maxDist: Int, blockRows: Int = 8192): DataFrame = {
-    val spark = sig.sparkSession
-    import spark.implicits._
-    val v = sig.select(col(idCol).cast("long").as("id"),
-      col(sigCol).cast("long").as("s")).cache()
-    val n = v.count() // one bounded-scalar job, as in nearDupPairsBlocked
-    val nBlocks = math.max(1, math.ceil(n.toDouble / blockRows).toInt)
-    require(nBlocks <= 4096,
-      s"$n signatures → $nBlocks blocks: an exact all-pairs hamming audit " +
-        "at this scale is a sampling problem, not a scan — audit a sample " +
-        "or move to the banded production path (simhashPairs/q158)")
-    val packed = v
-      .withColumn("blk", pmod(hash(col("id")), lit(nBlocks)))
-      .groupBy("blk")
-      .agg(collect_list(struct(col("id"), col("s"))).as("bc"))
-      .select(col("blk"),
-        transform(col("bc"), x => x.getField("id")).as("ids"),
-        transform(col("bc"), x => x.getField("s")).as("sigs"))
-      .cache() // scanned once per join side
-    // upper-triangle grid generated DISTRIBUTEDLY from spark.range: at
-    // the 4096-block cap a driver-local Seq would materialize ~8.4M
-    // tuples in the plan as a LocalRelation (driver memory + plan-size
-    // blowup well before the require fires); a Range scan ships no rows
-    val grid = upperTriangleGrid(spark, nBlocks)
-    val joined = grid
-      .join(packed.select(col("blk").as("blk_a"), col("ids").as("ia"),
-        col("sigs").as("sa")), "blk_a")
-      .join(packed.select(col("blk").as("blk_b"), col("ids").as("ib"),
-        col("sigs").as("sb")), "blk_b")
-      .select((col("blk_a") === col("blk_b")).as("same"),
-        col("ia"), col("sa"), col("ib"), col("sb"))
-      .as[(Boolean, Array[Long], Array[Long], Array[Long], Array[Long])]
-    val pairs = joined.flatMap { case (same, ia, sa, ib0, sb0) =>
-      val (ib, sb) = if (same) (ia, sa) else (ib0, sb0)
+                          maxDist: Int, blockRows: Int = 8192): DataFrame =
+    blockedPairScan[(Array[Long], Array[Long]), (Long, Long)](
+      sig.select(col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("s")),
+      blockRows, maxBlocks = 4096,
+      (n, nBlocks) => s"$n signatures → $nBlocks blocks: an exact all-pairs hamming " +
+        "audit at this scale is a sampling problem, not a scan — audit a sample " +
+        "or move to the banded production path (simhashPairs/q158)",
+      bc => Seq(transform(bc, x => x.getField("id")), transform(bc, x => x.getField("s"))),
+      Seq("doc_a", "doc_b")) { case ((ia, sa), (ib, sb), same) =>
       val out = Seq.newBuilder[(Long, Long)]
       var i = 0
       while (i < ia.length) {
@@ -911,14 +852,58 @@ object Dedup {
         i += 1
       }
       out.result()
-    }.toDF("doc_a", "doc_b")
-      // materialize the (result-sized) pair list EAGERLY as a local
-      // checkpoint, then drop the input caches — the nearDupPairsBlocked
-      // cache-lifetime discipline. localCheckpoint instead of cache():
-      // cached plans live in the session CacheManager until an explicit
-      // unpersist, so a threshold-sweep loop accumulated one result-sized
-      // cache per call; checkpoint blocks are dropped by the
-      // ContextCleaner as soon as the returned frame is unreachable.
+    }
+
+  /** The blocked all-pairs scan behind [[hammingPairsBlocked]] and
+    * `VectorOps.nearDupPairsBlocked` — the distribution shape for
+    * intrinsically quadratic work. `rows` (with a long `id` column) hashes
+    * into ⌈n/blockRows⌉ blocks, each packed into ONE row: `pack` maps
+    * the block's `collect_list` of row structs to columns that decode,
+    * in order, as the tuple `B` (primitive arrays decode by memcpy —
+    * boxed per-element decoding was the measured cost of earlier
+    * layouts). The B(B+1)/2 unordered block PAIRS are the unit of work:
+    * a distributed grid equi-joined to the packed blocks twice (two
+    * hash joins, not a cartesian), and `kernel(a, b, same)` emits one
+    * block pair's output rows, named `out`. A same-block pair arrives
+    * as ONE copy (`b` is `a`, `same` true) and the kernel visits only
+    * j > i there: the two join sides aggregate collect_list
+    * independently, so two copies of an identical block may arrive in
+    * different element orders — an order-sensitive skip would double-
+    * or under-count (q27's lesson). More than `maxBlocks` blocks fails
+    * with `tooBig(n, nBlocks)`.
+    *
+    * `rows` is cached for the count and the packing, the packed blocks
+    * for the two join sides. The (result-sized) output is materialized
+    * EAGERLY as a local checkpoint and both caches are dropped:
+    * cached plans live in the session CacheManager until an explicit
+    * unpersist, so a threshold-sweep loop accumulated one cache per
+    * call, while checkpoint blocks are dropped by the ContextCleaner as
+    * soon as the returned frame is unreachable.
+    */
+  private[graft] def blockedPairScan[B: TypeTag, P <: Product : TypeTag](
+      rows: DataFrame, blockRows: Int, maxBlocks: Int,
+      tooBig: (Long, Int) => String, pack: Column => Seq[Column], out: Seq[String])(
+      kernel: (B, B, Boolean) => IterableOnce[P]): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val v = rows.cache()
+    val n = v.count() // one bounded-scalar job
+    val nBlocks = math.max(1, math.ceil(n.toDouble / blockRows).toInt)
+    require(nBlocks <= maxBlocks, tooBig(n, nBlocks))
+    val fields = pack(col("bc")).zipWithIndex.map { case (c, i) => c.as(s"_${i + 1}") }
+    val packed = v
+      .withColumn("blk", pmod(hash(col("id")), lit(nBlocks)))
+      .groupBy("blk")
+      .agg(collect_list(struct(rows.columns.map(col).toSeq: _*)).as("bc"))
+      .select(col("blk"), struct(fields: _*).as("p"))
+      .cache()
+    val pairs = upperTriangleGrid(spark, nBlocks)
+      .join(packed.select(col("blk").as("blk_a"), col("p").as("pa")), "blk_a")
+      .join(packed.select(col("blk").as("blk_b"), col("p").as("pb")), "blk_b")
+      .select((col("blk_a") === col("blk_b")).as("same"), col("pa"), col("pb"))
+      .as[(Boolean, B, B)]
+      .flatMap { case (same, a, b) => kernel(a, if (same) a else b, same) }
+      .toDF(out: _*)
       .localCheckpoint(true)
     v.unpersist(blocking = false)
     packed.unpersist(blocking = false)
@@ -926,11 +911,12 @@ object Dedup {
   }
 
   /** The (i ≤ j) block-pair grid as a distributed Range scan — B² rows
-    * generated on executors, filtered to B(B+1)/2; nothing materializes
-    * on the driver or in the plan.
+    * generated on executors, filtered to B(B+1)/2: at the 4096-block
+    * cap a driver-local Seq would materialize ~8.4M tuples in the plan
+    * as a LocalRelation; a Range scan ships no rows.
     */
-  private[graft] def upperTriangleGrid(spark: org.apache.spark.sql.SparkSession,
-                                       nBlocks: Int): DataFrame =
+  private def upperTriangleGrid(spark: org.apache.spark.sql.SparkSession,
+                                nBlocks: Int): DataFrame =
     spark.range(nBlocks.toLong * nBlocks)
       .select((col("id") / nBlocks).cast("int").as("blk_a"),
         pmod(col("id"), lit(nBlocks)).cast("int").as("blk_b"))

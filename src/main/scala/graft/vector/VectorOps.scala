@@ -121,93 +121,58 @@ object VectorOps {
     * every τ below ~1−8/d (τ ≈ 0.98 at d = 384), so a threshold sweep
     * of the band join pruned almost nothing even at τ = 0.95.
     *
-    * Blocked form: vectors hash into ⌈n/blockRows⌉ fixed-size blocks,
-    * each packed into ONE row; the B(B+1)/2 unordered block PAIRS become
-    * the unit of work — a driver-built grid (bounded: B² ≪ n²)
-    * equi-joined to the packed blocks twice, so the plan is two hash
-    * joins, not a cartesian. Each task unpacks its two blocks to
-    * primitive arrays once and runs the O(blockRows²·d) scoring in a
-    * tight loop — every vector is shipped O(B) times total instead of
-    * O(n), and the quadratic becomes B² constant-size tasks that a
-    * 1000-executor cluster schedules perfectly (measured at the 10x
-    * rehearsal, 20k vectors: 72.7 s banded → 8.4 s blocked for
-    * identical output — with ~100× the qualifying pairs of sf0.1, wall
-    * grew only 6.7×). Arithmetic is [[cosinePre]]'s through
-    * `VecKernels` (`dot` over the float blocks, `round4`), threshold on
-    * the rounded value. Zero-norm vectors score 0.0 and are pruned up
-    * front (threshold must be positive).
+    * Blocked form (`Dedup.blockedPairScan`): vectors hash into
+    * ⌈n/blockRows⌉ fixed-size blocks, each packed into ONE row; the
+    * B(B+1)/2 unordered block PAIRS become the unit of work — a
+    * distributed grid (bounded: B² ≪ n²) equi-joined to the packed
+    * blocks twice, so the plan is two hash joins, not a cartesian. Each
+    * task unpacks its two blocks to primitive arrays once and runs the
+    * O(blockRows²·d) scoring in a tight loop — every vector is shipped
+    * O(B) times total instead of O(n), and the quadratic becomes B²
+    * constant-size tasks that a 1000-executor cluster schedules
+    * perfectly (measured at the 10x rehearsal, 20k vectors: 72.7 s
+    * banded → 8.4 s blocked for identical output — with ~100× the
+    * qualifying pairs of sf0.1, wall grew only 6.7×). Arithmetic is
+    * [[cosinePre]]'s through `VecKernels` (`dot` over the float blocks,
+    * `round4`), threshold on the rounded value. Zero-norm vectors score
+    * 0.0 and are pruned up front (threshold must be positive).
     *
     * Scale boundary, stated honestly: blocking makes the quadratic
     * EFFICIENT, not sublinear — at 10⁶ vectors it is ~10¹² dots
     * (feasible as ~60k block-pair tasks); beyond that no exact method
     * is feasible and the approximate paths (signLshNearDup,
-    * nearDupPairsBucketed, SemDeDup) are the answer. The driver-built
-    * grid is guarded accordingly.
+    * nearDupPairsBucketed, SemDeDup) are the answer. The block grid is
+    * capped accordingly (2048 blocks).
     */
   def nearDupPairsBlocked(vecs: DataFrame, idCol: String, vecCol: String,
                           threshold: Double, blockRows: Int = 2048): DataFrame = {
     require(threshold > 0, "blocked near-dup needs a positive cosine threshold")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    // cached like signLshNearDup's prepared input: the count, and the
-    // TWO joins against the packed blocks below, would otherwise each
-    // re-read the source and re-run the norm + packing aggregation
-    // (review finding: ~3x the input-side work per call)
     val v = vecs.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vec"))
       .withColumn("nv", l2Norm(col("vec")))
       .filter(col("nv") > 0)
-      .cache()
-    val n = v.count() // one bounded-scalar job, as in kmeansFit/bpeTrain
-    val nBlocks = math.max(1, math.ceil(n.toDouble / blockRows).toInt)
-    require(nBlocks <= 2048,
-      s"$n vectors → $nBlocks blocks → ${nBlocks.toLong * nBlocks / 2} block " +
-        "pairs: an exact all-pairs scan at this scale is no longer the right " +
-        "primitive — use signLshNearDup / nearDupPairsBucketed")
-    // FLAT primitive block layout: ids/norms/lengths as parallel arrays,
-    // all vectors of a block concatenated into ONE float array. The four
-    // projections derive from the SAME collect_list, so element order is
-    // consistent; primitive-array encoders deserialize them by memcpy
-    // (UnsafeArrayData.toXxxArray) — the array-of-struct-of-array layout
-    // this replaced paid ~m·d boxed Floats + m Row allocations per task
-    // side. Per-row lengths ride along so ragged vectors keep
-    // DotProduct's min-length contract.
-    val packed = v
-      .withColumn("blk", pmod(hash(col("id")), lit(nBlocks)))
-      .groupBy("blk")
-      .agg(collect_list(struct(col("id"), col("nv"), col("vec"))).as("bc"))
-      .select(col("blk"),
-        transform(col("bc"), s => s.getField("id")).as("ids"),
-        transform(col("bc"), s => s.getField("nv")).as("nvs"),
-        transform(col("bc"), s => size(s.getField("vec"))).as("lens"),
-        flatten(transform(col("bc"), s => s.getField("vec"))).as("flat"))
-      .cache() // scanned once per join side
-    // upper-triangle grid generated distributedly (see
-    // Dedup.upperTriangleGrid) — no driver-local LocalRelation
-    val grid = graft.dedup.Dedup.upperTriangleGrid(spark, nBlocks)
-    val joined = grid
-      .join(packed.select(col("blk").as("blk_a"), col("ids").as("ia"),
-        col("nvs").as("na"), col("lens").as("la"), col("flat").as("fa")), "blk_a")
-      .join(packed.select(col("blk").as("blk_b"), col("ids").as("ib"),
-        col("nvs").as("nb"), col("lens").as("lb"), col("flat").as("fb")), "blk_b")
-      .select((col("blk_a") === col("blk_b")).as("same"),
-        col("ia"), col("na"), col("la"), col("fa"),
-        col("ib"), col("nb"), col("lb"), col("fb"))
-      .as[(Boolean, Array[Long], Array[Double], Array[Int], Array[Float],
-           Array[Long], Array[Double], Array[Int], Array[Float])]
     def offsets(lens: Array[Int]): Array[Int] = {
       val off = new Array[Int](lens.length)
       var i = 1
       while (i < lens.length) { off(i) = off(i - 1) + lens(i - 1); i += 1 }
       off
     }
-    val pairs = joined.flatMap { case (same, ia, na, la, fa, ib0, nb0, lb0, fb0) =>
-      // a same-block pair iterates ONE copy with i < j: the two join
-      // sides aggregate collect_list independently, so the two copies of
-      // an identical block may arrive in different element orders — an
-      // order-sensitive "skip the lower triangle of the b side" would
-      // then double- or under-count
-      val (ib, nb, lb, fb) = if (same) (ia, na, la, fa) else (ib0, nb0, lb0, fb0)
+    // FLAT primitive block layout: ids/norms/lengths as parallel arrays,
+    // all vectors of a block concatenated into ONE float array — the
+    // array-of-struct-of-array layout this replaced paid ~m·d boxed
+    // Floats + m Row allocations per task side. Per-row lengths ride
+    // along so ragged vectors keep DotProduct's min-length contract.
+    graft.dedup.Dedup.blockedPairScan[(Array[Long], Array[Double], Array[Int], Array[Float]),
+                                      (Long, Long, Double)](
+      v, blockRows, maxBlocks = 2048,
+      (n, nBlocks) => s"$n vectors → $nBlocks blocks → ${nBlocks.toLong * nBlocks / 2} " +
+        "block pairs: an exact all-pairs scan at this scale is no longer the right " +
+        "primitive — use signLshNearDup / nearDupPairsBucketed",
+      bc => Seq(transform(bc, s => s.getField("id")),
+        transform(bc, s => s.getField("nv")),
+        transform(bc, s => size(s.getField("vec"))),
+        flatten(transform(bc, s => s.getField("vec")))),
+      Seq("id_a", "id_b", "cos")) { case ((ia, na, la, fa), (ib, nb, lb, fb), same) =>
       val offA = offsets(la)
       val offB = offsets(lb)
       val out = Seq.newBuilder[(Long, Long, Double)]
@@ -237,20 +202,7 @@ object VectorOps {
         i += 1
       }
       out.result()
-    }.toDF("id_a", "id_b", "cos")
-      // Materialize the pair list once (eager local checkpoint), then
-      // drop the heavy input caches: `v` and `packed` hold the full
-      // vector corpus, and leaving them to LRU meant repeated calls in
-      // one session (a threshold-sweep loop) accumulated executor
-      // storage. The residual blocks hold only the qualifying
-      // pair set — bounded by the near-dup result, not the corpus — and
-      // unlike cache() they are dropped by the ContextCleaner once the
-      // returned frame is unreachable, so a sweep loop leaves nothing
-      // behind (round-8 ADVICE cache-lifetime finding).
-      .localCheckpoint(true)
-    v.unpersist(blocking = false)
-    packed.unpersist(blocking = false)
-    pairs.orderBy("id_a", "id_b")
+    }.orderBy("id_a", "id_b")
   }
 
   /** (cl, centroid): the element-wise mean vector per label — avg over
@@ -1090,8 +1042,10 @@ object VectorOps {
 
   /** Widening threshold cascade (reference main.py:374-381): primary
     * threshold, and only queries with zero primary hits fall back to the
-    * lower tier. Anti-join keeps the fallback scan restricted to the
-    * failed queries.
+    * lower tier. Two passes over the full query×corpus scores: the first
+    * takes each query's max score, the second re-scores every pair and
+    * keeps the tier its query's max selects (≥ tHigh when the max
+    * reaches tHigh, else ≥ tLow).
     */
   def thresholdCascade(queries: DataFrame, corpus: DataFrame, qId: String,
                        cId: String, vecCol: String,

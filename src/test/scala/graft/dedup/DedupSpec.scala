@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -26,20 +27,42 @@ class DedupSpec extends SparkSpec {
       s"simhash covered ${covered.size}/${exact.size}")
   }
 
-  test("128-bit simhash banding finds exactly the brute-force hamming<=7 pairs") {
-    val got = Dedup.simhash128Pairs(docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val sigs = Dedup.simhash128Signatures(docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val brute = (for {
-      (a, ha, la) <- sigs
-      (b, hb, lb) <- sigs if a < b
-      d = java.lang.Long.bitCount(ha ^ hb) + java.lang.Long.bitCount(la ^ lb)
-      if d <= 7
+  // (id, signature words) of a signature frame
+  private def sigWords(sig: DataFrame): Seq[(Long, Seq[Long])] =
+    sig.collect().toSeq.map(r => (r.getLong(0), (1 until r.length).map(r.getLong)))
+
+  private def bruteHamming(sigs: Seq[(Long, Seq[Long])], maxDist: Int): Set[(Long, Long, Int)] =
+    (for {
+      (a, wa) <- sigs
+      (b, wb) <- sigs if a < b
+      d = wa.zip(wb).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
+      if d <= maxDist
     } yield (a, b, d)).toSet
-    assert(brute.nonEmpty, "fixture must contain 128-bit simhash near-dups")
-    // recall 1.0 by pigeonhole, precision 1.0 by the exact hamming verify
-    assert(got == brute)
+
+  for (w <- Seq(64, 128))
+    test(s"$w-bit simhash banding finds exactly the brute-force hamming<=7 pairs") {
+      val (sig, pairs) =
+        if (w == 64) (Dedup.simhashSignatures(docs, "doc_id", "text"),
+          Dedup.simhashPairs(docs, "doc_id", "text"))
+        else (Dedup.simhash128Signatures(docs, "doc_id", "text"),
+          Dedup.simhash128Pairs(docs, "doc_id", "text"))
+      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val brute = bruteHamming(sigWords(sig), 7)
+      assert(brute.nonEmpty, s"fixture must contain $w-bit simhash near-dups")
+      // recall 1.0 by pigeonhole, precision 1.0 by the exact hamming verify
+      assert(got == brute)
+    }
+
+  test("blocked hamming scan equals brute force across blocks") {
+    val sig = Dedup.simhashSignatures(docs, "doc_id", "text")
+    val brute = bruteHamming(sigWords(sig), 7).map { case (a, b, _) => (a, b) }
+    // blockRows smaller than the fixture so same-block AND cross-block
+    // pair paths are both exercised
+    val got = Dedup.hammingPairsBlocked(sig, "id", "simhash", 7, blockRows = 7)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(brute.nonEmpty)
+    assert(got.size == got.toSet.size, "a pair was emitted twice")
+    assert(got.toSet == brute)
   }
 
   test("q145: simhash banded recall audit reports exactly 10000 bp (pigeonhole guarantee)") {

@@ -39,6 +39,9 @@ out=/tmp/gate_verify
 rm -rf "$out"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out"
 python3 tools/check.py /root/testdata/sf0.01 "$out" | tail -3
+# independent reference for the JVM-hash-specific simhash rows, whose
+# oracles are literal pins of the engine's own output
+python3 tools/ref_simhash.py /root/testdata/sf0.01 "$out"
 
 h_after="$(srchash)"
 if [ "$h_before" != "$h_after" ]; then
