@@ -96,6 +96,19 @@ object Bench {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
+  /** True when `t`, or one of its causes, is what cancelling a job group
+    * raises in the thread that ran the job: a `SparkThrowable` with
+    * condition `SPARK_JOB_CANCELLED`, or an `InterruptedException`. A rep
+    * cut off at its cap is forgiven only for such an exception; any other
+    * failure stays a failure, even one that lands after the cap expired.
+    */
+  private[graft] def cancelledByCap(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists {
+      case st: org.apache.spark.SparkThrowable => st.getCondition == "SPARK_JOB_CANCELLED"
+      case _: InterruptedException => true
+      case _ => false
+    }
+
   /** One engine-independent CPU sample: `threads` JVM threads each run a
     * fixed xorshift64*-style loop to a blackhole; returns wall seconds.
     * Multithreaded so core oversubscription / steal shows up, not just
@@ -335,7 +348,7 @@ object Bench {
     def runOnce(name: String, fn: QFn,
                 capSeconds: Double = 180.0): (Double, Boolean) = {
       val s0 = System.nanoTime()
-      @volatile var ok = true
+      @volatile var failure: Throwable = null
       val group = s"bench-$name-$s0"
       val done = new java.util.concurrent.CountDownLatch(1)
       val th = new Thread(() => {
@@ -343,7 +356,7 @@ object Bench {
         try fn(spark, sfDir).count()
         catch {
           case e: Throwable =>
-            ok = false
+            failure = e
             System.err.println(s"[bench] FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
         } finally { spark.sparkContext.clearJobGroup(); done.countDown() }
       }, s"bench-run-$name")
@@ -357,10 +370,6 @@ object Bench {
         val secAtCap = (System.nanoTime() - s0) / 1e9
         System.err.println(f"[bench] CAPPED $name at $capSeconds%.0f s — cancelling its jobs")
         Bench.synchronized { capped += name }
-        // a genuine failure that raced the cap stays a failure (round-15
-        // ADVICE): ok=false observed BEFORE the cancel is the query's own
-        // exception; only the cancellation-induced exception is forgiven
-        val failedBeforeCancel = !ok
         spark.sparkContext.cancelJobGroup(group)
         if (!done.await(60, java.util.concurrent.TimeUnit.SECONDS)) {
           th.interrupt()
@@ -371,14 +380,16 @@ object Bench {
               "cancel + interrupt — subsequent reps may be contaminated")
         }
         spark.catalog.clearCache()
-        return (secAtCap, !failedBeforeCancel)
+        // a genuine failure that raced the cap stays a failure (round-15
+        // ADVICE): only the exception the cancel itself raised is forgiven
+        return (secAtCap, failure == null || cancelledByCap(failure))
       }
       val sec = (System.nanoTime() - s0) / 1e9
       // clear operator-internal caches AFTER timing: a query pays for
       // its own caching, but 200 queries' dead cache entries must not
       // GC-thrash the queries that follow (measured: ~1.5x slowdown)
       spark.catalog.clearCache()
-      (sec, ok)
+      (sec, failure == null)
     }
 
     // STEADY-STATE median: when a query has 2+ reps, rep 1 is dropped —

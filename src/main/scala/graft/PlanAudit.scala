@@ -133,7 +133,9 @@ object PlanAudit {
     doc ++= "eagerly-materialized frames: q27 (nearDupPairsBlocked scores the\n"
     doc ++= "block grid once, caches only the qualifying pairs, and drops the\n"
     doc ++= "corpus-sized input caches — the audited frame reads that pair\n"
-    doc ++= "cache) and q157 (the optimizer-rule query must EXECUTE inside its\n"
+    doc ++= "cache), q62 (signLshNearDup local-checkpoints its prepared corpus,\n"
+    doc ++= "so the audited frame starts at that checkpoint, not at the scan)\n"
+    doc ++= "and q157 (the optimizer-rule query must EXECUTE inside its\n"
     doc ++= "flag scope and returns a local relation; the rewritten aggregate's\n"
     doc ++= "shape is asserted by ApproxDistinctSpec instead).\n\n"
     doc ++= "| query | scans | cols/scan | pushed | exchanges | codegen | nlj |\n"

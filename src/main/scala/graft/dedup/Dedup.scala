@@ -423,13 +423,13 @@ object Dedup {
     * similarity evidence, and its pairs are O(df²)); weights and the
     * threshold apply in the surviving space. All arithmetic is integer
     * until the final 4-dp ratio. GRAM IDENTITY IS THE 64-BIT FNV-1a FOLD
-    * (round-15): equality of grams means equality of `fnv64`-folded word
-    * hashes, not of strings — a cross- or within-doc collision would
-    * merge distinct grams' df and tf, so engine and oracle agree only
-    * because the oracle's CTE hashes byte-identically (UDF `fnv64`
-    * registered for DuckDB); keep them in lockstep when touching either.
-    * Collision odds ≈ S²/2⁶⁵ over S distinct grams — immaterial at any
-    * achievable S, and a hit would surface as an oracle hash mismatch.
+    * (round-15): the engine counts two grams as one when their folded
+    * word hashes are equal, not their strings — a cross- or within-doc
+    * collision would merge distinct grams' df and tf. q176's oracle
+    * builds STRING grams (no hash UDF is registered for DuckDB), so the
+    * two agree only while no collision occurs, and a collision would
+    * surface as an oracle mismatch. Collision odds ≈ S²/2⁶⁵ over S
+    * distinct grams — immaterial at any achievable S.
     *
     * Scale: per-doc tf is computed INSIDE the gram UDF (a row-local
     * aggregation needs no shuffle; round-15), df is one groupBy with

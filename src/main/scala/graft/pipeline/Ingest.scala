@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanShim
 
 /** Batch ingestion (reference run_pipeline, SURVEY §3.2) as partitioned
   * lake maintenance: month-partitioned writes, idempotent MERGE-style
@@ -251,17 +252,14 @@ object Ingest {
   def incrementalLakeIngest(spark: SparkSession, srcDir: String,
                             lake: String, ckpt: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val schema = graft.Tables.rewrapNanos(spark.read.parquet(srcDir).schema)
-    graft.Tables.tsToMicros(spark.readStream.schema(schema)
+    val dated = graft.Tables.tsToMicros(spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.parquet").parquet(srcDir))
       .withColumn("year", date_format(col("ts"), "yyyy").cast("int"))
       .withColumn("month", date_format(col("ts"), "MM").cast("int"))
       .withColumn("day", date_format(col("ts"), "dd").cast("int"))
-      .writeStream
-      .partitionBy("year", "month", "day")
+    PlanShim.startStream(dated)(_.partitionBy("year", "month", "day")
       .format("parquet").option("path", lake)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .option("checkpointLocation", ckpt))
   }
 
   /** Partition columns of a Hive-layout parquet directory, in nesting

@@ -761,7 +761,7 @@ object VectorOps {
     // and they are the one class that shares IDENTICAL signatures in
     // every band (all sign bits 0), i.e. the guaranteed giant join
     // bucket on a corpus with many empty documents
-    // the cached table stays WIDENED double: a float-typed cache was
+    // the materialized table stays WIDENED double: a float-typed cache was
     // tried (half the footprint) and measured ~2× SLOWER on the
     // candidate stage at sf0.1 (2.2 s vs 0.8–1.0 s — the UDF input
     // conversion from a FloatType array column goes through a slower
@@ -775,7 +775,7 @@ object VectorOps {
     val v = graft.Tables.widen(vecs.select(col(idCol).as("id"), col(vecCol).as("vec")))
       .withColumn("nv", l2Norm(col("vec")))
       .filter(col("nv") > 0)
-      .cache()
+      .localCheckpoint(true) // not cache(): nothing left in the CacheManager
     val n = v.count() // bounded-scalar job; picks the verify shape below
     // candidate generation stays a band-table SELF-JOIN by measurement:
     // the tempting one-shuffle alternative — groupBy (band, sig) +

@@ -18,6 +18,20 @@ class BenchUnitSpec extends AnyFunSuite {
     assert(Bench.medianOf(Seq(3.0, 1.0, 2.0)) == Bench.medianOf(Seq(1.0, 2.0, 3.0)))
   }
 
+  test("a capped rep is forgiven only for the exception its cancel raised") {
+    val cancelled = new org.apache.spark.SparkException("SPARK_JOB_CANCELLED",
+      Map("jobId" -> "7", "reason" -> "part of cancelled job group bench-q"), null)
+    assert(!Bench.cancelledByCap(new IllegalStateException("query bug")))
+    assert(!Bench.cancelledByCap(new RuntimeException("wrapped",
+      new IllegalStateException("query bug"))))
+    assert(Bench.cancelledByCap(cancelled))
+    assert(Bench.cancelledByCap(new RuntimeException("wrapped",
+      new java.util.concurrent.ExecutionException(cancelled))))
+    assert(Bench.cancelledByCap(new RuntimeException("wrapped", new InterruptedException())))
+    assert(!Bench.cancelledByCap(new org.apache.spark.SparkException("INTERNAL_ERROR",
+      Map("message" -> "boom"), null)))
+  }
+
   test("cpu yardstick is a positive wall time and scales with the workload") {
     // tiny iteration counts: this asserts the mechanism (threads run, join,
     // blackhole survives), not the box speed — the real sizing lives in

@@ -38,7 +38,11 @@ class ConcurrentStressSpec extends SparkSpec {
     // collect) and the streaming CMS's fixed memory-sink view name +
     // session-scoped tmpfs checkpoint — exactly the shared-mutable-name
     // class this harness exists to catch across threads
-    "q194_spectral_power", "q195_exact_median", "q197_cms_stream")
+    "q194_spectral_power", "q195_exact_median", "q197_cms_stream",
+    // the streaming rows that start their queries with confs of their
+    // own (state partitions, q70's no-data batches): concurrent starts
+    // must neither interleave those writes nor leave them on the session
+    "q70_stream_asof", "q106_stream_heavy_hitters")
 
   test("state-heavy queries diverge nowhere under 4-thread concurrency") {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -47,8 +51,14 @@ class ConcurrentStressSpec extends SparkSpec {
     // the subset is substantial so the gate can't silently erode
     assert(queries.size >= 8,
       s"state-heavy stress subset shrank to ${queries.map(_._1)}")
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    val before = keys.map(k => k -> spark.conf.getAll.get(k)).toMap
     val failures = ConcurrentStress.run(spark, sfDir, queries,
       nThreads = 4, rounds = 1)
     assert(failures.isEmpty, failures.mkString("\n"))
+    keys.foreach { k =>
+      assert(spark.conf.getAll.get(k) == before(k), s"$k left changed on the shared session")
+    }
   }
 }

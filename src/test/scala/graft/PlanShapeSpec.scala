@@ -118,10 +118,8 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       // pinned, not inherited (round-16): a skew SPLIT needs >1 shuffle
       // partition to define a median, and the session value at this
-      // point is whatever the previous suite left — ConcurrentStress's
-      // racing set-then-restore streaming queries (q70/q106) can
-      // legitimately leave a transient here (benign for results, fatal
-      // for this shape assertion)
+      // point is whatever the previous suite left (benign for results,
+      // fatal for this shape assertion)
       "spark.sql.shuffle.partitions" -> "4")
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -109,6 +109,16 @@ class VectorOpsSpec extends SparkSpec {
     assert(lsh == exact, "sign-LSH + exact verify must reproduce the brute-force pairs")
   }
 
+  test("sign-LSH near-dup leaves no CacheManager entry behind") {
+    val docs = graft.Tables.documents(spark, sfDir)
+    val emb = graft.embed.Embedder.withEmbedding(
+      docs.select(col("doc_id"), col("text")), "text", "vec")
+    val entries = () => org.apache.spark.sql.graftshim.CacheShim.entries(spark)
+    val before = entries()
+    assert(VectorOps.signLshNearDup(emb, "doc_id", "vec", 0.95).count() > 0)
+    assert(entries() == before, s"${entries() - before} entries left by one call")
+  }
+
   test("bucketed near-dup is exact when the threshold sits inside cluster structure") {
     import spark.implicits._
     // two tight clusters around orthogonal axes + small deterministic noise
