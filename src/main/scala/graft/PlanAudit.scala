@@ -21,7 +21,6 @@ object PlanAudit {
     */
   def auditCells(df: org.apache.spark.sql.DataFrame): String = {
     // cold-cache audit (round-12): queries sharing a cached subtree
-    // (q24/q165 both cache rarePairInter's inverted-index buckets)
     // otherwise audit DIFFERENT plans depending on run order — the
     // second query reads InMemoryTableScan and loses the build stages'
     // exchanges, which masqueraded as a cross-scale AQE flip for two
@@ -131,13 +130,17 @@ object PlanAudit {
     doc ++= "per-round shape is documented at its definition (Graph.scala,\n"
     doc ++= "VectorOps.kmeansFit, TextOps.bpeTrain). The same applies to the\n"
     doc ++= "eagerly-materialized frames: q27 (nearDupPairsBlocked scores the\n"
-    doc ++= "block grid once, caches only the qualifying pairs, and drops the\n"
-    doc ++= "corpus-sized input caches — the audited frame reads that pair\n"
-    doc ++= "cache), q62 (signLshNearDup local-checkpoints its prepared corpus,\n"
-    doc ++= "so the audited frame starts at that checkpoint, not at the scan)\n"
-    doc ++= "and q157 (the optimizer-rule query must EXECUTE inside its\n"
-    doc ++= "flag scope and returns a local relation; the rewritten aggregate's\n"
-    doc ++= "shape is asserted by ApproxDistinctSpec instead).\n\n"
+    doc ++= "block grid once and local-checkpoints only the qualifying pairs —\n"
+    doc ++= "the audited frame reads that checkpoint), q62 (signLshNearDup\n"
+    doc ++= "local-checkpoints its prepared corpus, so the audited frame starts\n"
+    doc ++= "at that checkpoint, not at the scan) and q157 (the optimizer-rule\n"
+    doc ++= "query must EXECUTE inside its flag scope and returns a local\n"
+    doc ++= "relation; the rewritten aggregate's shape is asserted by\n"
+    doc ++= "ApproxDistinctSpec instead). The shingle-set rows q24, q25, q165,\n"
+    doc ++= "q185, q200 and q203 also start at a checkpoint, with no parquet\n"
+    doc ++= "scan: jaccardPairs, containmentPairs and minhashLshPairs keep each\n"
+    doc ++= "document's shingle set in a local checkpoint (docShingles), which\n"
+    doc ++= "the audited plan reads instead of the documents table.\n\n"
     doc ++= "| query | scans | cols/scan | pushed | exchanges | codegen | nlj |\n"
     doc ++= "|---|---|---|---|---|---|---|\n"
     rows.foreach(r => doc ++= r + "\n")

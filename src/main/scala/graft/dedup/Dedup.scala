@@ -183,15 +183,16 @@ object Dedup {
       out
     }
 
-  /** (id, shs: sorted Array[Long]) with token-less docs dropped; cached —
-    * candidate generation and exact verify both reuse it.
+  /** (id, shs: sorted Array[Long]) with token-less docs dropped; a lazy
+    * local checkpoint — candidate generation and exact verify both reuse
+    * it, and the first action over either materializes it.
     */
   private def docShingles(docs: DataFrame, idCol: String, textCol: String,
                           n: Int): DataFrame =
     graft.Tables.widen(docs.select(col(idCol).as("id"), col(textCol).as("txt")))
       .select(col("id"), udf(hashedShingleFn(n)).apply(col("txt")).as("shs"))
       .filter(size(col("shs")) > 0)
-      .cache()
+      .localCheckpoint(false)
 
   /** |a ∩ b| for two SORTED long arrays — single merge pass.
     * `Array[Long]` parameters deserialize to primitive arrays (one copy,
@@ -267,10 +268,11 @@ object Dedup {
     // hot set, buckets of 2..maxDf emit their C(df,2) pairs map-side,
     // and ONE count agg over those pair rows = |A∩B| over rare
     // shingles. Set sizes ride along inside the bucket structs, so no
-    // join back to the documents is needed.
+    // join back to the documents is needed. Not materialized: its two
+    // readers (the hot set and the rare-bucket pairs) are one plan, and
+    // share one reused exchange there.
     val buckets = inv.groupBy("sh")
       .agg(graft.functions.BoundedCollect.collect(maxDf + 1)(col("id"), col("n_sh")).as("bc"))
-      .cache()
     val hotSet = broadcast(buckets.filter(col("bc._2") > maxDf).select("sh"))
     // the struct array arrives as two parallel PRIMITIVE arrays
     // (GetArrayStructFields on `bc._1._1`/`bc._1._2` is codegen'd) —
@@ -872,13 +874,13 @@ object Dedup {
     * or under-count (q27's lesson). More than `maxBlocks` blocks fails
     * with `tooBig(n, nBlocks)`.
     *
-    * `rows` is cached for the count and the packing, the packed blocks
-    * for the two join sides. The (result-sized) output is materialized
-    * EAGERLY as a local checkpoint and both caches are dropped:
-    * cached plans live in the session CacheManager until an explicit
-    * unpersist, so a threshold-sweep loop accumulated one cache per
-    * call, while checkpoint blocks are dropped by the ContextCleaner as
-    * soon as the returned frame is unreachable.
+    * `rows` is a lazy local checkpoint that the count materializes for
+    * the packing, and the packed blocks are one that both join sides
+    * read. The (result-sized) output is materialized EAGERLY as a local
+    * checkpoint. Nothing enters the session CacheManager, whose entries
+    * live until they are released explicitly: checkpoint blocks are
+    * dropped by the ContextCleaner as soon as their frames are
+    * unreachable, on the `tooBig` throw too.
     */
   private[graft] def blockedPairScan[B: TypeTag, P <: Product : TypeTag](
       rows: DataFrame, blockRows: Int, maxBlocks: Int,
@@ -886,7 +888,7 @@ object Dedup {
       kernel: (B, B, Boolean) => IterableOnce[P]): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val v = rows.cache()
+    val v = rows.localCheckpoint(false)
     val n = v.count() // one bounded-scalar job
     val nBlocks = math.max(1, math.ceil(n.toDouble / blockRows).toInt)
     require(nBlocks <= maxBlocks, tooBig(n, nBlocks))
@@ -896,8 +898,8 @@ object Dedup {
       .groupBy("blk")
       .agg(collect_list(struct(rows.columns.map(col).toSeq: _*)).as("bc"))
       .select(col("blk"), struct(fields: _*).as("p"))
-      .cache()
-    val pairs = upperTriangleGrid(spark, nBlocks)
+      .localCheckpoint(false)
+    upperTriangleGrid(spark, nBlocks)
       .join(packed.select(col("blk").as("blk_a"), col("p").as("pa")), "blk_a")
       .join(packed.select(col("blk").as("blk_b"), col("p").as("pb")), "blk_b")
       .select((col("blk_a") === col("blk_b")).as("same"), col("pa"), col("pb"))
@@ -905,9 +907,6 @@ object Dedup {
       .flatMap { case (same, a, b) => kernel(a, if (same) a else b, same) }
       .toDF(out: _*)
       .localCheckpoint(true)
-    v.unpersist(blocking = false)
-    packed.unpersist(blocking = false)
-    pairs
   }
 
   /** The (i ≤ j) block-pair grid as a distributed Range scan — B² rows

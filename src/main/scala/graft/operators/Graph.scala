@@ -3,7 +3,6 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.PlanShim
 
 /** Cluster formation over candidate pairs — the step every dedup family
   * here stops short of: q24/q25/q62/q69 emit near-dup PAIRS, but a
@@ -25,90 +24,82 @@ object Graph {
     * (both directions present); vertices are the edge endpoints.
     * Returns (v, label) with label = min vertex id of v's component.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame =
     // materialize the (static) edge list once and SIZE the loop from it
     // (round-16, guide §2): every exchange of every round is over frames
     // no bigger than the edge list, so its measured row count — not the
     // session's core count — decides the loop's shuffle partitioning.
-    val e0 = edges.select(col("src"), col("dst")).persist()
-    var e: DataFrame = null
-    try {
-    val p = LoopConf.sizedPartitions(e0.count(), 2000000L) // ~16-byte pairs → ≲32 MB
-    // co-partition the edge list on the join key ONCE: every round's
-    // join then exchanges only the label side — at a billion edges that
-    // is the difference between shuffling the graph per round and
-    // shuffling per-vertex labels per round
-    e = LoopConf.scoped(e0, p).repartition(col("dst")).persist()
-    // lazy checkpoints throughout the loop: the per-round convergence
-    // count is the materializing action, so each round is ONE job, not
-    // a materialization pass plus the count.
-    // labels init reads DST, not src (round-15 verdict item 5): the list
-    // is symmetric, so the two endpoint sets are equal — keying the
-    // distinct by dst lets it REUSE e's hash(dst) partitioning instead
-    // of paying its own exchange over the endpoints.
-    var labels = e.select(col("dst").as("v")).distinct()
-      .withColumn("label", col("v")).localCheckpoint(false)
-    // convergence via the LABEL-SUM invariant (round-15, guide §1.2):
-    // both steps below only ever LOWER a vertex's label (hop takes a min
-    // including the own label; jump takes least(h, ...)), so Σ labels is
-    // strictly decreasing until the fixpoint and stationary exactly
-    // there. Comparing consecutive sums (decimal — no overflow at any
-    // vertex count) replaces the former labels-vs-next comparison join;
-    // with the hop fused to min(own ∪ neighbors) this drops each round
-    // from three joins to two (hop join + jump self-join). Per-round
-    // label states are IDENTICAL to the previous spelling — min over
-    // the same sets, same jump targets — so convergence takes the same
-    // rounds and produces the same assignment.
-    var prevSum: Option[java.math.BigDecimal] = None
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // hop: each vertex takes the min of its own label and its
-      // neighbors' — one join + one union'd aggregate (the own label
-      // rides the union instead of a second join)
-      val hopped = e.join(labels.withColumnRenamed("v", "dst"), "dst")
-        .select(col("src").as("v"), col("label"))
-        .union(labels)
-        .groupBy("v").agg(min("label").as("h"))
-      // pointer jump (shortcutting): label(v) ← label(label(v)). A label
-      // is always a vertex of v's own component (true at init, preserved
-      // by both steps), so the jump stays inside the component while
-      // roughly doubling how far the min has travelled — hop alone needs
-      // O(diameter) rounds, hop+jump O(log diameter). That is the
-      // difference between converging and the loud abort on deep graphs:
-      // the 10x-rehearsal's sf10 line graph has diameter > 20 (random
-      // shared-line edges chain), and a 100 TB web-scale dup graph does
-      // too. One self-join per round; the jump target always resolves
-      // (every label is a vertex and every vertex has a row),
-      // left+coalesce only guards the invariant.
-      val lookup = hopped.select(col("v").as("h"), col("h").as("jump"))
-      val next = hopped.join(lookup, Seq("h"), "left")
-        .select(col("v"),
-          least(col("h"), coalesce(col("jump"), col("h"))).as("label"))
-        .localCheckpoint(false)
-      val sum = next.agg(
-        org.apache.spark.sql.functions.sum(col("label").cast("decimal(38,0)")))
-        .head().getDecimal(0)
-      converged = prevSum.exists(_.compareTo(sum) == 0)
-      prevSum = Some(sum)
-      labels = next
-      i += 1
+    // (~16-byte pairs → ≲32 MB a partition)
+    LoopConf.run(edges.select(col("src"), col("dst")), 2000000L) { (e0, _) =>
+      // co-partition the edge list on the join key ONCE: every round's
+      // join then exchanges only the label side — at a billion edges that
+      // is the difference between shuffling the graph per round and
+      // shuffling per-vertex labels per round
+      val e = e0.repartition(col("dst")).localCheckpoint(false)
+      // lazy checkpoints throughout the loop: the per-round convergence
+      // count is the materializing action, so each round is ONE job, not
+      // a materialization pass plus the count.
+      // labels init reads DST, not src (round-15 verdict item 5): the list
+      // is symmetric, so the two endpoint sets are equal — keying the
+      // distinct by dst lets it REUSE e's hash(dst) partitioning instead
+      // of paying its own exchange over the endpoints.
+      var labels = e.select(col("dst").as("v")).distinct()
+        .withColumn("label", col("v")).localCheckpoint(false)
+      // convergence via the LABEL-SUM invariant (round-15, guide §1.2):
+      // both steps below only ever LOWER a vertex's label (hop takes a min
+      // including the own label; jump takes least(h, ...)), so Σ labels is
+      // strictly decreasing until the fixpoint and stationary exactly
+      // there. Comparing consecutive sums (decimal — no overflow at any
+      // vertex count) replaces the former labels-vs-next comparison join;
+      // with the hop fused to min(own ∪ neighbors) this drops each round
+      // from three joins to two (hop join + jump self-join). Per-round
+      // label states are IDENTICAL to the previous spelling — min over
+      // the same sets, same jump targets — so convergence takes the same
+      // rounds and produces the same assignment.
+      var prevSum: Option[java.math.BigDecimal] = None
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIter) {
+        // hop: each vertex takes the min of its own label and its
+        // neighbors' — one join + one union'd aggregate (the own label
+        // rides the union instead of a second join)
+        val hopped = e.join(labels.withColumnRenamed("v", "dst"), "dst")
+          .select(col("src").as("v"), col("label"))
+          .union(labels)
+          .groupBy("v").agg(min("label").as("h"))
+        // pointer jump (shortcutting): label(v) ← label(label(v)). A label
+        // is always a vertex of v's own component (true at init, preserved
+        // by both steps), so the jump stays inside the component while
+        // roughly doubling how far the min has travelled — hop alone needs
+        // O(diameter) rounds, hop+jump O(log diameter). That is the
+        // difference between converging and the loud abort on deep graphs:
+        // the 10x-rehearsal's sf10 line graph has diameter > 20 (random
+        // shared-line edges chain), and a 100 TB web-scale dup graph does
+        // too. One self-join per round; the jump target always resolves
+        // (every label is a vertex and every vertex has a row),
+        // left+coalesce only guards the invariant.
+        val lookup = hopped.select(col("v").as("h"), col("h").as("jump"))
+        val next = hopped.join(lookup, Seq("h"), "left")
+          .select(col("v"),
+            least(col("h"), coalesce(col("jump"), col("h"))).as("label"))
+          .localCheckpoint(false)
+        val sum = next.agg(
+          org.apache.spark.sql.functions.sum(col("label").cast("decimal(38,0)")))
+          .head().getDecimal(0)
+        converged = prevSum.exists(_.compareTo(sum) == 0)
+        prevSum = Some(sum)
+        labels = next
+        i += 1
+      }
+      // a deep-chain graph (diameter > maxIter) must fail LOUDLY here —
+      // returning unconverged labels would surface downstream as a
+      // baffling oracle mismatch against the exact transitive closure
+      require(converged,
+        s"connectedComponents did not converge in $maxIter rounds " +
+          s"(label sum still decreasing); raise maxIter for deep graphs")
+      // the labels are checkpoint-backed (the last sum materialized them)
+      labels
     }
-    // a deep-chain graph (diameter > maxIter) must fail LOUDLY here —
-    // returning unconverged labels would surface downstream as a
-    // baffling oracle mismatch against the exact transitive closure
-    require(converged,
-      s"connectedComponents did not converge in $maxIter rounds " +
-        s"(label sum still decreasing); raise maxIter for deep graphs")
-    // the labels are checkpoint-backed (the last sum materialized them),
-    // so rebinding them to the caller replans nothing
-    PlanShim.ofRows(spark, PlanShim.analyzed(labels))
-    } finally {
-      if (e != null) e.unpersist()
-      e0.unpersist()
-    }
-  }
 
   /** Boilerplate-cluster dedup groups: documents are linked when they
     * share a full 5-word grid line of DOCUMENT frequency 2..5 — the
@@ -200,54 +191,45 @@ object Graph {
     * wall-clock-neutral — the vertex side broadcasts either way; the
     * split is for the billion-vertex regime where it cannot.)
     */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
     // the edge list is often itself an expensive derived plan (q125
-    // feeds the df-capped inverted-index graph) — cache it ONCE so deg,
-    // eDeg, and the final join all read the cache instead of each
-    // re-deriving the graph from scratch. Its measured count sizes the
-    // loop's shuffles (round-16, guide §2 — see LoopConf).
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("src"), col("dst")).persist()
-    var deg, eDeg: DataFrame = null
-    try {
-    val e = LoopConf.scoped(e0, LoopConf.sizedPartitions(e0.count(), 2000000L))
-    deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-      .persist()
-    val n = deg.count()
-    eDeg = e
-      .join(deg.withColumnRenamed("v", "src"), "src")
-      .repartition(col("src")).persist()
-    var ranks = deg.select(col("v"), lit(1.0 / n).as("pr"))
-    for (i <- 1 to iters) {
-      val inflow = eDeg
-        .join(ranks.withColumnRenamed("v", "src"), "src")
-        .select(col("dst").as("v"), (col("pr") / col("deg")).as("c"))
-        .groupBy("v").agg(sum("c").as("inflow"))
-      ranks = deg.select(col("v"))
-        .join(inflow, Seq("v"), "left_outer")
-        .select(col("v"),
-          graft.functions.Rounding.halfUp(lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("inflow"), lit(0.0)), 9).as("pr"))
-      // LAZY rounds (round-15, guide §1.2): PageRank has no per-round
-      // convergence check, so nothing forces a materialization between
-      // rounds — the former per-round EAGER localCheckpoint serialized
-      // `iters` barrier jobs whose only job was to cut lineage that a
-      // 3-round plan does not need cut (measured at sf0.1: 5.20 s →
-      // 3.35 s for pageRank(edges, 3)). Lineage still cannot grow
-      // unboundedly for large `iters`: every 5th round checkpoints —
-      // rounds between stay one fused plan.
-      if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint()
+    // feeds the df-capped inverted-index graph) — materialize it ONCE so
+    // deg, eDeg, and the final join all read the checkpoint instead of
+    // each re-deriving the graph from scratch. Its measured count sizes
+    // the loop's shuffles (round-16, guide §2 — see LoopConf).
+    LoopConf.run(edges.select(col("src"), col("dst")), 2000000L) { (e, _) =>
+      val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
+        .localCheckpoint(false)
+      val n = deg.count()
+      val eDeg = e
+        .join(deg.withColumnRenamed("v", "src"), "src")
+        .repartition(col("src")).localCheckpoint(false)
+      var ranks = deg.select(col("v"), lit(1.0 / n).as("pr"))
+      for (i <- 1 to iters) {
+        val inflow = eDeg
+          .join(ranks.withColumnRenamed("v", "src"), "src")
+          .select(col("dst").as("v"), (col("pr") / col("deg")).as("c"))
+          .groupBy("v").agg(sum("c").as("inflow"))
+        ranks = deg.select(col("v"))
+          .join(inflow, Seq("v"), "left_outer")
+          .select(col("v"),
+            graft.functions.Rounding.halfUp(lit((1.0 - damping) / n) +
+              lit(damping) * coalesce(col("inflow"), lit(0.0)), 9).as("pr"))
+        // LAZY rounds (round-15, guide §1.2): PageRank has no per-round
+        // convergence check, so nothing forces a materialization between
+        // rounds — the former per-round EAGER localCheckpoint serialized
+        // `iters` barrier jobs whose only job was to cut lineage that a
+        // 3-round plan does not need cut (measured at sf0.1: 5.20 s →
+        // 3.35 s for pageRank(edges, 3)). Lineage still cannot grow
+        // unboundedly for large `iters`: every 5th round checkpoints —
+        // rounds between stay one fused plan.
+        if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint()
+      }
+      // materialize the (one row per ranked vertex) result here — the
+      // rounds must run at the loop conf, and the caller plans the
+      // rebound result at its own
+      ranks.join(deg, "v").localCheckpoint()
     }
-    // materialize the (one row per ranked vertex) result BEFORE
-    // dropping the caches — a lazy return would silently re-derive the
-    // whole edge plan when the caller finally acts on it, and would run
-    // the rounds at the caller's conf: the rebound frame plans there
-    val out = ranks.join(deg, "v").localCheckpoint()
-    PlanShim.ofRows(spark, PlanShim.analyzed(out))
-    } finally {
-      Seq(eDeg, deg, e0).filter(_ != null).foreach(_.unpersist())
-    }
-  }
 
   /** Top-20 authorities of the shared-line graph after 3 rounds —
     * boilerplate hubs surface first (a doc sharing lines with many
@@ -352,50 +334,45 @@ object Graph {
     // distinct a<b pairs unioned with their reversals) pass
     // assumeSymmetric = true and skip that full-edge exchange — the
     // defense stays the default for everyone else (round-15, guide §2.4).
-    val e0 = (if (assumeSymmetric) edges.select(col("src"), col("dst"))
-              else symmetrized(edges)).persist()
-    try {
+    val input = if (assumeSymmetric) edges.select(col("src"), col("dst"))
+                else symmetrized(edges)
     // size every downstream exchange from the measured edge count
     // (round-16, guide §2 — see LoopConf): the wedge self-join AMPLIFIES
     // rows (Σ outdeg² ≤ O(m^1.5)), so triangles divide by a 4× smaller
-    // rows-per-partition than the label loops. The count reads the cache
-    // the first action would have materialized anyway.
-    val e = LoopConf.scoped(e0, LoopConf.sizedPartitions(e0.count(), 500000L))
-    val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
-    // one row per undirected edge, oriented by (degree, id); src<dst
-    // already, so the id tie-break keeps src first
-    val lowFirst = e.filter(col("src") < col("dst"))
-      .join(deg.select(col("v").as("src"), col("d").as("da")), "src")
-      .join(deg.select(col("v").as("dst"), col("d").as("db")), "dst")
-      .withColumn("fwd",
-        col("da") < col("db") || (col("da") === col("db") && col("src") < col("dst")))
-    val o = lowFirst.select(
-      when(col("fwd"), col("src")).otherwise(col("dst")).as("u"),
-      when(col("fwd"), col("dst")).otherwise(col("src")).as("w"))
-    // EAGER checkpoint: od is read three times below (both wedge sides
-    // + the closing join); materializing it here also lets the derived
-    // edge cache go immediately (round-9 cache-lifetime discipline)
-    val od = o.join(deg.select(col("v").as("w"), col("d").as("dw")), "w")
-      .select(col("u"), col("w"), col("dw"))
-      .localCheckpoint(true)
-    e0.unpersist()
-    // wedges (y, z) out of each tail u, y before z in the (deg, id)
-    // order so the closing edge is oriented y→z
-    val wedges = od.select(col("u"), col("w").as("y"), col("dw").as("dy"))
-      .join(od.select(col("u"), col("w").as("z"), col("dw").as("dz")), Seq("u"))
-      .filter(col("dy") < col("dz") || (col("dy") === col("dz") && col("y") < col("z")))
-    val tri = wedges
-      .join(od.select(col("u").as("y"), col("w").as("z")), Seq("y", "z"))
-      .select(col("u").as("x"), col("y"), col("z"))
-    // EAGER checkpoint: the wedge + closing joins must execute under the
-    // sized loop conf — the caller plans the rebound result at its own
-    // conf, so a lazy return would run them at the session defaults; the
-    // materialized result is one small (v, count) row per triangle vertex
-    val out = tri.select(explode(array(col("x"), col("y"), col("z"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("n_triangles"))
-      .localCheckpoint(true)
-    PlanShim.ofRows(edges.sparkSession, PlanShim.analyzed(out))
-    } finally e0.unpersist()
+    // rows-per-partition than the label loops.
+    LoopConf.run(input, 500000L) { (e, _) =>
+      val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
+      // one row per undirected edge, oriented by (degree, id); src<dst
+      // already, so the id tie-break keeps src first
+      val lowFirst = e.filter(col("src") < col("dst"))
+        .join(deg.select(col("v").as("src"), col("d").as("da")), "src")
+        .join(deg.select(col("v").as("dst"), col("d").as("db")), "dst")
+        .withColumn("fwd",
+          col("da") < col("db") || (col("da") === col("db") && col("src") < col("dst")))
+      val o = lowFirst.select(
+        when(col("fwd"), col("src")).otherwise(col("dst")).as("u"),
+        when(col("fwd"), col("dst")).otherwise(col("src")).as("w"))
+      // EAGER checkpoint: od is read three times below (both wedge sides
+      // + the closing join)
+      val od = o.join(deg.select(col("v").as("w"), col("d").as("dw")), "w")
+        .select(col("u"), col("w"), col("dw"))
+        .localCheckpoint(true)
+      // wedges (y, z) out of each tail u, y before z in the (deg, id)
+      // order so the closing edge is oriented y→z
+      val wedges = od.select(col("u"), col("w").as("y"), col("dw").as("dy"))
+        .join(od.select(col("u"), col("w").as("z"), col("dw").as("dz")), Seq("u"))
+        .filter(col("dy") < col("dz") || (col("dy") === col("dz") && col("y") < col("z")))
+      val tri = wedges
+        .join(od.select(col("u").as("y"), col("w").as("z")), Seq("y", "z"))
+        .select(col("u").as("x"), col("y"), col("z"))
+      // EAGER checkpoint: the wedge + closing joins must execute under the
+      // sized loop conf — the caller plans the rebound result at its own
+      // conf, so a lazy return would run them at the session defaults; the
+      // materialized result is one small (v, count) row per triangle vertex
+      tri.select(explode(array(col("x"), col("y"), col("z"))).as("v"))
+        .groupBy("v").agg(count(lit(1)).as("n_triangles"))
+        .localCheckpoint(true)
+    }
   }
 
   /** q173: triangle counts of the q104 shared-line dup graph. */
@@ -449,39 +426,40 @@ object Graph {
     // list is symmetric + distinct by construction skip the defensive
     // symmetrize exchange (the checkpoint still materializes the list
     // once for the peel loop)
-    val e0 = (if (assumeSymmetric) edges.select(col("src"), col("dst"))
-              else symmetrized(edges)).localCheckpoint(true)
-    var nEdges = e0.count()
+    val input = if (assumeSymmetric) edges.select(col("src"), col("dst"))
+                else symmetrized(edges)
     // peel rounds only ever SHRINK the list, so the initial count sizes
     // every round's exchanges (round-16, guide §2 — see LoopConf)
-    var e = LoopConf.scoped(e0, LoopConf.sizedPartitions(nEdges, 2000000L))
-    var converged = false
-    var it = 0
-    while (!converged) {
-      it += 1
-      require(it <= maxIter,
-        s"kCore: no fixpoint after $maxIter peel rounds — raise maxIter")
-      val keep = e.groupBy("src").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("src").as("v"))
-      // LAZY checkpoint (round-16): the convergence count materializes
-      // it, so each peel round is ONE job — the former eager form paid a
-      // materialization job AND a count job per round. Lineage is cut
-      // identically: after the count the plan roots at the cached RDD.
-      val e2 = e.join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst").localCheckpoint(false)
-      val n2 = e2.count()
-      converged = n2 == nEdges
-      e = e2
-      nEdges = n2
+    LoopConf.run(input, 2000000L) { (e0, n0) =>
+      var e = e0
+      var nEdges = n0
+      var converged = false
+      var it = 0
+      while (!converged) {
+        it += 1
+        require(it <= maxIter,
+          s"kCore: no fixpoint after $maxIter peel rounds — raise maxIter")
+        val keep = e.groupBy("src").agg(count(lit(1)).as("d"))
+          .filter(col("d") >= k).select(col("src").as("v"))
+        // LAZY checkpoint (round-16): the convergence count materializes
+        // it, so each peel round is ONE job — the former eager form paid a
+        // materialization job AND a count job per round. Lineage is cut
+        // identically: after the count the plan roots at the checkpointed RDD.
+        val e2 = e.join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
+          .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
+          .select("src", "dst").localCheckpoint(false)
+        val n2 = e2.count()
+        converged = n2 == nEdges
+        e = e2
+        nEdges = n2
+      }
+      // the final per-vertex degree agg is sized by the loop conf too —
+      // EAGERLY materialized because the caller plans the rebound result at
+      // its own conf, and would otherwise rerun the agg at the session's
+      // defaults against the checkpoint-backed core list
+      e.groupBy(col("src").as("v")).agg(count(lit(1)).as("core_deg"))
+        .localCheckpoint(true)
     }
-    // the final per-vertex degree agg is sized by the loop conf too —
-    // EAGERLY materialized because the caller plans the rebound result at
-    // its own conf, and would otherwise rerun the agg at the session's
-    // defaults against the checkpoint-backed core list
-    val out = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("core_deg"))
-      .localCheckpoint(true)
-    PlanShim.ofRows(edges.sparkSession, PlanShim.analyzed(out))
   }
 
   /** q180: 3-core of the q104 shared-line dup graph. */

@@ -20,38 +20,53 @@ import org.apache.spark.sql.graftshim.PlanShim
   * per-round overhead over the same tiny frames.
   *
   * The remedy is the guide's: derive the loop's partition count from the
-  * MEASURED row count of the loop frame (the operators all materialize it
-  * anyway — persist + count or localCheckpoint + count), and run the loop
-  * on that frame rebound into a private clone of its session that carries
-  * the sized conf (`scoped`), so the caller's session conf is never
-  * written. When the sized count is at or below the session's core
-  * count, the loop also runs with AQE off: at that size AQE cannot
-  * improve any plan (there is nothing to coalesce below 1 partition and
-  * joins this small broadcast anyway via static estimates), while its
-  * per-exchange stage jobs multiply the per-round job count ~5×. At
-  * production sizes the SAME code sizes the loop to hundreds or thousands
-  * of partitions and keeps AQE on — nothing here is tuned to local[32].
+  * MEASURED row count of the loop's input, and run the loop on that input
+  * rebound into a private clone of its session that carries the sized
+  * conf, so the caller's session conf is never written. When the sized
+  * count is at or below the session's core count, the loop also runs
+  * with AQE off: at that size AQE cannot improve any plan (there is
+  * nothing to coalesce below 1 partition and joins this small broadcast
+  * anyway via static estimates), while its per-exchange stage jobs
+  * multiply the per-round job count ~5×. At production sizes the SAME
+  * code sizes the loop to hundreds or thousands of partitions and keeps
+  * AQE on — nothing here is tuned to local[32].
   */
 object LoopConf {
 
-  /** Partition count derived from a measured row count: ceil-ish
-    * rows/rowsPerPartition, floored at 1. `rowsPerPartition` is chosen
-    * per call site from the row WIDTH so partitions land in the
-    * tens-of-MB range (guide §2.2) — e.g. 2M for 16-byte edge pairs,
-    * 250k for symbol-array vocab rows.
+  /** Runs one sized loop. `input` is materialized once as a lazy local
+    * checkpoint whose row count — the loop's only sizing action — sizes
+    * the partitions: ceil(rows / `rowsPerPartition`), clamped to
+    * [1, 65536], where `rowsPerPartition` is chosen per call site from
+    * the row WIDTH so partitions land in the tens-of-MB range (guide
+    * §2.2) — e.g. 2M for 16-byte edge pairs, 250k for symbol-array vocab
+    * rows. `body`
+    * gets the checkpointed input rebound into the sized child session,
+    * and its row count. Every frame `body` derives plans at the sized
+    * conf, but its result is rebound to the caller's session, where what
+    * the caller derives plans at the caller's conf again: `body` must
+    * return a frame that is already materialized (checkpoint-backed or
+    * local), so no sized work is left to run at the caller's conf.
+    *
+    * Nothing here holds a CacheManager entry, so nothing needs releasing
+    * on any exit: checkpoint blocks are dropped by the ContextCleaner
+    * once their frames are unreachable.
     */
-  def sizedPartitions(rows: Long, rowsPerPartition: Long): Int = {
+  def run(input: DataFrame, rowsPerPartition: Long)(
+      body: (DataFrame, Long) => DataFrame): DataFrame = {
     require(rowsPerPartition > 0, "rowsPerPartition must be positive")
-    math.max(1L, math.min((rows + rowsPerPartition - 1) / rowsPerPartition, 65536L)).toInt
+    val in = input.localCheckpoint(false)
+    val rows = in.count()
+    val p = math.max(1L, math.min((rows + rowsPerPartition - 1) / rowsPerPartition, 65536L)).toInt
+    val out = body(scoped(in, p), rows)
+    PlanShim.ofRows(input.sparkSession, PlanShim.analyzed(out))
   }
 
-  /** The loop's input frame rebound into a child session with
+  /** `df` rebound into a child session with
     * `spark.sql.shuffle.partitions = p`, and with AQE off when p is within
     * the session's core count (the tiny-loop regime where AQE is pure
-    * per-exchange job overhead). Every frame the loop derives from it
-    * plans at that conf; see `PlanShim.withConfs`.
+    * per-exchange job overhead); see `PlanShim.withConfs`.
     */
-  def scoped(df: DataFrame, p: Int): DataFrame = {
+  private def scoped(df: DataFrame, p: Int): DataFrame = {
     val aqeOff =
       if (p <= df.sparkSession.sparkContext.defaultParallelism)
         Seq("spark.sql.adaptive.enabled" -> "false")

@@ -36,11 +36,11 @@ object Quantiles {
     * instead of 8, i.e. half the full scans of the input at any corpus
     * size, for a driver walk of ≤ 65,536·|groups| longs per pass (still
     * the bounded-model class: groups are typed keys like event_type,
-    * not corpus-grain). The projected (g, u) frame is persisted for the
-    * duration of the walk — every pass after the first reads the
-    * in-memory projection instead of re-scanning parquet — and
-    * unpersisted before returning (per-invocation intermediate, nothing
-    * survives the call). Selection output is bit-identical to the 8-bit
+    * not corpus-grain). The projected (g, u) frame is a lazy local
+    * checkpoint that the group-size pass materializes — every pass after
+    * the first reads the projection instead of re-scanning parquet — and
+    * it never enters the session CacheManager, so nothing survives the
+    * call on any exit. Selection output is bit-identical to the 8-bit
     * form: the same value is determined, two hex digits at a time.
     */
   def radixSelectKth(df: DataFrame, groupCol: String, value: Column,
@@ -58,66 +58,64 @@ object Quantiles {
     val base = df.filter(value.isNotNull)
       .select(col(groupCol).cast("string").as("g"),
         value.cast("long").bitwiseXOR(lit(Long.MinValue)).as("u"))
-      .persist()
-    try {
-      val sizes = base.groupBy("g").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      require(sizes.nonEmpty, "radixSelectKth on an empty frame")
-      // guarded bounded model (round-15 ADVICE): each 16-bit digit pass
-      // collects up to 65,536 counter Rows PER GROUP to the driver — fine
-      // for the typed-key group columns this operator exists for (q195/
-      // q198 group by event_type: 5 groups), a driver-OOM foot-gun on a
-      // corpus-grain group column. Fail loudly before the first collect
-      // instead of dying mid-walk — the MaxBroadcastAssignments
-      // discipline applied to driver-side counter state.
-      require(sizes.size <= 256,
-        s"radixSelectKth bounded-model cap: ${sizes.size} groups × 65,536 " +
-          "digit counters per pass exceeds what the driver walk may hold " +
-          "(cap 256 groups); group by a typed key, not a corpus-grain column")
-      var remaining = sizes.map { case (g, n) =>
-        val k = kFor(n)
-        require(k >= 1 && k <= n, s"k=$k outside [1, $n] for group $g")
-        g -> k
-      }
-      var prefix = sizes.keys.map(_ -> 0L).toMap
-      for (level <- 3 to 0 by -1) {
-        val shift = level * 16
-        val pfxDf = prefix.toSeq.toDF("g", "pfx")
-        // rows still matching the group's established high digits,
-        // counted by their next 16-bit digit; level 3 has no established
-        // digits yet (a >>> of 64 would be a no-op shift in the JVM, so
-        // it is special-cased out rather than relied on)
-        val inPrefix =
-          if (level == 3) lit(true)
-          else shiftrightunsigned(col("u"), shift + 16) === col("pfx")
-        val counts = base.join(broadcast(pfxDf), Seq("g"))
-          .filter(inPrefix)
-          .groupBy(col("g"),
-            // pmod, not %: at level 0 the unshifted u keeps its sign bit
-            // and % would hand back a negative "digit"
-            pmod(shiftrightunsigned(col("u"), shift), lit(65536L)).as("digit"))
-          .agg(count(lit(1)).as("c"))
-          .collect()
-          .groupBy(_.getString(0))
-          .map { case (g, rows) =>
-            g -> rows.map(r => r.getLong(1) -> r.getLong(2)).sortBy(_._1)
-          }
-        prefix = prefix.map { case (g, p) =>
-          var k = remaining(g)
-          var chosen = -1L
-          for ((b, c) <- counts(g) if chosen < 0) {
-            if (k <= c) chosen = b else k -= c
-          }
-          assert(chosen >= 0, s"radix walk exhausted for group $g")
-          remaining += g -> k
-          g -> ((p << 16) | chosen)
+      .localCheckpoint(false)
+    val sizes = base.groupBy("g").agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    require(sizes.nonEmpty, "radixSelectKth on an empty frame")
+    // guarded bounded model (round-15 ADVICE): each 16-bit digit pass
+    // collects up to 65,536 counter Rows PER GROUP to the driver — fine
+    // for the typed-key group columns this operator exists for (q195/
+    // q198 group by event_type: 5 groups), a driver-OOM foot-gun on a
+    // corpus-grain group column. Fail loudly before the first collect
+    // instead of dying mid-walk — the MaxBroadcastAssignments
+    // discipline applied to driver-side counter state.
+    require(sizes.size <= 256,
+      s"radixSelectKth bounded-model cap: ${sizes.size} groups × 65,536 " +
+        "digit counters per pass exceeds what the driver walk may hold " +
+        "(cap 256 groups); group by a typed key, not a corpus-grain column")
+    var remaining = sizes.map { case (g, n) =>
+      val k = kFor(n)
+      require(k >= 1 && k <= n, s"k=$k outside [1, $n] for group $g")
+      g -> k
+    }
+    var prefix = sizes.keys.map(_ -> 0L).toMap
+    for (level <- 3 to 0 by -1) {
+      val shift = level * 16
+      val pfxDf = prefix.toSeq.toDF("g", "pfx")
+      // rows still matching the group's established high digits,
+      // counted by their next 16-bit digit; level 3 has no established
+      // digits yet (a >>> of 64 would be a no-op shift in the JVM, so
+      // it is special-cased out rather than relied on)
+      val inPrefix =
+        if (level == 3) lit(true)
+        else shiftrightunsigned(col("u"), shift + 16) === col("pfx")
+      val counts = base.join(broadcast(pfxDf), Seq("g"))
+        .filter(inPrefix)
+        .groupBy(col("g"),
+          // pmod, not %: at level 0 the unshifted u keeps its sign bit
+          // and % would hand back a negative "digit"
+          pmod(shiftrightunsigned(col("u"), shift), lit(65536L)).as("digit"))
+        .agg(count(lit(1)).as("c"))
+        .collect()
+        .groupBy(_.getString(0))
+        .map { case (g, rows) =>
+          g -> rows.map(r => r.getLong(1) -> r.getLong(2)).sortBy(_._1)
         }
+      prefix = prefix.map { case (g, p) =>
+        var k = remaining(g)
+        var chosen = -1L
+        for ((b, c) <- counts(g) if chosen < 0) {
+          if (k <= c) chosen = b else k -= c
+        }
+        assert(chosen >= 0, s"radix walk exhausted for group $g")
+        remaining += g -> k
+        g -> ((p << 16) | chosen)
       }
-      val rows = sizes.toSeq.sorted.map { case (g, n) =>
-        (g, n, kFor(n), prefix(g) ^ Long.MinValue)
-      }
-      rows.toDF("g", "n", "k", "kth")
-    } finally base.unpersist()
+    }
+    val rows = sizes.toSeq.sorted.map { case (g, n) =>
+      (g, n, kFor(n), prefix(g) ^ Long.MinValue)
+    }
+    rows.toDF("g", "n", "k", "kth")
   }
 
   /** Registered form (q195): the exact (lower) median of the scaled event

@@ -483,58 +483,59 @@ object TextOps {
     val spark = docs.sparkSession
     import spark.implicits._
     val splitChars = udf { w: String => w.map(_.toString).toArray }
-    val words0 = docs
+    val vocab = docs
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(splitChars(col("w")).as("syms"), col("n"))
-      .localCheckpoint(false)
     // SIZE THE LOOP FROM THE VOCAB (round-16, guide §2 — see LoopConf):
     // the iteration runs on the distinct-word table, so the corpus-grain
-    // session partitioning is pure per-round overhead — the count here
-    // materializes the pending checkpoint (work round 1 paid anyway) and
+    // session partitioning is pure per-round overhead — the sizing count
+    // materializes the vocab checkpoint (work round 1 paid anyway) and
     // every loop frame coalesces to vocab-sized partitions (~250k
     // symbol-array rows ≈ tens of MB each). A 100 TB corpus's 10⁸-word
     // vocab sizes to hundreds of partitions through the same arithmetic.
-    val nVocab = words0.count()
-    val p = LoopConf.sizedPartitions(nVocab, 250000L)
-    // coalesce is narrow — the lazy re-checkpoint lands at p partitions
-    // with the first argmax job, and every later round STAYS at p (the
-    // merge select is narrow, the pair groupBy exchanges at the loop conf)
-    var words = LoopConf.scoped(words0, p).coalesce(p).localCheckpoint(false)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var step = 0
-    var done = false
-    while (step < steps && !done) {
-      val pairs = words.select(posexplode(col("syms")).as(Seq("i", "l")), col("syms"), col("n"))
-        .filter(col("i") < size(col("syms")) - 1)
-        .select(col("l"), col("syms").getItem(col("i") + 1).as("r"), col("n"))
-        .groupBy("l", "r").agg(sum("n").as("c"))
-        .orderBy(col("c").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (pairs.isEmpty || pairs.head.getAs[Long]("c") < 2) done = true
-      else {
-        val (l, r, c) = (pairs.head.getAs[String]("l"),
-          pairs.head.getAs[String]("r"), pairs.head.getAs[Long]("c"))
-        merges += ((step + 1, l, r, c))
-        val applyMerge = udf { syms: Seq[String] =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-              out += (l + r); i += 2
-            } else { out += syms(i); i += 1 }
+    LoopConf.run(vocab, 250000L) { (words0, _) =>
+      // coalesce to the loop's sized partition count; coalesce is narrow
+      // — the lazy re-checkpoint lands at p partitions with the first
+      // argmax job, and every later round STAYS at p (the merge select is
+      // narrow, the pair groupBy exchanges at the loop conf)
+      val p = words0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      var words = words0.coalesce(p).localCheckpoint(false)
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+      var step = 0
+      var done = false
+      while (step < steps && !done) {
+        val pairs = words.select(posexplode(col("syms")).as(Seq("i", "l")), col("syms"), col("n"))
+          .filter(col("i") < size(col("syms")) - 1)
+          .select(col("l"), col("syms").getItem(col("i") + 1).as("r"), col("n"))
+          .groupBy("l", "r").agg(sum("n").as("c"))
+          .orderBy(col("c").desc, col("l").asc, col("r").asc)
+          .limit(1).collect()
+        if (pairs.isEmpty || pairs.head.getAs[Long]("c") < 2) done = true
+        else {
+          val (l, r, c) = (pairs.head.getAs[String]("l"),
+            pairs.head.getAs[String]("r"), pairs.head.getAs[Long]("c"))
+          merges += ((step + 1, l, r, c))
+          val applyMerge = udf { syms: Seq[String] =>
+            val out = scala.collection.mutable.ArrayBuffer.empty[String]
+            var i = 0
+            while (i < syms.length) {
+              if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
+                out += (l + r); i += 2
+              } else { out += syms(i); i += 1 }
+            }
+            out.toArray
           }
-          out.toArray
+          words = words.select(applyMerge(col("syms")).as("syms"), col("n"))
+            .localCheckpoint(false)
+          step += 1
         }
-        words = words.select(applyMerge(col("syms")).as("syms"), col("n"))
-          .localCheckpoint(false)
-        step += 1
       }
+      // a local relation: the merge table needs no loop conf
+      merges.toSeq.toDF("step", "left", "right", "pair_count")
+        .orderBy("step")
     }
-    // built on the caller's session: the merge table is a local relation
-    merges.toSeq.toDF("step", "left", "right", "pair_count")
-      .orderBy("step")
   }
 
   def q112BpeTrain(spark: SparkSession, dir: String): DataFrame =

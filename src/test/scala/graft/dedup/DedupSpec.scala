@@ -129,6 +129,26 @@ class DedupSpec extends SparkSpec {
     assert(got == Seq((1L, 2L, 1L)))
   }
 
+  test("pair operators leave no CacheManager entry behind, refused scans included") {
+    import spark.implicits._
+    val entries = () => org.apache.spark.sql.graftshim.CacheShim.entries(spark)
+    val before = entries()
+    val calls = Seq[(String, () => DataFrame)](
+      "jaccardPairs" -> (() => Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8)),
+      "containmentPairs" -> (() => Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.8)),
+      "minhashLshPairs" -> (() => Dedup.minhashLshPairs(docs, "doc_id", "text")))
+    calls.foreach { case (name, call) =>
+      assert(call().count() > 0, s"$name found no pairs")
+      assert(entries() == before, s"${entries() - before} entries left by $name")
+    }
+    // blockRows = 1 over 4,097 signatures is one block past the 4,096 cap
+    val sigs = (0L to 4096L).map(i => (i, i)).toDF("id", "simhash")
+    intercept[IllegalArgumentException] {
+      Dedup.hammingPairsBlocked(sigs, "id", "simhash", 7, blockRows = 1)
+    }
+    assert(entries() == before, s"${entries() - before} entries left by a refused hammingPairsBlocked")
+  }
+
   test("shingles: fewer than n words yields empty, order matters") {
     import spark.implicits._
     val rows = Seq("one two", "a b c d").toDF("t")

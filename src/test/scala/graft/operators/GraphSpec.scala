@@ -61,6 +61,13 @@ class GraphSpec extends SparkSpec {
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
     assert(cache.isEmpty, "connectedComponents left persisted frames behind on failure")
+    // kCore at its maxIter clamp: the 2-core of a chain peels one end
+    // vertex per side per round, far more than 3 rounds
+    val kEx = intercept[IllegalArgumentException] {
+      Graph.kCore(sym.toDF("src", "dst"), 2, maxIter = 3)
+    }
+    assert(kEx.getMessage.contains("no fixpoint"))
+    assert(cache.isEmpty, "kCore left persisted frames behind on failure")
   }
 
   test("q105: keeper is the argmax-token member of its q104 cluster, token accounting conserves") {

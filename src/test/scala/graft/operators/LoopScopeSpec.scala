@@ -8,10 +8,10 @@ import graft.vector.VectorOps
   * caller's: a conf written on the shared session reaches every query
   * compiling on it concurrently, and a thread abandoned at a bench cap
   * would restore it in the middle of the next row. This spec asserts the
-  * contract directly: while connectedComponents, kCore, bpeTrain and
-  * kmeansTrain run in another thread, the caller session's partition
-  * and AQE settings never change, and every frame they return is bound
-  * to the caller's session.
+  * contract directly: while connectedComponents, kCore, pageRank,
+  * triangleCounts, bpeTrain and kmeansTrain run in another thread, the
+  * caller session's partition and AQE settings never change, and every
+  * frame they return is bound to the caller's session.
   */
 class LoopScopeSpec extends SparkSpec {
   import spark.implicits._
@@ -33,6 +33,12 @@ class LoopScopeSpec extends SparkSpec {
         val core = Graph.kCore(edges, 2)
         core.collect()
         returned.add("kCore" -> core.sparkSession)
+        val pr = Graph.pageRank(edges, 3)
+        pr.collect()
+        returned.add("pageRank" -> pr.sparkSession)
+        val tri = Graph.triangleCounts(edges)
+        tri.collect()
+        returned.add("triangleCounts" -> tri.sparkSession)
         val bpe = TextOps.bpeTrain(Tables.documents(spark, sfDir), 5)
         bpe.collect()
         returned.add("bpeTrain" -> bpe.sparkSession)
@@ -52,7 +58,7 @@ class LoopScopeSpec extends SparkSpec {
     t.join()
     assert(err.get == null, s"loop operators failed: ${err.get}")
     assert(polls > 0, "thread finished before a single poll — no coverage")
-    assert(returned.size == 3)
+    assert(returned.size == 5)
     returned.forEach { case (op, session) =>
       assert(session eq spark, s"$op returned a frame bound to a child session")
     }

@@ -56,6 +56,17 @@ class QuantilesSpec extends SparkSpec {
     }
   }
 
+  test("leaves no CacheManager entry behind, on success and on a refused k") {
+    val entries = () => org.apache.spark.sql.graftshim.CacheShim.entries(spark)
+    val before = entries()
+    assert(runKth(Seq(("g", 1L), ("g", 2L), ("g", 3L)), _ => 2L)("g") === 2L)
+    assert(entries() == before, s"${entries() - before} entries left by one call")
+    intercept[IllegalArgumentException] {
+      runKth(Seq(("g", 1L), ("g", 2L)), _ => 3L)
+    }
+    assert(entries() == before, s"${entries() - before} entries left by a refused call")
+  }
+
   test("null values are excluded, SQL-aggregate style (round-12 ADVICE)") {
     // pre-fix: a null value was counted in the group size but hashed
     // into a null byte bucket, and the driver walk NPE'd. Now nulls

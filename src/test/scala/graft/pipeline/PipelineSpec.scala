@@ -216,27 +216,18 @@ class PipelineSpec extends SparkSpec {
     (out, cacheEntries - before)
   }
 
-  /** What one eval-set `jaccardPairs` call caches: the flow's only
-    * entries once its index is released.
-    */
-  private def jaccardEntries: Int = entriesAdded(
-    graft.dedup.Dedup.jaccardPairs(Tables.documents(spark, sfDir), "doc_id", "text", 3, 0.9)
-      .count())._2
-
   test("continuous flow passes its quality gate and indexes the corpus") {
-    val allowed = jaccardEntries
     val (res, added) = entriesAdded(Continuous.run(spark, sfDir))
     assert(res.indexedPassages > 0)
     assert(res.recallAt10 >= 0.80)
-    assert(added <= allowed, s"Continuous.run left $added cache entries, jaccardPairs alone $allowed")
+    assert(added == 0, s"Continuous.run left $added cache entries")
   }
 
   test("continuous flow fails loudly when the gate is unreachable") {
-    val allowed = jaccardEntries
     val (_, added) = entriesAdded(intercept[IllegalStateException] {
       Continuous.run(spark, sfDir, gate = 1.01)
     })
-    assert(added <= allowed, s"a failed Continuous.run left $added cache entries, jaccardPairs alone $allowed")
+    assert(added == 0, s"a failed Continuous.run left $added cache entries")
   }
 
   test("write-audit-publish promotes clean data atomically and quarantines violations") {

@@ -117,6 +117,15 @@ class VectorOpsSpec extends SparkSpec {
     val before = entries()
     assert(VectorOps.signLshNearDup(emb, "doc_id", "vec", 0.95).count() > 0)
     assert(entries() == before, s"${entries() - before} entries left by one call")
+    // the blocked exact scan, on success and on its too-many-blocks throw
+    assert(VectorOps.nearDupPairsBlocked(emb, "doc_id", "vec", 0.95, blockRows = 7).count() > 0)
+    assert(entries() == before, s"${entries() - before} entries left by nearDupPairsBlocked")
+    import spark.implicits._
+    val tooMany = (0L to 2048L).map(i => (i, Array(1f, i.toFloat))).toDF("id", "vec")
+    intercept[IllegalArgumentException] {
+      VectorOps.nearDupPairsBlocked(tooMany, "id", "vec", 0.9, blockRows = 1)
+    }
+    assert(entries() == before, s"${entries() - before} entries left by a refused nearDupPairsBlocked")
   }
 
   test("bucketed near-dup is exact when the threshold sits inside cluster structure") {
