@@ -131,16 +131,17 @@ object PlanAudit {
     doc ++= "VectorOps.kmeansFit, TextOps.bpeTrain). The same applies to the\n"
     doc ++= "eagerly-materialized frames: q27 (nearDupPairsBlocked scores the\n"
     doc ++= "block grid once and local-checkpoints only the qualifying pairs —\n"
-    doc ++= "the audited frame reads that checkpoint), q62 (signLshNearDup\n"
-    doc ++= "local-checkpoints its prepared corpus, so the audited frame starts\n"
-    doc ++= "at that checkpoint, not at the scan) and q157 (the optimizer-rule\n"
+    doc ++= "the audited frame reads that checkpoint) and q157 (the optimizer-rule\n"
     doc ++= "query must EXECUTE inside its flag scope and returns a local\n"
     doc ++= "relation; the rewritten aggregate's shape is asserted by\n"
     doc ++= "ApproxDistinctSpec instead). The shingle-set rows q24, q25, q165,\n"
     doc ++= "q185, q200 and q203 also start at a checkpoint, with no parquet\n"
     doc ++= "scan: jaccardPairs, containmentPairs and minhashLshPairs keep each\n"
     doc ++= "document's shingle set in a local checkpoint (docShingles), which\n"
-    doc ++= "the audited plan reads instead of the documents table.\n\n"
+    doc ++= "the audited plan reads instead of the documents table. The IVF\n"
+    doc ++= "rows q29, q124, q142, q191 and q204 collect their per-label\n"
+    doc ++= "centroids to the driver (ivfCentroids) before the frame is built,\n"
+    doc ++= "so the centroid aggregation and its scan are not in their rows.\n\n"
     doc ++= "| query | scans | cols/scan | pushed | exchanges | codegen | nlj |\n"
     doc ++= "|---|---|---|---|---|---|---|\n"
     rows.foreach(r => doc ++= r + "\n")

@@ -183,9 +183,11 @@ object Dedup {
       out
     }
 
-  /** (id, shs: sorted Array[Long]) with token-less docs dropped; a lazy
-    * local checkpoint — candidate generation and exact verify both reuse
-    * it, and the first action over either materializes it.
+  /** (id, shs: sorted Array[Long]) with token-less docs dropped; a local
+    * checkpoint that candidate generation and exact verify both read. Its
+    * rows are computed by the first action over either, but not all of
+    * its work waits: when `widen` repartitions an under-split source,
+    * AQE runs that shuffle-map stage at this call (one job at sf0.01).
     */
   private def docShingles(docs: DataFrame, idCol: String, textCol: String,
                           n: Int): DataFrame =
@@ -874,13 +876,17 @@ object Dedup {
     * or under-count (q27's lesson). More than `maxBlocks` blocks fails
     * with `tooBig(n, nBlocks)`.
     *
-    * `rows` is a lazy local checkpoint that the count materializes for
-    * the packing, and the packed blocks are one that both join sides
-    * read. The (result-sized) output is materialized EAGERLY as a local
-    * checkpoint. Nothing enters the session CacheManager, whose entries
-    * live until they are released explicitly: checkpoint blocks are
-    * dropped by the ContextCleaner as soon as their frames are
-    * unreachable, on the `tooBig` throw too.
+    * `rows` is a local checkpoint that the count materializes for the
+    * packing, and the packed blocks are one that both join sides read.
+    * A checkpoint over a plan with an exchange is not lazy under AQE:
+    * building its RDD runs every shuffle-map stage at the call, so the
+    * packing aggregation's map side runs there (one job), while an
+    * exchange-free `rows` runs none until the count. The (result-sized)
+    * output is materialized EAGERLY as a local checkpoint. Nothing
+    * enters the session CacheManager, whose entries live until they are
+    * released explicitly: checkpoint blocks are dropped by the
+    * ContextCleaner as soon as their frames are unreachable, on the
+    * `tooBig` throw too.
     */
   private[graft] def blockedPairScan[B: TypeTag, P <: Product : TypeTag](
       rows: DataFrame, blockRows: Int, maxBlocks: Int,

@@ -12,13 +12,19 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Bounded top-k as a custom `Aggregator` (SURVEY §2.12's one justified
   * custom aggregate).
   *
-  * The window form (`row_number().over(partitionBy(group).orderBy(score
-  * desc, id asc))`) must shuffle EVERY scored row to the group's reducer
-  * and sort there — at a billion corpus vectors that is the whole scored
-  * cross product on the wire. This aggregate keeps at most k entries per
-  * (partition, group) (map-side partial aggregation), so only
-  * |groups| × k rows shuffle. Ordering (score desc, then id asc) matches
-  * the window form exactly, ties included, so results are identical.
+  * This aggregate keeps at most k entries per (partition, group)
+  * (map-side partial aggregation), so only |groups| × k rows shuffle.
+  * Spark 4.1 limits the window form (`row_number().over(partitionBy(
+  * group).orderBy(score desc, id asc)) <= k`) map-side too, for k up to
+  * `spark.sql.optimizer.windowGroupLimitThreshold` (1000), through
+  * `WindowGroupLimit`: its shuffle is bounded the same way. What the
+  * window form still pays is a full per-partition SORT of every scored
+  * row, where this aggregate pays a bounded insert per row — measured
+  * ~30 % faster at 0.4–2 M scored rows with k ≤ 10 (746 vs 1,039 ms,
+  * 3,673 vs 5,358 ms), on par at 20 k rows, and 9 % slower at k = 50
+  * over 0.4 M rows (1,318 vs 1,210 ms). Ordering
+  * (score desc, then id asc) matches the window form exactly, ties
+  * included, so results are identical.
   */
 object TopKAggregator {
 

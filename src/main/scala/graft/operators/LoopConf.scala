@@ -33,15 +33,17 @@ import org.apache.spark.sql.graftshim.PlanShim
   */
 object LoopConf {
 
-  /** Runs one sized loop. `input` is materialized once as a lazy local
+  /** Runs one sized loop. `input` is materialized once as a local
     * checkpoint whose row count — the loop's only sizing action — sizes
-    * the partitions: ceil(rows / `rowsPerPartition`), clamped to
-    * [1, 65536], where `rowsPerPartition` is chosen per call site from
-    * the row WIDTH so partitions land in the tens-of-MB range (guide
-    * §2.2) — e.g. 2M for 16-byte edge pairs, 250k for symbol-array vocab
-    * rows. `body`
-    * gets the checkpointed input rebound into the sized child session,
-    * and its row count. Every frame `body` derives plans at the sized
+    * the partitions (an `input` holding an exchange is not lazy under
+    * AQE: its shuffle-map stages run at the checkpoint call, one job for
+    * a `distinct`, before the count computes the rows):
+    * ceil(rows / `rowsPerPartition`), clamped to [1, 65536], where
+    * `rowsPerPartition` is chosen per call site from the row WIDTH so
+    * partitions land in the tens-of-MB range (guide §2.2) — e.g. 2M for
+    * 16-byte edge pairs, 250k for symbol-array vocab rows. `body` gets
+    * the checkpointed input rebound into the sized child session, and
+    * its row count. Every frame `body` derives plans at the sized
     * conf, but its result is rebound to the caller's session, where what
     * the caller derives plans at the caller's conf again: `body` must
     * return a frame that is already materialized (checkpoint-backed or

@@ -209,9 +209,9 @@ object ScaleOps {
     * tasks, O(N·B) data movement, tight primitive scoring loops —
     * 75 s → ~3 s at the 10x rehearsal for identical output. Approximate
     * scale paths for real thresholds remain `q62_lsh_neardup`
-    * (VectorOps.signLshNearDup) and `nearDupPairsBucketed` (cluster
-    * structure); `nearDupPairs` stays as the small-n reference and the
-    * spec's equality baseline.
+    * (VectorOps.signLshNearDup) and `nearDupPairsBucketedDriven`
+    * (cluster structure); VectorOpsSpec's crossJoin reference is the
+    * equality baseline.
     */
   def q27EmbedNeardup(spark: SparkSession, dir: String): DataFrame =
     VectorOps.nearDupPairsBlocked(Tables.embeddings(spark, dir), "vec_id", "embedding", 0.45)
@@ -1131,12 +1131,14 @@ object ScaleOps {
     * exact scan, as one table (integer basis points, floor division).
     * This is the table that justifies shipping an index: a method with
     * no measured recall line is a rumor. The four chains union under a
-    * method label and left-join the exact truth set ONCE — the whole
-    * audit is a single lazy plan (no per-method serial driver actions);
-    * every heavy computation is the methods themselves, each already
-    * scale-shaped and oracle-checked. A literal method grid re-joins
-    * the aggregate so a method that returned zero pairs still reports
-    * an (honest, all-zero) row instead of vanishing.
+    * method label and left-join the exact truth set ONCE — the audit is
+    * one plan whose only driver action before it runs is the IVF
+    * method's bounded k×dim centroid collect (`knnIvf` runs it when
+    * q29 builds its frame); every heavy computation is the
+    * methods themselves, each already scale-shaped and oracle-checked.
+    * A literal method grid re-joins the aggregate so a method that
+    * returned zero pairs still reports an (honest, all-zero) row
+    * instead of vanishing.
     */
   def q142AnnTradeoff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

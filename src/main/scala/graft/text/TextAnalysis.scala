@@ -129,22 +129,4 @@ object TextAnalysis {
     */
   def fingerprint(c: Column): Column =
     md5(trim(regexp_replace(lower(c), "\\s+", " ")).cast("binary"))
-
-  /** 64-bit rolling polynomial fingerprint (Karp–Rabin over the normalized
-    * text, base 31, natural Long overflow). Cheaper than md5 at scale and
-    * order-sensitive; not SQL-portable, so verified by ScalaTest instead of
-    * the DuckDB oracle.
-    */
-  val rollingHash: String => Long = { s =>
-    if (s == null) 0L
-    else {
-      val t = s.toLowerCase.replaceAll("\\s+", " ").trim
-      var h = 1125899906842597L
-      var i = 0
-      while (i < t.length) { h = 31 * h + t.charAt(i); i += 1 }
-      h
-    }
-  }
-
-  def rollingHashUdf = udf(rollingHash)
 }

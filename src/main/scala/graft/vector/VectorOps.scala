@@ -2,10 +2,10 @@ package graft.vector
 
 import graft.functions.{DotProduct, VecKernels}
 import graft.functions.TopKAggregator.ranked
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.PlanShim
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Vector similarity operators (SURVEY §2.6/§2.10): cosine scoring, exact
   * brute-force top-k, IVF-style cluster-pruned ANN, recall@k, threshold
@@ -86,26 +86,6 @@ object VectorOps {
       .orderBy("group_a", "group_b")
   }
 
-  /** All-pairs scores above a rounded threshold (embedding near-dup).
-    * O(n²) by construction — correct as a small-n reference and as the
-    * verify step after bucketing; at corpus scale use
-    * `nearDupPairsBucketed` so only same-cluster pairs are ever scored.
-    */
-  def nearDupPairs(vecs: DataFrame, idCol: String, vecCol: String,
-                   threshold: Double): DataFrame = {
-    val wide = graft.Tables.widen(vecs.select(col(idCol), col(vecCol)))
-    val a = wide.select(col(idCol).as("id_a"), col(vecCol).as("va"))
-      .withColumn("na", l2Norm(col("va")))
-    val b = wide.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
-      .withColumn("nb", l2Norm(col("vb")))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", cosinePre(col("va"), col("vb"), col("na"), col("nb")))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-      .orderBy("id_a", "id_b")
-  }
-
   /** Exact all-pairs near-dup ≥ threshold via BLOCKED pair enumeration —
     * the right distribution shape for intrinsically quadratic work.
     *
@@ -141,7 +121,7 @@ object VectorOps {
     * EFFICIENT, not sublinear — at 10⁶ vectors it is ~10¹² dots
     * (feasible as ~60k block-pair tasks); beyond that no exact method
     * is feasible and the approximate paths (signLshNearDup,
-    * nearDupPairsBucketed, SemDeDup) are the answer. The block grid is
+    * nearDupPairsBucketedDriven, SemDeDup) are the answer. The block grid is
     * capped accordingly (2048 blocks).
     */
   def nearDupPairsBlocked(vecs: DataFrame, idCol: String, vecCol: String,
@@ -167,7 +147,7 @@ object VectorOps {
       v, blockRows, maxBlocks = 2048,
       (n, nBlocks) => s"$n vectors → $nBlocks blocks → ${nBlocks.toLong * nBlocks / 2} " +
         "block pairs: an exact all-pairs scan at this scale is no longer the right " +
-        "primitive — use signLshNearDup / nearDupPairsBucketed",
+        "primitive — use signLshNearDup / nearDupPairsBucketedDriven",
       bc => Seq(transform(bc, s => s.getField("id")),
         transform(bc, s => s.getField("nv")),
         transform(bc, s => size(s.getField("vec"))),
@@ -205,93 +185,75 @@ object VectorOps {
     }.orderBy("id_a", "id_b")
   }
 
-  /** (cl, centroid): the element-wise mean vector per label — avg over
-    * the exploded (label, pos, value) cells, positions put back in order.
-    */
-  private def labelCentroids(vecs: DataFrame, label: Column, vecCol: String): DataFrame =
-    vecs.select(label.as("cl"), posexplode(col(vecCol)).as(Seq("pos", "v")))
-      .groupBy("cl", "pos").agg(avg("v").as("m"))
-      .groupBy("cl").agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cl"), transform(col("pm"), x => x.getField("m")).as("centroid"))
-
   /** IVF assignment: each vector joins its `nProbe` nearest cluster
-    * centroids (centroid = per-label mean, as in `knnIvf`). Returns
-    * (id, vec, nv, cl) with one row per (vector, probed cluster).
+    * centroids, the per-label means `ivfCentroids` collects (labels are
+    * integer cluster ids). Returns (id, vec, nv, cl:int) with one row per
+    * (vector, probed cluster).
     */
   def ivfAssign(vecs: DataFrame, idCol: String, vecCol: String,
                 labelCol: String, nProbe: Int): DataFrame =
-    probe(normed(vecs.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "nv"),
-      vecs, labelCol, vecCol, nProbe)
+    ivfAssignDriven(vecs, idCol, vecCol, ivfCentroids(vecs, idCol, vecCol, labelCol), nProbe)
 
-  /** The IVF probe of `ivfAssign` and `knnIvf`: each row of the normed
-    * `side` (key, vector, norm) joins the `nProbe` per-label mean
-    * centroids of `labeled` with the highest rounded cosine, ties to the
-    * lower cluster id. Returns the side's columns and `cl`, one row per
-    * (key, probed cluster). The k centroids are broadcast.
-    */
-  private def probe(side: DataFrame, labeled: DataFrame, labelCol: String,
-                    vecCol: String, nProbe: Int): DataFrame = {
-    val Array(key, vec, norm) = side.columns
-    val centroids = normed(labelCentroids(labeled, col(labelCol), vecCol), "centroid", "ncent")
-    val wProbe = Window.partitionBy(key).orderBy(col("cscore").desc, col("cl").asc)
-    side.crossJoin(broadcast(centroids))
-      .withColumn("cscore", cosinePre(col(vec), col("centroid"), col(norm), col("ncent")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= nProbe)
-      .select(key, vec, norm, "cl")
-  }
-
-  /** The per-label mean centroids `ivfAssign` derives, collected to the
-    * driver as a reusable model artifact: (cl, centroid). The values are
-    * the EXACT doubles the in-plan aggregation produces (same plan,
-    * collected) — summing float-sourced doubles is exact far past any
-    * realistic cluster size, so the means are order-independent and
-    * bit-stable. k×dim doubles: driver-trivial at the k≈√N regime.
+  /** The per-label mean centroids, collected to the driver as a reusable
+    * model artifact: (cl, centroid), ascending cl — the element-wise mean
+    * over the exploded (label, pos, value) cells, positions in order.
+    * Summing float-sourced doubles is exact far past any realistic
+    * cluster size, so the means are order-independent and bit-stable.
+    * One bounded k×dim collect: driver-trivial at the k≈√N regime.
     */
   def ivfCentroids(vecs: DataFrame, idCol: String, vecCol: String,
                    labelCol: String): Array[(Int, Array[Double])] =
-    labelCentroids(vecs, col(labelCol).cast("int"), vecCol)
+    vecs.select(col(labelCol).cast("int").as("cl"), posexplode(col(vecCol)).as(Seq("pos", "v")))
+      .groupBy("cl", "pos").agg(avg("v").as("m"))
+      .groupBy("cl").agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .collect()
-      .map(r => (r.getAs[Int]("cl"), r.getAs[Seq[Double]]("centroid").toArray))
+      .map(r => (r.getInt(0), r.getSeq[Row](1).map(_.getDouble(1)).toArray))
       .sortBy(_._1)
 
-  /** `ivfAssign` under ALREADY-TRAINED driver-held centroids: replaces
-    * the N×k crossJoin + per-id row_number window (the dominant warm
-    * cost of q69 once the kmeans fit was split out — 0.74 s of 1.15 s
-    * at sf0.1) with one tight-loop top-nProbe UDF and a posexplode.
-    * Selection semantics are IDENTICAL to the window form: per vector,
-    * the nProbe distinct clusters with highest 4-dp-ROUNDED cosine,
-    * ties broken by ascending cluster id; each score is
-    * `VecKernels.cosine4` over `VecKernels.dot`, with ncent = √(c·c)
-    * from `selfDots` (l2Norm's fold). IvfAssignDrivenSpec asserts
-    * row-for-row equality against the window form on live fixtures.
-    * Output schema matches ivfAssign: (id, vec, nv, cl:int).
+  /** `ivfAssign` under ALREADY-TRAINED driver-held centroids (q69's warm
+    * path, where the fit is memoized per table). Output schema
+    * (id, vec, nv, cl:int); see [[probe]] for the selection rule.
     */
   def ivfAssignDriven(vecs: DataFrame, idCol: String, vecCol: String,
-                      cent: Array[(Int, Array[Double])], nProbe: Int): DataFrame = {
-    val spark = vecs.sparkSession
-    val cls = cent.map(_._1)
+                      cent: Array[(Int, Array[Double])], nProbe: Int): DataFrame =
+    probe(normed(vecs.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "nv"),
+      cent, nProbe)
+
+  /** The one IVF probe, of `ivfAssign`, `ivfAssignDriven` and `knnIvf`:
+    * each row of the normed `side` (key, vector, norm) gets `cl`, one row
+    * per probed cluster — the `nProbe` centroids of `cent` with the
+    * highest 4-dp-ROUNDED cosine, ties to the lower cluster id. A
+    * tight-loop top-nProbe UDF over the broadcast centroid array and a
+    * posexplode: no N×k row expansion, no per-key window (the window form
+    * was 0.74 s of q69's 1.15 s warm wall at sf0.1). Each score is
+    * `VecKernels.cosine4` over `VecKernels.dot` in the vector's own
+    * element type (a double vector is never narrowed to float), with
+    * ncent = √(c·c) from `selfDots` — [[cosinePre]]'s arithmetic.
+    */
+  private def probe(side: DataFrame, cent: Array[(Int, Array[Double])],
+                    nProbe: Int): DataFrame = {
+    val Array(_, vec, norm) = side.columns
     val cs = cent.map(_._2)
-    val ncs = VecKernels.selfDots(cs).map(math.sqrt)
-    val bc = spark.sparkContext.broadcast((cls, cs, ncs))
-    val probes = udf { (vec: Array[Float], nv: Double) =>
+    val bc = side.sparkSession.sparkContext.broadcast(
+      (cent.map(_._1), cs, VecKernels.selfDots(cs).map(math.sqrt)))
+    val top = (nv: Double, dot: Array[Double] => Double) => {
       val (bCls, bCs, bNcs) = bc.value
-      val k = bCs.length
-      val scores = new Array[Double](k)
-      var j = 0
-      while (j < k) {
-        val c = bCs(j)
-        scores(j) = VecKernels.cosine4(
-          VecKernels.dot(vec, c, math.min(vec.length, c.length)), nv * bNcs(j))
-        j += 1
-      }
-      // top-nProbe by (score desc, cl asc) — cls arrive ascending, so a
-      // stable sort on -score alone preserves the cl tie-break
-      (0 until k).sortBy(i => -scores(i)).take(nProbe).map(bCls(_)).toArray
+      val scores = Array.tabulate(bCs.length)(j => VecKernels.cosine4(dot(bCs(j)), nv * bNcs(j)))
+      // cls arrive ascending, so a stable sort on -score alone keeps the
+      // cl tie-break
+      scores.indices.sortBy(j => -scores(j)).take(nProbe).map(bCls(_)).toArray
     }
-    normed(vecs.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "nv")
-      .withColumn("cl", explode(probes(col("vec").cast("array<float>"), col("nv"))))
-      .select(col("id"), col("vec"), col("nv"), col("cl"))
+    val probes = side.schema(vec).dataType match {
+      case ArrayType(FloatType, _) =>
+        udf((v: Array[Float], nv: Double) =>
+          top(nv, c => VecKernels.dot(v, c, math.min(v.length, c.length))))
+          .apply(col(vec), col(norm))
+      case _ =>
+        udf((v: Array[Double], nv: Double) =>
+          top(nv, c => VecKernels.dot(v, 0, c, 0, math.min(v.length, c.length))))
+          .apply(col(vec).cast("array<double>"), col(norm))
+    }
+    side.withColumn("cl", explode(probes))
   }
 
   /** Distributed k-means (Lloyd's) — the trainer behind the IVF index
@@ -584,36 +546,19 @@ object VectorOps {
   }
 
   /** Embedding near-dup pairs ≥ threshold with IVF-bucketed candidate
-    * generation: score only pairs sharing one of their `nProbe` nearest
-    * centroids, then verify with exact cosine — the crossJoin never
+    * generation under driver-held centroids (the `ivfCentroids`
+    * artifact): each vector probes its `nProbe` nearest centroids
+    * (`ivfAssignDriven`), only pairs sharing a probed cluster are scored,
+    * and each is verified with exact cosine — the crossJoin never
     * happens. Recall is structural, not guaranteed: a qualifying pair
     * whose members probe disjoint centroid sets is lost. Right when the
     * threshold sits inside genuine cluster structure; see
-    * `signLshNearDup` for the cluster-free alternative.
-    */
-  def nearDupPairsBucketed(vecs: DataFrame, idCol: String, vecCol: String,
-                           labelCol: String, threshold: Double,
-                           nProbe: Int = 2): DataFrame = {
-    val assigned = ivfAssign(vecs, idCol, vecCol, labelCol, nProbe)
-    bucketedVerify(assigned, threshold)
-  }
-
-  /** `nearDupPairsBucketed` under already-trained driver-held centroids
-    * (`ivfCentroids` artifact): no label column, no kmeans re-assignment,
-    * no N×k window — probe via `ivfAssignDriven`, then the identical
-    * same-cluster verify. This is q69's warm path once its per-dir model
-    * cache is populated.
+    * `signLshNearDup` for the cluster-free alternative. q69's path.
     */
   def nearDupPairsBucketedDriven(vecs: DataFrame, idCol: String, vecCol: String,
                                  cent: Array[(Int, Array[Double])],
-                                 threshold: Double, nProbe: Int = 2): DataFrame =
-    bucketedVerify(ivfAssignDriven(vecs, idCol, vecCol, cent, nProbe), threshold)
-
-  /** Shared same-cluster exact-cosine verify over a probed assignment
-    * (id, vec, nv, cl): candidate pairs are rows sharing a probed
-    * cluster; distinct() collapses pairs sharing both probed clusters.
-    */
-  private def bucketedVerify(assigned: DataFrame, threshold: Double): DataFrame =
+                                 threshold: Double, nProbe: Int = 2): DataFrame = {
+    val assigned = ivfAssignDriven(vecs, idCol, vecCol, cent, nProbe)
     assigned.as("a").join(assigned.as("b"), "cl")
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -621,6 +566,13 @@ object VectorOps {
       .distinct() // a pair sharing both probed clusters appears twice
       .filter(col("cos") >= threshold)
       .orderBy("id_a", "id_b")
+  }
+
+  /** sign-LSH's one operating point: 160 bands of 32 sign bits, planes
+    * seeded from 7 (see `signLshNearDup` for the S-curve it buys). */
+  private final val LshBands = 160
+  private final val LshBandBits = 32
+  private final val LshSeed = 7L
 
   /** Fast-JL sign projections (Ailon–Chazelle 2006, structured-spinner
     * form): instead of nProj dense ±1 hyperplanes (O(nProj·dim) mults
@@ -637,13 +589,12 @@ object VectorOps {
     * 1−θ/π law; orthogonality only removes redundant bits), and the
     * dense input here (bag-of-tokens embeddings) is exactly the case
     * where one diagonal+Hadamard pass already mixes well — two passes
-    * are used for margin. Everything derives from the seed, so every
+    * are used for margin. Everything derives from `LshSeed`, so every
     * executor computes identical signatures; per-executor state is two
     * tiny diagonal arrays per block, never an nProj×dim matrix.
     */
-  private final class SignPlanes(nBands: Int, bandBits: Int, seed: Long)
-      extends Serializable {
-    private val nProj = nBands * bandBits
+  private final class SignPlanes extends Serializable {
+    private val nProj = LshBands * LshBandBits
     @transient @volatile private var diags: Array[Array[Float]] = _
     private def mix64(z0: Long): Long = graft.functions.SplitMix.mix64(z0)
     // in-place Walsh–Hadamard transform (unnormalized — signs are scale-
@@ -684,7 +635,7 @@ object VectorOps {
           var b = 0
           while (b < nBlocks * 2) {
             d(b) = Array.tabulate(block)(i =>
-              if ((mix64(seed * 0x9E3779B9L + b.toLong * 1000003L + i) & 1L) == 0L) 1f
+              if ((mix64(LshSeed * 0x9E3779B9L + b.toLong * 1000003L + i) & 1L) == 0L) 1f
               else -1f)
             b += 1
           }
@@ -700,7 +651,7 @@ object VectorOps {
       while (block < dim) block <<= 1
       val nBlocks = (nProj + block - 1) / block
       val dg = diagonals(block, nBlocks)
-      val sigs = new Array[Long](nBands)
+      val sigs = new Array[Long](LshBands)
       val buf = new Array[Float](block)
       var b = 0
       var proj = 0
@@ -717,7 +668,7 @@ object VectorOps {
         fht(buf)
         var j = 0
         while (j < block && proj < nProj) {
-          if (buf(j) > 0) sigs(proj / bandBits) |= (1L << (proj % bandBits))
+          if (buf(j) > 0) sigs(proj / LshBandBits) |= (1L << (proj % LshBandBits))
           proj += 1
           j += 1
         }
@@ -728,10 +679,10 @@ object VectorOps {
   }
 
   /** Embedding near-dup pairs ≥ threshold via random-hyperplane sign LSH
-    * + exact cosine verify. Each vector gets nBands band signatures of
-    * bandBits sign bits; pairs colliding on any band are verified
-    * exactly, so precision is 1.0 and recall is the LSH S-curve:
-    * P(per-band collision) = (1 − θ/π)^bandBits with θ = arccos(cos).
+    * + exact cosine verify. Each vector gets 160 band signatures of 32
+    * sign bits; pairs colliding on any band are verified exactly, so
+    * precision is 1.0 and recall is the LSH S-curve:
+    * P(per-band collision) = (1 − θ/π)^32 with θ = arccos(cos).
     * Wide bands make the curve STEEP, which is what lets the verify set
     * stay small when the corpus has heavy just-below-threshold mass: at
     * 32-bit bands, p(0.95) = 0.041 vs p(0.80) = 6.6e-4 — so 160 bands
@@ -747,36 +698,26 @@ object VectorOps {
     * ~300 bands for 99% recall while 60%+ of random pairs collide), which
     * is why `q27` keeps the exact scan and this operator is registered
     * against hash-embedded documents at τ = 0.95.
+    *
+    * Signatures hash the vector as floats (a hash only picks candidates);
+    * the verify scores every candidate in the input's own element type.
     */
-
   def signLshNearDup(vecs: DataFrame, idCol: String, vecCol: String,
-                     threshold: Double, nBands: Int = 160, bandBits: Int = 32,
-                     seed: Long = 7L,
-                     broadcastVerifyMaxRows: Long = 1L << 20): DataFrame = {
+                     threshold: Double): DataFrame = {
     require(threshold > 0, "sign-LSH near-dup needs a positive cosine threshold")
-    val sp = new SignPlanes(nBands, bandBits, seed)
+    val sp = new SignPlanes
     val sigUdf = udf((v: Seq[Float]) => sp.bandSigs(v))
     // zero-norm vectors score cosine 0.0 against everything, so at a
     // positive threshold dropping them up front is output-identical —
     // and they are the one class that shares IDENTICAL signatures in
     // every band (all sign bits 0), i.e. the guaranteed giant join
-    // bucket on a corpus with many empty documents
-    // the materialized table stays WIDENED double: a float-typed cache was
-    // tried (half the footprint) and measured ~2× SLOWER on the
-    // candidate stage at sf0.1 (2.2 s vs 0.8–1.0 s — the UDF input
-    // conversion from a FloatType array column goes through a slower
-    // path than the double→float Cast the widened form uses); negative
-    // result recorded, widened cache kept
-    val floatSourced = vecs.schema(vecCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, _) => true
-      case _ => false
-    }
+    // bucket on a corpus with many empty documents. `v` feeds the band
+    // self-join and both verify sides unmaterialized: an eager local
+    // checkpoint of it measured no faster on q62 (sf0.1, 4 cores, median
+    // of 5: 1,438 vs 1,437 ms) and cost one more job.
     val v = graft.Tables.widen(vecs.select(col(idCol).as("id"), col(vecCol).as("vec")))
       .withColumn("nv", l2Norm(col("vec")))
       .filter(col("nv") > 0)
-      .localCheckpoint(true) // not cache(): nothing left in the CacheManager
-    val n = v.count() // bounded-scalar job; picks the verify shape below
     // candidate generation stays a band-table SELF-JOIN by measurement:
     // the tempting one-shuffle alternative — groupBy (band, sig) +
     // collect_list + per-bucket pair expansion, q24's pattern — was
@@ -789,118 +730,39 @@ object VectorOps {
     // are designed to prevent. Round-9 re-shaping of the join itself
     // (measured at the 100× rehearsal, 500k docs, numbers per stage):
     //  - (band, sig) packs into ONE long key (band·2³² + sig — exact
-    //    while bandBits ≤ 32): single-long shuffle/compare, 29.9 → 21.6 s
+    //    for 32-bit sigs): single-long shuffle/compare, 29.9 → 21.6 s
     //    for the candidate stage;
     //  - a shuffle_hash hint was measured ~13% faster (18.4 → 16.1 s)
     //    but REVERTED: the SHJ build side cannot spill, and under the
-    //    memory pressure of a full catalog run (broadcast verify tables
-    //    + operator caches resident) it failed outright with "Can't
-    //    acquire ... bytes to build hash relation" — a sorted-merge
-    //    join that spills beats a hash join that dies. Negative result
-    //    recorded, per the bucket-aggregation precedent above.
-    val banded =
-      if (bandBits <= 32)
-        v.select(col("id"), posexplode(sigUdf(col("vec"))).as(Seq("band", "sig")))
-          .select(col("id"), (col("band").cast("long") * 4294967296L + col("sig")).as("key"))
-      else // sigs may use all 64 bits: fall back to the two-column key
-        v.select(col("id"), posexplode(sigUdf(col("vec"))).as(Seq("band", "sig")))
-          .select(col("id"), struct(col("band"), col("sig")).as("key"))
-    val rawCandidates = banded.as("a").join(banded.as("b"), "key")
+    //    memory pressure of a full catalog run it failed outright with
+    //    "Can't acquire ... bytes to build hash relation" — a
+    //    sorted-merge join that spills beats a hash join that dies.
+    val banded = v
+      .select(col("id"), posexplode(sigUdf(col("vec").cast("array<float>"))).as(Seq("band", "sig")))
+      .select(col("id"), (col("band").cast("long") * 4294967296L + col("sig")).as("key"))
+    // verify: two joins fetch both vectors for every RAW collision,
+    // and only the qualifying pairs are distinct-ed (a near-identical
+    // pair collides in many bands; cosine is deterministic per pair, so
+    // verify-then-distinct equals distinct-then-verify). Raw collisions
+    // carry little duplication (274,690 raw vs 239,144 distinct at
+    // sf0.1), and verifying them first keeps the cosines in the
+    // band-join stage's tasks: a candidate distinct first is only id
+    // pairs, which AQE coalesces into ONE partition, and every cosine
+    // then ran in one task (q62 at sf0.1, 4 cores: 1,906 vs 1,437 ms
+    // median of 5). The joins are SQL joins, so the planner broadcasts
+    // a small corpus and shuffles a large one; no driver collect.
+    val va = v.select(col("id").as("id_a"), col("vec").as("va"), col("nv").as("na"))
+    val vb = v.select(col("id").as("id_b"), col("vec").as("vb"), col("nv").as("nb"))
+    banded.as("a").join(banded.as("b"), "key")
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    // VERIFY SHAPE (round-9 rework of the round-8 "worst non-exact wall").
-    // Small-enough corpus (n ≤ broadcastVerifyMaxRows AND n·dim·4 ≤
-    // 80% of spark.driver.maxResultSize — the byte gate below keeps
-    // the collect under the driver result limit): collect the corpus ONCE into a
-    // compact driver/executor broadcast — flat per-id float vectors +
-    // norms behind a LongMap index, the bestAssign/ivfAssignDriven
-    // pattern — and verify every RAW collision row with a tight-loop
-    // UDF, deduplicating only the (tiny) qualifying output. No candidate
-    // distinct, no vector shuffle, ONE sub-GB broadcast (the first cut —
-    // two SQL broadcast-hash joins over the widened table — was ~2×1.5 GB
-    // of HashedRelation and fell over in an 8 GB JVM: "Can't acquire ...
-    // bytes"; the compact form is a quarter of that). The verify stage
-    // collapsed from ~27 s to ~2 s at the 100× rehearsal (raw collisions
-    // carry only a ~1.1× duplication factor: sub-threshold band mass
-    // collides ~once, and only the rare near-identical pairs collide in
-    // many bands). End-to-end at the rehearsal: 57 → ~20 s.
-    // Larger corpus (the billion-vector regime where no executor holds
-    // the vectors): distinct the candidate pairs FIRST, then the classic
-    // two-sided shuffle-join verify — each shape is the measured winner
-    // in its regime, and the output sets are identical (the UDF math is
-    // cosinePre's through VecKernels.cosine4, and cosine is
-    // deterministic per pair, so verify-then-distinct ≡
-    // distinct-then-verify; SignLshShapeSpec pins the equality).
-    // The broadcast stores FLOATS (collected through a cast that is the
-    // exact inverse of the widen — identity for float-sourced vectors,
-    // and the collect stays under driver result limits where doubles
-    // would not), so the path is gated on the INPUT column being
-    // float-typed: a hypothetical double-native corpus carries
-    // information a float can't, and silently flattening it would make
-    // the two verify shapes disagree within float precision — that
-    // corpus takes the fallback, which verifies in full double.
-    // Three more gates (round-9 judge findings):
-    //  - the compact index is Long-keyed (LongMap, Long UDF params), so
-    //    a non-long id column takes the fallback instead of a
-    //    corpus-size-dependent ClassCastException;
-    //  - the collect() is sized in BYTES, not rows: n·dim·4 must stay
-    //    under the session's spark.driver.maxResultSize with margin
-    //    (the 1M-row row gate alone admits ~1.5 GB at 384-d, which
-    //    fails outright on default configs between ~700k and 1M rows).
-    //    80% of the configured limit: the 100× rehearsal's 500k×384-d
-    //    corpus (768 MB of floats) collects fine under the 1 GiB
-    //    default and must STAY on the fast path (24.8 vs ~60 s
-    //    measured), while the 700k+ class falls back.
-    val idIsLong = vecs.schema(idCol).dataType ==
-      org.apache.spark.sql.types.LongType
-    val dim: Long =
-      if (n == 0) 0L
-      else v.select(size(col("vec"))).head().getInt(0).toLong
-    val broadcastVerifyMaxBytes = {
-      val limit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        vecs.sparkSession.sparkContext.getConf.get("spark.driver.maxResultSize", "1g"))
-      if (limit <= 0) Long.MaxValue else limit * 4 / 5
-    }
-    val verified =
-      if (floatSourced && idIsLong && n <= broadcastVerifyMaxRows &&
-          n * dim * 4 <= broadcastVerifyMaxBytes) {
-        val rows = v
-          .select(col("id"), col("vec").cast("array<float>").as("vec"), col("nv"))
-          .collect()
-        val idx = new scala.collection.mutable.LongMap[Int](rows.length * 2)
-        val flats = new Array[Array[Float]](rows.length)
-        val norms = new Array[Double](rows.length)
-        var i = 0
-        while (i < rows.length) {
-          idx.update(rows(i).getLong(0), i)
-          flats(i) = rows(i).getAs[Seq[Float]]("vec").toArray
-          norms(i) = rows(i).getDouble(2)
-          i += 1
-        }
-        val bc = v.sparkSession.sparkContext.broadcast((idx, flats, norms))
-        val cosUdf = udf { (ia: Long, ib: Long) =>
-          val (bIdx, bFlats, bNorms) = bc.value
-          val i = bIdx(ia); val j = bIdx(ib)
-          val a = bFlats(i); val b = bFlats(j)
-          VecKernels.cosine4(VecKernels.dot(a, 0, b, 0, math.min(a.length, b.length)),
-            bNorms(i) * bNorms(j))
-        }
-        rawCandidates
-          .withColumn("cos", cosUdf(col("id_a"), col("id_b")))
-          .filter(col("cos") >= threshold)
-          .select("id_a", "id_b", "cos")
-          .distinct()
-      } else {
-        val va = v.select(col("id").as("id_a"), col("vec").as("va"), col("nv").as("na"))
-        val vb = v.select(col("id").as("id_b"), col("vec").as("vb"), col("nv").as("nb"))
-        rawCandidates.distinct()
-          .join(va, "id_a")
-          .join(vb, "id_b")
-          .withColumn("cos", cosinePre(col("va"), col("vb"), col("na"), col("nb")))
-          .filter(col("cos") >= threshold)
-          .select("id_a", "id_b", "cos")
-      }
-    verified.orderBy("id_a", "id_b")
+      .join(va, "id_a")
+      .join(vb, "id_b")
+      .withColumn("cos", cosinePre(col("va"), col("vb"), col("na"), col("nb")))
+      .filter(col("cos") >= threshold)
+      .select("id_a", "id_b", "cos")
+      .distinct()
+      .orderBy("id_a", "id_b")
   }
 
   /** One side of an exact cosine score: `side` plus the L2 norm of its
@@ -942,15 +804,16 @@ object VectorOps {
     ranked(exactScores(querySide(queries, qId, vecCol), corpusSide(corpus, cId, vecCol)),
       Seq("query_id"), "score", "neighbor_id", k)
 
-  /** IVF-style ANN: centroids = per-cluster mean vector; each query probes
-    * the `nProbe` nearest centroids and scores only those clusters'
-    * members. The labeled fixture supplies the clustering; in production
-    * the labels come from k-means (MLlib) at index-build time.
+  /** IVF-style ANN: centroids = per-cluster mean vector (`ivfCentroids`,
+    * collected at call time); each query probes the `nProbe` nearest
+    * centroids through `ivfAssign`'s probe and scores only those
+    * clusters' members. The labeled fixture supplies the clustering; in
+    * production the labels come from `kmeansAssign` at index-build time.
     */
   def knnIvf(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
              vecCol: String, labelCol: String, k: Int, nProbe: Int = 2): DataFrame = {
     val probed = probe(normed(querySide(queries, qId, vecCol), "qv", "nq"),
-      corpus, labelCol, vecCol, nProbe)
+      ivfCentroids(corpus, cId, vecCol, labelCol), nProbe)
     val c = normed(corpusSide(corpus, cId, vecCol, col(labelCol).as("cl")), "cv", "nc")
     // the probed-members pool is nProbe·N/k rows per query — bounded
     // relative to the corpus but still too big for one reducer at 10⁹

@@ -9,8 +9,8 @@ package graft
   * the catalog that exercises executor-wide MUTABLE state (the class of
   * bug the harness exists to catch):
   *
-  *  - q62: SignPlanes' lazily built per-JVM plane cache + the compact
-  *    corpus broadcast verify;
+  *  - q62: SignPlanes' lazily built plane cache + the two-sided join
+  *    verify;
   *  - q69: the per-dir kmeans model cache (computeIfAbsent racing);
   *  - q26/q158: per-thread Deflater/packed-signature state;
   *  - q163/q166: BoundedCollect aggregation buffers;

@@ -23,20 +23,4 @@ class TextAnalysisSpec extends SparkSpec {
       .select(TextAnalysis.compressionRatio(col("t"))).as[Double].head()
     assert(again == rows("rep"))
   }
-
-  test("rolling hash: whitespace/case-normalized, order-sensitive, distributed == local") {
-    // normalization: runs of whitespace and case differences hash equal
-    assert(TextAnalysis.rollingHash("Alpha  Beta\tGamma") ==
-      TextAnalysis.rollingHash("alpha beta gamma"))
-    // order-sensitive (unlike the bag-of-words canonical fingerprint)
-    assert(TextAnalysis.rollingHash("alpha beta") !=
-      TextAnalysis.rollingHash("beta alpha"))
-    assert(TextAnalysis.rollingHash(null) == 0L)
-    // the UDF applied on executors agrees with the local function
-    val texts = Seq("one two three", "  One   TWO three ", "three two one")
-    val viaSpark = texts.toDF("t")
-      .select(TextAnalysis.rollingHashUdf(col("t"))).as[Long].collect().toSeq
-    assert(viaSpark == texts.map(TextAnalysis.rollingHash))
-    assert(viaSpark.head == viaSpark(1) && viaSpark.head != viaSpark(2))
-  }
 }

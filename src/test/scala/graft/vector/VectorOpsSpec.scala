@@ -103,10 +103,25 @@ class VectorOpsSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sfDir)
     val emb = graft.embed.Embedder.withEmbedding(
       docs.select(col("doc_id"), col("text")), "text", "vec").cache()
-    val exact = VectorOps.nearDupPairs(emb, "doc_id", "vec", 0.95).collect().toSeq
+    val exact = VectorReference.nearDupPairs(emb, "doc_id", "vec", 0.95).collect().toSeq
     val lsh = VectorOps.signLshNearDup(emb, "doc_id", "vec", 0.95).collect().toSeq
     assert(exact.nonEmpty)
     assert(lsh == exact, "sign-LSH + exact verify must reproduce the brute-force pairs")
+    // τ = 0.80: a far denser candidate set, where LSH recall is no longer
+    // near-certain; every emitted pair must still be exact, and emitted once
+    val exact80 = VectorReference.nearDupPairs(emb, "doc_id", "vec", 0.80).collect().toSet
+    val lsh80 = VectorOps.signLshNearDup(emb, "doc_id", "vec", 0.80).collect().toSeq
+    assert(lsh80.size > lsh.size, s"suspiciously small pair set at τ=0.80: ${lsh80.size}")
+    assert(lsh80.map(r => (r.getLong(0), r.getLong(1))).distinct.size == lsh80.size,
+      "a pair was emitted twice at τ=0.80")
+    assert(lsh80.toSet.subsetOf(exact80), s"non-exact pairs: ${(lsh80.toSet -- exact80).take(5)}")
+    // an INT id column and a double-native vector column
+    val narrowId = emb.select(col("doc_id").cast("int").as("doc_id"),
+      col("vec").cast("array<double>").as("vec"))
+    val exactInt = VectorReference.nearDupPairs(narrowId, "doc_id", "vec", 0.95).collect().toSeq
+    assert(exactInt.size == exact.size)
+    assert(VectorOps.signLshNearDup(narrowId, "doc_id", "vec", 0.95).collect().toSeq == exactInt,
+      "sign-LSH over an INT id and double vectors must reproduce the brute-force pairs")
   }
 
   test("sign-LSH near-dup leaves no CacheManager entry behind") {
@@ -136,9 +151,9 @@ class VectorOpsSpec extends SparkSpec {
       val v = base.clone(); v(2 + (i % 2)) += (i % 5) * 0.1f
       (i.toLong, v, i % 2)
     }.toDF("id", "vec", "label")
-    val exact = VectorOps.nearDupPairs(vecs, "id", "vec", 0.9).collect().toSeq
-    val bucketed = VectorOps.nearDupPairsBucketed(vecs, "id", "vec", "label", 0.9)
-      .collect().toSeq
+    val exact = VectorReference.nearDupPairs(vecs, "id", "vec", 0.9).collect().toSeq
+    val bucketed = VectorOps.nearDupPairsBucketedDriven(vecs, "id", "vec",
+      VectorOps.ivfCentroids(vecs, "id", "vec", "label"), 0.9).collect().toSeq
     assert(exact.nonEmpty)
     assert(bucketed == exact)
     // and the candidate set is genuinely pruned: only same-cluster pairs met
@@ -151,7 +166,7 @@ class VectorOpsSpec extends SparkSpec {
   test("blocked near-dup equals the exact all-pairs scan with no cartesian plan") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     for (t <- Seq(0.45, 0.8)) {
-      val exact = VectorOps.nearDupPairs(emb, "vec_id", "embedding", t).collect().toSeq
+      val exact = VectorReference.nearDupPairs(emb, "vec_id", "embedding", t).collect().toSeq
       // blockRows smaller than the fixture so same-block AND cross-block
       // pair paths are both exercised
       val blocked = VectorOps.nearDupPairsBlocked(emb, "vec_id", "embedding", t, blockRows = 7)
